@@ -19,6 +19,9 @@ python scripts/window_rotate.py --check-if-fresh
 echo "== gate: pytest =="
 python -m pytest tests/ -q
 
+echo "== gate: dml_mix smoke (engine write path end to end, checked against its Python model) =="
+python -m pytest perfbench/test_smoke.py -q -k dml_mix
+
 echo "== gate: window audit (partition-less WindowExec over non-whitelisted sources) =="
 python scripts/explain_audit.py --windows /root/testdata/sf0.001 2>/dev/null | tail -2
 

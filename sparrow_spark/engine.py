@@ -31,6 +31,7 @@ Design decisions vs the reference:
 
 from __future__ import annotations
 
+import functools
 import itertools
 import json
 import os
@@ -40,7 +41,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparrow_spark.catalog import (
@@ -70,6 +71,12 @@ class SparrowError(Exception):
     def __init__(self, code: int, message: str):
         super().__init__(message)
         self.code = code
+
+
+def _duplicate_entry(index_name: str, cols: list[str], row) -> SparrowError:
+    """MySQL's duplicate-key error for `row`'s value of key `cols`."""
+    key = "-".join(str(row[c]) for c in cols)
+    return SparrowError(1062, f"Duplicate entry '{key}' for key '{index_name}'")
 
 
 @dataclass
@@ -965,9 +972,9 @@ class Engine:
 
     def _insert_rows_any(self, insert_part: str):
         """Rows for INSERT INTO t [cols] (VALUES … | SELECT …):
-        returns (schema, table, tdef, new_rows, from_values). Both
-        INSERT IGNORE and ON DUPLICATE KEY UPDATE accept either source
-        (MySQL does too); plain INSERT dispatches separately."""
+        returns (schema, table, tdef, new_rows, from_values). INSERT,
+        INSERT IGNORE and ON DUPLICATE KEY UPDATE all accept either
+        source (MySQL does too)."""
         m = re.match(
             r"INSERT\s+INTO\s+([\w`.]+)\s*(\(([^)]*)\))?\s*VALUES\s*(.+)$",
             insert_part,
@@ -989,27 +996,10 @@ class Engine:
             return schema, table, tdef, new_rows, False
         raise SparrowError(1064, f"syntax error in INSERT: {insert_part[:80]}")
 
-    def _insert_select(self, m: "re.Match[str]") -> Result:
-        """INSERT INTO t [cols] SELECT … — superset of the reference's
-        VALUES-only surface, same unique-key enforcement and rowid
-        assignment as the VALUES path."""
-        name_raw, _, collist, query_sql = m.groups()
-        schema, table, tdef, new_rows = self._rows_from_select(
-            name_raw, collist, query_sql
-        )
-        self._check_unique(tdef, new_rows)
-        with_rowid = new_rows.select(F.expr("uuid()").alias(ROWID), "*")
-        n_rows = with_rowid.count()
-        self._partitioned_writer(tdef, with_rowid, "append").parquet(
-            self.catalog.data_path(schema, table)
-        )
-        self._sync_partitions(schema, table, tdef)
-        return Result("ok", affected_rows=n_rows)
-
     def _replace(self, stmt: str) -> Result:
         """REPLACE INTO (MySQL upsert): delete stored rows that collide
-        with the new rows on the primary or any unique key, then insert.
-        Copy-on-write rewrite like UPDATE/DELETE (§3.3)."""
+        with the new rows on the primary or any unique key, then insert
+        every new row. A front-end of the upsert core (_upsert)."""
         m = re.match(
             r"REPLACE\s+INTO\s+([\w`.]+)\s*(\(([^)]*)\))?\s*VALUES\s*(.+)$",
             stmt,
@@ -1026,18 +1016,16 @@ class Engine:
         # Intra-batch duplicates still error (matches INSERT semantics;
         # MySQL would keep the last row — stricter is safer here).
         for index_name, cols in key_sets:
-            dup = (
-                new_rows.groupBy(*cols).count().filter(F.col("count") > 1).limit(1).collect()
+            self._check_batch_key(new_rows, index_name, cols)
+
+        def rewrite(stored: DataFrame) -> DataFrame:
+            for _, cols in key_sets:
+                stored = stored.join(new_rows.select(*cols), on=cols, how="left_anti")
+            return stored.unionByName(
+                new_rows.select(F.expr("uuid()").alias(ROWID), "*")
             )
-            if dup:
-                key = "-".join(str(dup[0][c]) for c in cols)
-                raise SparrowError(1062, f"Duplicate entry '{key}' for key '{index_name}'")
-        existing = self._read_physical(schema, table, tdef)
-        keep = existing
-        for _, cols in key_sets:
-            keep = keep.join(new_rows.select(*cols), on=cols, how="left_anti")
-        with_rowid = new_rows.select(F.expr("uuid()").alias(ROWID), "*")
-        self._overwrite_data(schema, table, keep.unionByName(with_rowid))
+
+        self._upsert(schema, table, tdef, self._key_match(key_sets, new_rows), rewrite)
         return Result("ok", affected_rows=n_rows)
 
     def _insert_ignore(self, stmt: str) -> Result:
@@ -1045,47 +1033,29 @@ class Engine:
         error 1062 — against stored rows OR earlier rows of the same
         batch (MySQL keeps the FIRST) — are silently skipped instead;
         affected_rows counts only what actually landed. Set-at-a-time:
-        one window per key set drops intra-batch later duplicates, one
-        anti-join per key set drops stored collisions. NULLs never
-        conflict in a unique index (MySQL), so rows with any NULL in a
-        key set bypass that set's dedup window entirely (the plain-
-        equality anti-join already lets them through). Accepts a
-        SELECT source as well as VALUES; a SELECT has no defined row
-        order, so "first" among its in-batch duplicates is whichever
-        row the scan yields first (MySQL without ORDER BY is equally
-        unspecified)."""
-        schema, table, tdef, new_rows, from_values = self._insert_rows_any(
-            stmt
-        )
+        one occurrence rank per key set drops intra-batch later
+        duplicates (NULL-keyed rows never conflict and all rank first),
+        one anti-join per key set drops stored collisions (plain
+        equality lets NULL keys through). Accepts a SELECT source as
+        well as VALUES; a SELECT has no defined row order, so "first"
+        among its in-batch duplicates is whichever row the scan yields
+        first (MySQL without ORDER BY is equally unspecified)."""
+        schema, table, tdef, new_rows, _ = self._insert_rows_any(stmt)
         key_sets = tdef.key_sets()
         col_names = [c.name for c in tdef.columns]
         if key_sets:
-            # VALUES evaluates to a single-partition LocalRelation, so
-            # monotonically_increasing_id preserves tuple order — the
-            # "first row wins" MySQL contract needs that order. (For a
-            # SELECT source the id is per-partition monotonic: a
-            # deterministic keeper per key, arbitrary order.)
-            ordered = new_rows
-            if from_values:
-                ordered = ordered.coalesce(1)
-            ordered = ordered.withColumn(
-                "__ord", F.monotonically_increasing_id()
-            )
-            from pyspark.sql import Window as _W
-
+            # A VALUES batch is one partition in tuple order, so
+            # monotonically_increasing_id preserves that order — the
+            # "first row wins" MySQL contract needs it. (For a SELECT
+            # source the id is per-partition monotonic: a deterministic
+            # keeper per key, arbitrary order.)
+            ordered = new_rows.withColumn("__ord", F.monotonically_increasing_id())
             for _, cols in key_sets:
-                has_null = F.lit(False)
-                for c in cols:
-                    has_null = has_null | F.col(c).isNull()
-                null_keyed = ordered.filter(has_null)
-                keyed = ordered.filter(~has_null)
-                w = _W.partitionBy(*cols).orderBy("__ord")
-                keyed = (
-                    keyed.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
+                ordered = (
+                    self._occurrence_rank(ordered, cols)
+                    .filter(F.col("__rank") == 1)
+                    .drop("__rank")
                 )
-                ordered = keyed.unionByName(null_keyed)
             survivors = ordered.drop("__ord")
             existing = self._read_physical(schema, table, tdef)
             for _, cols in key_sets:
@@ -1093,27 +1063,21 @@ class Engine:
                     existing.select(*cols), on=cols, how="left_anti"
                 )
             new_rows = survivors.select(*col_names)
-        with_rowid = new_rows.select(F.expr("uuid()").alias(ROWID), "*")
-        n_rows = with_rowid.count()
-        if n_rows:
-            self._partitioned_writer(tdef, with_rowid, "append").parquet(
-                self.catalog.data_path(schema, table)
-            )
-            self._sync_partitions(schema, table, tdef)
+        n_rows = self._replace_files(
+            schema, table, [], new_rows.select(F.expr("uuid()").alias(ROWID), "*")
+        )
         return Result("ok", affected_rows=n_rows)
 
     def _truncate(self, stmt: str) -> Result:
         """TRUNCATE [TABLE] t — MySQL's fast table reset. Same physical
-        action as the unconditional DELETE (swap in an empty dir) but
-        with MySQL's contract: affected_rows reports 0, not the removed
-        row count."""
+        action as the unconditional DELETE (_truncate_data) but with
+        MySQL's contract: affected_rows reports 0, not the removed row
+        count."""
         m = re.match(r"TRUNCATE\s+(?:TABLE\s+)?([\w`.]+)\s*$", stmt, re.I)
         if not m:
             raise SparrowError(1064, f"syntax error in TRUNCATE: {stmt[:80]}")
         schema, table = self._resolve_table_name(m.group(1))
-        tdef = self.catalog.load(schema, table)
-        data = self._read_physical(schema, table, tdef)
-        self._overwrite_data(schema, table, data.limit(0))
+        self._truncate_data(schema, table, self.catalog.load(schema, table))
         return Result("ok", affected_rows=0)
 
     def _insert_odku(self, insert_part: str, assign_sql: str) -> Result:
@@ -1122,11 +1086,12 @@ class Engine:
         key apply the assignment list to the EXISTING row — `VALUES(c)`
         inside an assignment refers to the incoming row's value, bare
         column names to the stored row (MySQL semantics) — and
-        non-colliding rows insert normally. Copy-on-write set algebra,
-        no per-row loop: one anti-join splits insert-vs-update, one
-        inner join pairs stored rows with their incoming twin, the
-        assignments evaluate set-at-a-time. affected_rows follows the
-        MySQL convention: 1 per inserted row, 2 per updated row.
+        non-colliding rows insert normally. A front-end of the upsert
+        core (_upsert), no per-row loop: per key set one join pairs
+        stored rows with their incoming twin and the assignments
+        evaluate set-at-a-time; the incoming rows left unpaired insert.
+        affected_rows follows the MySQL convention: 1 per inserted row,
+        2 per updated row.
 
         MySQL-semantics notes (also in README "Dialect compatibility"):
         NULLs never conflict in a unique index, so NULL-keyed incoming
@@ -1137,12 +1102,17 @@ class Engine:
         the row matched by the FIRST key set in index order (MySQL
         updates one row per incoming row); the remaining collisions
         suppress the insert but apply no second update. Intra-batch
-        duplicate keys fold sequentially like MySQL for the
-        well-defined case (_insert_odku_sequential: VALUES batch,
-        single key set, key columns not reassigned); SELECT sources /
-        multi-index / key-mutating duplicates still error 1062
-        (documented deviation — MySQL's own fold order is undefined or
-        discouraged there).
+        duplicate keys fold sequentially like MySQL: the first
+        occurrence of a key inserts (or updates the stored row), each
+        later one applies the assignments to the ACCUMULATED row. The
+        fold runs in occurrence-rank passes — pass i carries every
+        key's i-th occurrence — so the pass count is the batch's max
+        key multiplicity, one without duplicates. It is defined for a
+        VALUES batch, a single key set and assignments that leave the
+        key columns alone; outside that case (SELECT sources /
+        multi-index / key-mutating duplicates) duplicates still error
+        1062 (documented deviation — MySQL's own fold order is
+        undefined or discouraged there).
 
         The reference only ERRORS on duplicates (error 1062,
         src/execute_impl/insert.rs:208); ODKU, REPLACE (_replace) and
@@ -1158,7 +1128,7 @@ class Engine:
                 "or UNIQUE constraint",
             )
         # Parse the assignment list; VALUES(c) -> the incoming row's c.
-        assigns: list[tuple[str, str]] = []
+        assigns: dict[str, str] = {}
         for part in split_top_level(assign_sql):
             am = re.match(r"\s*`?(\w+)`?\s*=\s*(.+)$", part, re.S)
             if not am:
@@ -1166,189 +1136,105 @@ class Engine:
             cname = check_ident(am.group(1))
             if not tdef.column(cname):
                 raise SparrowError(1054, f"Unknown column '{cname}' in 'field list'")
-            expr_sql = re.sub(
+            assigns[cname] = re.sub(
                 r"VALUES\s*\(\s*`?(\w+)`?\s*\)", r"`__new_\1`", am.group(2),
                 flags=re.I,
             )
-            assigns.append((cname, expr_sql))
-        # Intra-batch duplicate keys: MySQL applies the UPDATE clause
-        # sequentially (first occurrence inserts-or-updates, each later
-        # one updates the accumulated row). That is implemented below
-        # for the well-defined case — a literal VALUES batch, a single
-        # key set, and assignments that don't rewrite key columns — by
-        # occurrence-rank passes (pass count = max multiplicity, each
-        # pass set-at-a-time). Outside that case (SELECT sources, whose
-        # fold order MySQL itself leaves undefined; multiple unique
-        # indexes, which MySQL's own docs say to avoid with ODKU; or
-        # key-mutating assignments, which cascade) it stays error 1062
-        # — documented in README "Dialect compatibility". Rows with a
-        # NULL in the key never conflict and are exempt throughout.
-        has_dups = False
-        for index_name, cols in key_sets:
-            nn = new_rows
-            for c in cols:
-                nn = nn.filter(F.col(c).isNotNull())
-            dup = (
-                nn.groupBy(*cols)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .collect()
+        col_names = [c.name for c in tdef.columns]
+        key_cols = key_sets[0][1]
+        passes = 1
+        if from_values and len(key_sets) == 1 and not set(assigns) & set(key_cols):
+            # A VALUES batch is one partition in tuple order, so
+            # monotonically_increasing_id orders the occurrences.
+            ranked = self._occurrence_rank(
+                new_rows.withColumn("__ord", F.monotonically_increasing_id()),
+                key_cols,
             )
-            if dup:
-                has_dups = True
-                assigned = {c for c, _ in assigns}
-                if (
-                    not from_values
-                    or len(key_sets) > 1
-                    or assigned & set(cols)
-                ):
-                    key = "-".join(str(dup[0][c]) for c in cols)
-                    raise SparrowError(
-                        1062, f"Duplicate entry '{key}' for key '{index_name}'"
+            passes = ranked.agg(F.max("__rank")).first()[0]
+        else:
+            for index_name, cols in key_sets:
+                self._check_batch_key(new_rows, index_name, cols)
+        incoming_cols = [F.col(c).alias(f"__new_{c}") for c in col_names]
+        assigned = [
+            (
+                F.expr(assigns[c]).cast(tdef.column(c).spark_type)
+                if c in assigns
+                else F.col(c)
+            ).alias(c)
+            for c in col_names
+        ]
+        affected = Observation()
+
+        def fold(stored: DataFrame) -> DataFrame:
+            # __aff is each row's share of affected_rows: 1 for an
+            # insert, +2 per update applied to it.
+            state = stored.withColumn("__aff", F.lit(0))
+            for i in range(1, passes + 1):
+                batch = new_rows if passes == 1 else ranked.filter(F.col("__rank") == i)
+                incoming = batch.select(*incoming_cols, F.lit(True).alias("__hit"))
+                untouched, out = state, []
+                for _, cols in key_sets:
+                    # Plain equality, NOT eqNullSafe: NULL-keyed incoming
+                    # rows must never pair (NULLs don't conflict in
+                    # unique indexes). A key set's keys are unique on both
+                    # sides, so the left join pairs each stored row with
+                    # at most one incoming row.
+                    cond = [untouched[c] == incoming[f"__new_{c}"] for c in cols]
+                    joined = untouched.join(incoming, on=cond, how="left")
+                    pair = joined.filter(F.col("__hit").isNotNull())
+                    out.append(
+                        pair.select(
+                            ROWID, *assigned, (F.col("__aff") + 2).alias("__aff")
+                        )
                     )
-        if has_dups:
-            return self._insert_odku_sequential(
-                schema, table, tdef, new_rows, key_sets[0][1], assigns
-            )
+                    # The paired stored rows leave `untouched` and the
+                    # paired incoming rows are consumed, so a later key
+                    # set cannot pair either again (MySQL updates one row
+                    # per incoming row).
+                    untouched = joined.filter(F.col("__hit").isNull()).select(
+                        *state.columns
+                    )
+                    new_key = [f"__new_{c}" for c in cols]
+                    incoming = incoming.join(
+                        pair.select(*new_key), on=new_key, how="left_anti"
+                    )
+                # An unpaired incoming row inserts, unless a later key set
+                # collides with a stored row an earlier key set paired.
+                for _, cols in key_sets[1:]:
+                    stored_key = [F.col(c).alias(f"__new_{c}") for c in cols]
+                    incoming = incoming.join(
+                        state.select(*stored_key),
+                        on=[f"__new_{c}" for c in cols],
+                        how="left_anti",
+                    )
+                out.append(
+                    incoming.select(
+                        F.expr("uuid()").alias(ROWID),
+                        *[F.col(f"__new_{c}").alias(c) for c in col_names],
+                        F.lit(1).alias("__aff"),
+                    )
+                )
+                state = functools.reduce(DataFrame.unionByName, out, untouched)
+                if i < passes:
+                    # The next pass's plan holds several copies of this
+                    # state: materialize it so the plan stays
+                    # constant-sized and the inserted ROWIDs stay fixed.
+                    state = state.localCheckpoint()
+            return state.observe(affected, F.sum("__aff").alias("n")).drop("__aff")
 
-        existing = self._read_physical(schema, table, tdef)
-        col_names = [c.name for c in tdef.columns]
-        incoming = new_rows.select(
-            *[F.col(c).alias(f"__new_{c}") for c in col_names]
-        )
-        untouched, updated = existing, None
-        to_insert = new_rows
-        for _, cols in key_sets:
-            # Plain equality, NOT eqNullSafe: NULL-keyed incoming rows
-            # must never pair (NULLs don't conflict in unique indexes)
-            # or the same stored ROWID lands in both `updated` and
-            # `untouched` while the incoming row also inserts.
-            cond = [
-                untouched[c] == incoming[f"__new_{c}"] for c in cols
-            ]
-            pair = untouched.join(incoming, on=cond, how="inner")
-            upd = pair.select(
-                ROWID,
-                *[
-                    F.expr(dict(assigns)[c]).cast(tdef.column(c).spark_type).alias(c)
-                    if c in dict(assigns)
-                    else F.col(c)
-                    for c in col_names
-                ],
-            )
-            updated = upd if updated is None else updated.unionByName(upd)
-            # Remove exactly the stored rows paired THIS pass (by
-            # ROWID), and consume the incoming rows that matched so a
-            # later key set cannot pair them with a second stored row
-            # (MySQL updates one row per incoming row).
-            untouched = untouched.join(
-                pair.select(ROWID), on=ROWID, how="left_anti"
-            )
-            matched_in = pair.select(*[f"__new_{c}" for c in cols])
-            incoming = incoming.join(
-                matched_in, on=[f"__new_{c}" for c in cols], how="left_anti"
-            )
-            to_insert = to_insert.join(
-                existing.select(*cols), on=cols, how="left_anti"
-            )
-        n_updated = updated.count()
-        inserted = to_insert.select(F.expr("uuid()").alias(ROWID), *col_names)
-        n_inserted = inserted.count()
-        self._overwrite_data(
-            schema, table, untouched.unionByName(updated).unionByName(inserted)
-        )
-        return Result("ok", affected_rows=n_inserted + 2 * n_updated)
-
-    def _insert_odku_sequential(
-        self,
-        schema: str,
-        table: str,
-        tdef,
-        new_rows: DataFrame,
-        key_cols: list[str],
-        assigns: list[tuple[str, str]],
-    ) -> Result:
-        """ODKU with intra-batch duplicate keys, MySQL's sequential
-        semantics: the first occurrence of a key inserts (or updates
-        the stored row), each later occurrence applies the assignment
-        list to the ACCUMULATED row. Folded in occurrence-rank passes:
-        pass i carries every key's i-th occurrence and runs as one
-        set-at-a-time pair-join + assignment against the state left by
-        pass i-1, so the loop count is the batch's max key
-        multiplicity, not its row count. The batch is a literal VALUES
-        list (the caller guarantees it), so collecting it for rank
-        assignment is statement-text-sized driver state; per-pass
-        localCheckpoint keeps the composed state's plan constant-sized.
-        affected_rows follows MySQL: 1 per insert + 2 per applied
-        update (a key hit K times counts 1 + 2*(K-1) when new, 2*K
-        when stored)."""
-        col_names = [c.name for c in tdef.columns]
-        rows = new_rows.collect()  # VALUES order (LocalRelation)
-        passes: list[list] = []
-        null_key_rows = []
-        seen: dict[tuple, int] = {}
-        for r in rows:
-            key = tuple(r[c] for c in key_cols)
-            if any(v is None for v in key):
-                null_key_rows.append(r)  # NULLs never conflict: plain insert
-                continue
-            occ = seen.get(key, 0)
-            seen[key] = occ + 1
-            while len(passes) <= occ:
-                passes.append([])
-            passes[occ].append(r)
-        state = self._read_physical(schema, table, tdef)
-        total_ins, total_upd = 0, 0
-        for batch_rows in passes:
-            batch = self.spark.createDataFrame(batch_rows, new_rows.schema)
-            incoming = batch.select(
-                *[F.col(c).alias(f"__new_{c}") for c in col_names]
-            )
-            cond = [state[c] == incoming[f"__new_{c}"] for c in key_cols]
-            pair = state.join(incoming, on=cond, how="inner")
-            upd = pair.select(
-                ROWID,
-                *[
-                    F.expr(dict(assigns)[c])
-                    .cast(tdef.column(c).spark_type)
-                    .alias(c)
-                    if c in dict(assigns)
-                    else F.col(c)
-                    for c in col_names
-                ],
-            )
-            unmatched = batch.join(
-                state.select(*key_cols), on=key_cols, how="left_anti"
-            )
-            ins = unmatched.select(F.expr("uuid()").alias(ROWID), *col_names)
-            n_upd, n_ins = upd.count(), ins.count()
-            total_upd += n_upd
-            total_ins += n_ins
-            state = (
-                state.join(pair.select(ROWID), on=ROWID, how="left_anti")
-                .unionByName(upd)
-                .unionByName(ins)
-                .localCheckpoint(eager=True)
-            )
-        if null_key_rows:
-            nk = self.spark.createDataFrame(null_key_rows, new_rows.schema)
-            state = state.unionByName(
-                nk.select(F.expr("uuid()").alias(ROWID), *col_names)
-            )
-            total_ins += len(null_key_rows)
-        self._overwrite_data(schema, table, state)
-        return Result("ok", affected_rows=total_ins + 2 * total_upd)
+        self._upsert(schema, table, tdef, self._key_match(key_sets, new_rows), fold)
+        return Result("ok", affected_rows=affected.get["n"] or 0)
 
     def _merge(self, stmt: str) -> Result:
         """MERGE INTO target USING src ON cond
         [WHEN MATCHED THEN UPDATE SET c = expr, ... | DELETE]
         [WHEN NOT MATCHED THEN INSERT (cols) VALUES (exprs) | INSERT *]
 
-        Copy-on-write set algebra (no per-row loop): matched target rows
-        are rewritten (or dropped), unmatched source rows appended. The
-        reference has no MERGE; this is the engine's upsert superset
-        beyond REPLACE."""
+        A front-end of the upsert core (_upsert), no per-row loop: the
+        ON condition semi-joins the target to find the files to rewrite,
+        matched target rows in them are rewritten (or dropped), and
+        unmatched source rows are appended. The reference has no MERGE;
+        this is the engine's upsert superset beyond REPLACE."""
         head_m = re.match(
             r"MERGE\s+INTO\s+([\w`.]+)(?:\s+AS\s+(\w+)|\s+(\w+))?\s+USING\s+",
             stmt,
@@ -1417,70 +1303,32 @@ class Engine:
             raise SparrowError(1064, "MERGE supports one WHEN MATCHED action")
         if not (upd_m or del_m or has_insert):
             raise SparrowError(1064, "MERGE needs at least one WHEN clause")
-
+        # The source is evaluated once: every join below reads the
+        # materialized rows.
         src = (
             self._query(src_sql[1:-1]).df
             if src_sql.startswith("(")
             else self._query(f"SELECT * FROM {src_sql}").df
-        ).alias(s_alias)
-        target = self._read_physical(schema, table, tdef).alias(t_alias)
+        ).localCheckpoint().alias(s_alias)
         cond = F.expr(substitute_variables(on_cond, self.system_vars, self.user_vars))
         tcols = [c.name for c in tdef.columns]
-
-        matched_t = target.join(src, cond, "left_semi")
-        unmatched_t = target.join(src, cond, "left_anti")
-        affected = 0
-
-        if del_m:
-            rewritten = unmatched_t
-            affected += matched_t.count()
-        elif upd_m:
-            assigns = {}
+        assigns = {}
+        if upd_m:
             for item in split_top_level(upd_m.group(1)):
                 col, expr = item.split("=", 1)
                 col = check_ident(col.strip().split(".")[-1])
                 if not tdef.column(col):
                     raise SparrowError(1054, f"Unknown column '{col}' in MERGE SET")
                 assigns[col] = expr.strip()
-            joined = target.join(src, cond, "inner")
-            updated = joined.select(
-                F.col(f"{t_alias}.{ROWID}").alias(ROWID),
-                *[
-                    (
-                        F.expr(assigns[c]).cast(tdef.column(c).spark_type)
-                        if c in assigns
-                        else F.col(f"{t_alias}.{c}")
-                    ).alias(c)
-                    for c in tcols
-                ],
-            )
-            # Cardinality check + affected count in ONE bounded job: a
-            # target row matched by several source rows would be written
-            # back as several copies (silent table growth) — standard
-            # MERGE engines raise instead.
-            stats = updated.groupBy(ROWID).agg(
-                F.count(F.lit(1)).alias("n")
-            ).agg(
-                F.count(F.lit(1)).alias("rows"), F.max("n").alias("max_n")
-            ).collect()[0]
-            if (stats.max_n or 0) > 1:
-                raise SparrowError(
-                    1062,
-                    "MERGE: a target row matched multiple source rows "
-                    "(non-deterministic UPDATE)",
-                )
-            affected += stats.rows
-            rewritten = unmatched_t.unionByName(updated)
-        else:
-            rewritten = target
+        inserted = Observation()
 
-        if has_insert:
+        def inserts(stored: DataFrame) -> DataFrame:
+            """Source rows that match no stored row, as new table rows."""
             if ins_spec is not None:
                 ins_cols = [check_ident(c) for c in split_top_level(ins_spec[0])]
                 ins_exprs = split_top_level(ins_spec[1])
             else:  # INSERT *
                 ins_cols, ins_exprs = tcols, [f"{s_alias}.{c}" for c in tcols]
-            new_src = src.join(target, cond, "left_anti")
             sel = []
             for c in tcols:
                 if c in ins_cols:
@@ -1490,13 +1338,62 @@ class Engine:
                     raise SparrowError(1364, f"Field '{c}' doesn't have a default value")
                 else:
                     sel.append(F.lit(None).cast(tdef.column(c).spark_type).alias(c))
-            inserted = new_src.select(*sel).select(
-                F.expr("uuid()").alias(ROWID), "*"
+            # Anti-join the source against only its matched target
+            # rows: both joins then build on a batch-sized side.
+            matched = stored.join(src, cond, "left_semi").alias(t_alias)
+            return (
+                src.join(matched, cond, "left_anti")
+                .select(F.expr("uuid()").alias(ROWID), *sel)
+                .observe(inserted, F.count(F.lit(1)).alias("n"))
             )
-            affected += inserted.count()
-            rewritten = rewritten.select(ROWID, *tcols).unionByName(inserted)
 
-        self._overwrite_data(schema, table, rewritten.select(ROWID, *tcols))
+        def rewrite(stored: DataFrame) -> DataFrame:
+            stored = stored.alias(t_alias)
+            out = stored.join(src, cond, "left_anti")
+            if upd_m:
+                updated = stored.join(src, cond, "inner").select(
+                    F.col(f"{t_alias}.{ROWID}").alias(ROWID),
+                    *[
+                        (
+                            F.expr(assigns[c]).cast(tdef.column(c).spark_type)
+                            if c in assigns
+                            else F.col(f"{t_alias}.{c}")
+                        ).alias(c)
+                        for c in tcols
+                    ],
+                )
+                # A target row matched by several source rows would be
+                # written back as several copies (silent table growth) —
+                # standard MERGE engines raise instead.
+                if (
+                    updated.groupBy(ROWID).count()
+                    .filter(F.col("count") > 1).limit(1).collect()
+                ):
+                    raise SparrowError(
+                        1062,
+                        "MERGE: a target row matched multiple source rows "
+                        "(non-deterministic UPDATE)",
+                    )
+                out = out.unionByName(updated)
+            if has_insert:
+                out = out.unionByName(inserts(stored))
+            return out
+
+        if upd_m or del_m:
+            affected = self._upsert(
+                schema,
+                table,
+                tdef,
+                lambda d: d.alias(t_alias).join(src, cond, "left_semi"),
+                rewrite,
+            )
+        else:
+            # INSERT only: no stored row changes, so no file is rewritten.
+            affected = 0
+            target = self._read_physical(schema, table, tdef).alias(t_alias)
+            self._replace_files(schema, table, [], inserts(target))
+        if has_insert:
+            affected += inserted.get["n"]
         return Result("ok", affected_rows=affected)
 
     def _insert(self, stmt: str) -> Result:
@@ -1512,29 +1409,14 @@ class Engine:
         )
         if odku:
             return self._insert_odku(odku.group(1), odku.group(2))
-        sel = re.match(
-            r"INSERT\s+INTO\s+([\w`.]+)\s*(\(([^)]*)\))?\s*"
-            r"((?:SELECT|WITH|TABLE)\b.*)$",
-            stmt,
-            re.I | re.S,
-        )
-        if sel:
-            return self._insert_select(sel)
-        m = re.match(
-            r"INSERT\s+INTO\s+([\w`.]+)\s*(\(([^)]*)\))?\s*VALUES\s*(.+)$",
-            stmt,
-            re.I | re.S,
-        )
-        if not m:
-            raise SparrowError(1064, f"syntax error in INSERT: {stmt[:80]}")
-        schema, table, tdef, new_rows, n_rows = self._rows_from_values(m)
+        # VALUES, or SELECT — a superset of the reference's VALUES-only
+        # surface with the same unique-key enforcement.
+        schema, table, tdef, new_rows, _ = self._insert_rows_any(stmt)
         self._check_unique(tdef, new_rows)
         # assign rowids (reference: uuid per row, src/physical_plan/insert.rs:33)
-        with_rowid = new_rows.select(F.expr("uuid()").alias(ROWID), "*")
-        self._partitioned_writer(tdef, with_rowid, "append").parquet(
-            self.catalog.data_path(schema, table)
+        n_rows = self._replace_files(
+            schema, table, [], new_rows.select(F.expr("uuid()").alias(ROWID), "*")
         )
-        self._sync_partitions(schema, table, tdef)
         return Result("ok", affected_rows=n_rows)
 
     def _rows_from_values(self, m: "re.Match[str]"):
@@ -1576,7 +1458,9 @@ class Engine:
                         1364, f"Field '{c.name}' doesn't have a default value"
                     )
                 new_rows = new_rows.withColumn(c.name, F.lit(None).cast(c.spark_type))
-        new_rows = new_rows.select(*[c.name for c in tdef.columns])
+        # One partition, in tuple order: the statement-sized batch needs
+        # no shuffle to group or rank, and lands as one file.
+        new_rows = new_rows.select(*[c.name for c in tdef.columns]).coalesce(1)
         return schema, table, tdef, new_rows, n_rows
 
     def _check_unique(self, tdef: TableDef, new_rows: DataFrame) -> None:
@@ -1589,24 +1473,39 @@ class Engine:
             return
         existing = self._read_physical(tdef.schema, tdef.name, tdef)
         for index_name, cols in key_sets:
-            batch_dup = (
-                new_rows.groupBy(*cols).count().filter(F.col("count") > 1).limit(1).collect()
-            )
-            if batch_dup:
-                key = "-".join(str(batch_dup[0][c]) for c in cols)
-                raise SparrowError(
-                    1062, f"Duplicate entry '{key}' for key '{index_name}'"
-                )
+            self._check_batch_key(new_rows, index_name, cols)
             clash = (
                 new_rows.join(existing.select(*cols), on=cols, how="left_semi")
                 .limit(1)
                 .collect()
             )
             if clash:
-                key = "-".join(str(clash[0][c]) for c in cols)
-                raise SparrowError(
-                    1062, f"Duplicate entry '{key}' for key '{index_name}'"
-                )
+                raise _duplicate_entry(index_name, cols, clash[0])
+
+    @staticmethod
+    def _check_batch_key(rows: DataFrame, index_name: str, cols: list[str]) -> None:
+        """Error 1062 when a key repeats within one statement's rows.
+        NULLs never conflict in a unique index (MySQL), so rows with a
+        NULL in the key are exempt."""
+        dup = (
+            rows.dropna(subset=cols).groupBy(*cols).count()
+            .filter(F.col("count") > 1).limit(1).collect()
+        )
+        if dup:
+            raise _duplicate_entry(index_name, cols, dup[0])
+
+    @staticmethod
+    def _occurrence_rank(rows: DataFrame, cols: list[str]) -> DataFrame:
+        """Add __rank: the row's occurrence number, in __ord order, among
+        the rows sharing its key (1 = first). A key with a NULL never
+        conflicts, so such rows all rank 1."""
+        has_null = F.lit(False)
+        for c in cols:
+            has_null = has_null | F.col(c).isNull()
+        w = Window.partitionBy(*cols).orderBy("__ord")
+        return rows.withColumn(
+            "__rank", F.when(has_null, 1).otherwise(F.row_number().over(w))
+        )
 
     def _update(self, stmt: str) -> Result:
         m = re.match(
@@ -1633,11 +1532,14 @@ class Engine:
         # untouched on disk. The reference rewrites per matched rowid
         # (src/execute_impl/update.rs:104-288); whole-table rewrite
         # would be the 100 TB anti-pattern.
-        affected, touched = self._matched_files(schema, table, tdef, pred)
+        affected, touched = self._matched_files(
+            schema, table, tdef, lambda d: d.filter(pred)
+        )
         if not touched:
             return Result("ok", affected_rows=0)
-        sub = self._read_files(tdef, touched)
-        updated = sub
+        updated = self._read_files(
+            tdef, touched, self.catalog.data_path(schema, table)
+        )
         for col, expr in assignments:
             cdef = tdef.column(col)
             updated = updated.withColumn(
@@ -1655,20 +1557,22 @@ class Engine:
         schema, table = self._resolve_table_name(name_raw)
         tdef = self.catalog.load(schema, table)
         if not where:
-            # Unconditional DELETE = truncate: swap in an empty dir.
-            data = self._read_physical(schema, table, tdef)
-            total = data.count()
-            self._overwrite_data(schema, table, data.limit(0))
+            # Unconditional DELETE = TRUNCATE that reports the row count.
+            total = self._read_physical(schema, table, tdef).count()
+            self._truncate_data(schema, table, tdef)
             return Result("ok", affected_rows=total)
         pred = F.expr(substitute_variables(where, self.system_vars, self.user_vars))
         # File-level copy-on-write, like UPDATE: rewrite only the files
         # that contain rows to delete (NULL predicate keeps the row,
         # matching SQL WHERE semantics).
-        affected, touched = self._matched_files(schema, table, tdef, pred)
+        affected, touched = self._matched_files(
+            schema, table, tdef, lambda d: d.filter(pred)
+        )
         if not touched:
             return Result("ok", affected_rows=0)
-        sub = self._read_files(tdef, touched)
-        keep = sub.filter(~pred | pred.isNull())
+        keep = self._read_files(
+            tdef, touched, self.catalog.data_path(schema, table)
+        ).filter(~pred | pred.isNull())
         self._replace_files(schema, table, touched, keep)
         return Result("ok", affected_rows=affected)
 
@@ -1927,13 +1831,17 @@ class Engine:
     # ------------------------------------------------------------------
     # physical helpers
     # ------------------------------------------------------------------
+    @staticmethod
+    def _physical_schema(tdef: TableDef) -> str:
+        """DDL schema of the stored rows: hidden rowid + table columns."""
+        return ", ".join(
+            [f"`{ROWID}` string"] + [f"`{c.name}` {c.spark_type}" for c in tdef.columns]
+        )
+
     def _read_physical(self, schema: str, table: str, tdef: TableDef) -> DataFrame:
         """Table data including the hidden rowid column."""
         path = self.catalog.data_path(schema, table)
-        fields = [f"`{ROWID}` string"] + [
-            f"`{c.name}` {c.spark_type}" for c in tdef.columns
-        ]
-        reader_schema = ", ".join(fields)
+        reader_schema = self._physical_schema(tdef)
         try:
             return self.spark.read.schema(reader_schema).parquet(path)
         except Exception:
@@ -2165,16 +2073,6 @@ class Engine:
         )
         return Result("resultset", df)
 
-    def _partitioned_writer(self, tdef, df, mode: str):
-        """Writer with the table's hive partition layout applied.
-        Partition-column values become <col>=<val>/ directories, so a
-        predicate on them prunes at directory level for BOTH the
-        engine's own DML file discovery (_matched_files) and any scan."""
-        w = df.write.mode(mode)
-        if tdef.partition_by:
-            w = w.partitionBy(*tdef.partition_by)
-        return w
-
     def _sync_partitions(self, schema: str, table: str, tdef=None) -> None:
         """Refresh the Spark-catalog registration after a write. For
         partitioned tables the session catalog tracks partitions
@@ -2192,53 +2090,113 @@ class Engine:
             # of the new file set (no-op when the set is unchanged).
             self._snapshot_commit(schema, table, tdef)
 
-    def _matched_files(self, schema, table, tdef, pred) -> tuple[int, list[str]]:
-        """One pass over the table: per-parquet-file matched-row counts
-        via input_file_name(). Returns (total matched rows, list of
-        file URIs that must be rewritten). On a partitioned table a
-        partition predicate prunes this discovery scan to matching
-        directories (PartitionFilters — asserted in
+    def _matched_files(self, schema, table, tdef, match) -> tuple[int, list[str]]:
+        """One pass over the table: `match` maps the stored rows (hidden
+        rowid included) to the ones a statement touches — a WHERE filter
+        for UPDATE/DELETE, a semi-join on key sets or on the MERGE ON
+        condition for the upserts — and the matched rows are counted
+        per parquet file via input_file_name(). Returns (total matched
+        rows, list of file URIs that must be rewritten). On a
+        partitioned table a partition predicate prunes this discovery
+        scan to matching directories (PartitionFilters — asserted in
         tests/test_engine_sql.py::test_partitioned_table_pruned_cow)."""
         data = self._read_physical(schema, table, tdef)
         per_file = (
-            data.withColumn("__file", F.input_file_name())
-            .filter(pred)
+            match(data.withColumn("__file", F.input_file_name()))
             .groupBy("__file")
             .count()
             .collect()
         )
         return sum(r["count"] for r in per_file), [r["__file"] for r in per_file]
 
-    def _read_files(self, tdef: TableDef, files: list[str]) -> DataFrame:
-        fields = [f"`{ROWID}` string"] + [
-            f"`{c.name}` {c.spark_type}" for c in tdef.columns
-        ]
-        reader = self.spark.read.schema(", ".join(fields))
+    def _read_files(self, tdef: TableDef, files: list[str], base: str) -> DataFrame:
+        """Read the given parquet files of a table whose partition
+        directories sit under `base` (hidden rowid included)."""
+        reader_schema = self._physical_schema(tdef)
+        if not files:
+            return self.spark.createDataFrame([], reader_schema)
+        reader = self.spark.read.schema(reader_schema)
         if tdef.partition_by:
             # Reading leaf files directly skips partition discovery —
             # without basePath the <col>=<val>/ values would come back
             # NULL (and a COW rewrite would relocate every row to the
             # default partition).
-            reader = reader.option(
-                "basePath", self.catalog.data_path(tdef.schema, tdef.name)
-            )
+            reader = reader.option("basePath", base)
         return reader.parquet(*files)
+
+    @staticmethod
+    def _key_match(key_sets, incoming: DataFrame):
+        """_matched_files match for the key-based upserts: stored rows
+        whose key equals an incoming row's on any key set. Plain
+        equality, so a NULL key never matches (NULLs never conflict in
+        a unique index)."""
+
+        def match(stored: DataFrame) -> DataFrame:
+            # Each key set semi-joins the rows no earlier set matched, so
+            # a row matched on two key sets is counted once.
+            hits = []
+            for _, cols in key_sets:
+                keys = incoming.select(*cols)
+                hits.append(stored.join(keys, on=cols, how="left_semi"))
+                stored = stored.join(keys, on=cols, how="left_anti")
+            return functools.reduce(DataFrame.union, hits)
+
+        return match
+
+    def _upsert(self, schema, table, tdef, match, rewrite) -> int:
+        """The upsert core behind REPLACE, ODKU and MERGE, on the same
+        file-level copy-on-write as UPDATE/DELETE: `match` picks the
+        stored rows that incoming rows collide with (_matched_files),
+        only the files holding them are read, `rewrite` turns those
+        files' rows into their replacement — matched rows deleted or
+        reassigned, the remaining incoming rows appended — and one
+        _replace_files commit swaps it in. Returns the matched
+        stored-row count."""
+        matched, touched = self._matched_files(schema, table, tdef, match)
+        stored = self._read_files(tdef, touched, self.catalog.data_path(schema, table))
+        self._replace_files(schema, table, touched, rewrite(stored))
+        return matched
+
+    def _stage(self, schema: str, table: str, tdef: TableDef, df: DataFrame) -> str:
+        """Write df to a fresh staging dir beside the data dir; return
+        its path. The table's hive partition layout applies: partition
+        values become <col>=<val>/ directories, so a predicate on them
+        prunes at directory level for BOTH the engine's own DML file
+        discovery (_matched_files) and any scan."""
+        staging = os.path.join(
+            self.catalog.table_path(schema, table), f".staging-{uuid.uuid4().hex}"
+        )
+        w = df.write.mode("overwrite")
+        if tdef.partition_by:
+            w = w.partitionBy(*tdef.partition_by)
+        w.parquet(staging)
+        return staging
 
     def _replace_files(
         self, schema: str, table: str, old_files: list[str], new_data: DataFrame
-    ) -> None:
-        """File-level copy-on-write: stage the rewritten rows, move the
-        staged part files into the data dir (part file names carry a
-        fresh UUID — no collisions), then drop the superseded files.
+    ) -> int:
+        """File-level copy-on-write, the commit of every INSERT and
+        row-level DML statement: stage the rewritten rows of old_files
+        plus any inserted rows, move the staged part files into the
+        data dir (part file names carry a fresh UUID — no collisions),
+        then drop the superseded files. Returns the rows written; a
+        write that replaces no file and adds no row commits nothing.
         Same non-transactional guarantees as _overwrite_data."""
         from urllib.parse import unquote, urlparse
 
         data_dir = self.catalog.data_path(schema, table)
         tdef = self.catalog.load(schema, table)
-        staging = os.path.join(
-            self.catalog.table_path(schema, table), f".staging-{uuid.uuid4().hex}"
+        written = Observation()
+        staging = self._stage(
+            schema,
+            table,
+            tdef,
+            new_data.observe(written, F.count(F.lit(1)).alias("rows")),
         )
-        self._partitioned_writer(tdef, new_data, "overwrite").parquet(staging)
+        n_rows = written.get["rows"]
+        if not old_files and not n_rows:
+            shutil.rmtree(staging, ignore_errors=True)
+            return 0
         # Move staged part files preserving any <col>=<val>/ partition
         # subdirectories (an UPDATE that changes a partition-column
         # value relocates the row's file to the new directory).
@@ -2260,26 +2218,30 @@ class Engine:
             except FileNotFoundError:
                 pass
         self._sync_partitions(schema, table, tdef)
+        return n_rows
 
     def _overwrite_data(self, schema: str, table: str, new_data: DataFrame) -> None:
-        """Copy-on-write swap: write to a staging dir, then replace the
-        data dir. Matches the reference's non-transactional guarantees
-        (its KV mutations aren't atomic across keys either). Used for
-        whole-table rewrites (truncate, ALTER DROP COLUMN, REPLACE,
-        MERGE); UPDATE/DELETE go through the file-pruned
-        _replace_files path instead."""
+        """Whole-table copy-on-write swap: stage the new data, then
+        replace the data dir. Matches the reference's non-transactional
+        guarantees (its KV mutations aren't atomic across keys either).
+        Only for statements that replace every file: TRUNCATE and the
+        unconditional DELETE (_truncate_data), ALTER TABLE, OPTIMIZE
+        and RESTORE; row-level DML commits through _replace_files."""
         data_dir = self.catalog.data_path(schema, table)
         tdef = self.catalog.load(schema, table)
-        staging = os.path.join(
-            self.catalog.table_path(schema, table), f".staging-{uuid.uuid4().hex}"
-        )
-        self._partitioned_writer(tdef, new_data, "overwrite").parquet(staging)
+        staging = self._stage(schema, table, tdef, new_data)
         old = data_dir + f".old-{uuid.uuid4().hex}"
         os.rename(data_dir, old)
         os.rename(staging, data_dir)
         shutil.rmtree(old, ignore_errors=True)
         self._sync_partitions(schema, table, tdef)
         self.spark.sql(f"REFRESH TABLE `{schema}`.`{table}`")
+
+    def _truncate_data(self, schema: str, table: str, tdef: TableDef) -> None:
+        """TRUNCATE and the unconditional DELETE: swap in an empty dir."""
+        self._overwrite_data(
+            schema, table, self._read_physical(schema, table, tdef).limit(0)
+        )
 
     # ------------------------------------------------------------------
     # snapshot versioning (ENGINE=SNAPSHOT) — a Delta-style commit log
@@ -2396,19 +2358,9 @@ class Engine:
     ) -> DataFrame:
         """Read the given pool-relative parquet paths with the table's
         schema (hidden rowid included). Partition-column values are
-        recovered from the preserved <col>=<val>/ relative paths via
-        basePath."""
-        fields = [f"`{ROWID}` string"] + [
-            f"`{c.name}` {c.spark_type}" for c in tdef.columns
-        ]
-        reader_schema = ", ".join(fields)
-        if not rels:
-            return self.spark.createDataFrame([], reader_schema)
+        recovered from the preserved <col>=<val>/ relative paths."""
         pool = self._snap_pool_dir(schema, table)
-        reader = self.spark.read.schema(reader_schema)
-        if tdef.partition_by:
-            reader = reader.option("basePath", pool)
-        return reader.parquet(*[os.path.join(pool, r) for r in rels])
+        return self._read_files(tdef, [os.path.join(pool, r) for r in rels], pool)
 
     def _snap_read(self, schema: str, table: str, v: int) -> DataFrame:
         """Snapshot-consistent read of version v from the immutable

@@ -180,3 +180,37 @@ def test_odku_duplicates_still_error_outside_the_defined_case(engine):
         )
     assert ei2.value.code == 1062
     engine.sql("DROP SCHEMA seqf3")
+
+
+def _null_email_table(engine):
+    engine.sql("CREATE DATABASE IF NOT EXISTS nkdb")
+    engine.sql("USE nkdb")
+    engine.sql(
+        "CREATE TABLE nk (id INT, email VARCHAR(20), PRIMARY KEY(id), "
+        "UNIQUE KEY ue (email))"
+    )
+
+
+def test_insert_null_unique_keys_in_one_batch(engine):
+    # Two NULL emails in one INSERT batch are not duplicates (the same
+    # batch already lands under INSERT IGNORE and ODKU).
+    _null_email_table(engine)
+    r = engine.sql("INSERT INTO nk VALUES (1, NULL), (2, NULL)")
+    assert r.affected_rows == 2
+    rows = engine.sql("SELECT id, email FROM nk ORDER BY id").df.collect()
+    assert [(x.id, x.email) for x in rows] == [(1, None), (2, None)]
+    with pytest.raises(SparrowError, match="Duplicate entry 'a@x'"):
+        engine.sql("INSERT INTO nk VALUES (3, 'a@x'), (4, 'a@x')")
+    engine.sql("DROP TABLE nk")
+
+
+def test_replace_null_unique_keys_in_one_batch(engine):
+    _null_email_table(engine)
+    engine.sql("INSERT INTO nk VALUES (1, NULL)")
+    r = engine.sql("REPLACE INTO nk VALUES (3, NULL), (4, NULL)")
+    assert r.affected_rows == 2
+    rows = engine.sql("SELECT id, email FROM nk ORDER BY id").df.collect()
+    assert [(x.id, x.email) for x in rows] == [(1, None), (3, None), (4, None)]
+    with pytest.raises(SparrowError, match="Duplicate entry 'a@x'"):
+        engine.sql("REPLACE INTO nk VALUES (5, 'a@x'), (6, 'a@x')")
+    engine.sql("DROP TABLE nk")

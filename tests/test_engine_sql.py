@@ -599,44 +599,81 @@ def _data_files(engine, db, table):
     return {f for f in os.listdir(d) if f.endswith(".parquet")}
 
 
-def test_update_rewrites_only_touched_files(engine):
-    # File-level copy-on-write: separate INSERTs append separate parquet
-    # files; an UPDATE matching rows in one file must leave the other
-    # file untouched on disk (same file name still present).
+_MERGE_COW = (
+    "MERGE INTO cow t USING (SELECT * FROM VALUES (3, 99), (9, 90) AS v(id, v)) s "
+    "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v "
+    "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"
+)
+# statement, affected rows, changed ids (None = deleted)
+_COW_CASES = {
+    "update": ("UPDATE cow SET v = 99 WHERE id = 3", 1, {3: 99}),
+    "delete": ("DELETE FROM cow WHERE id = 3", 1, {3: None}),
+    "replace": ("REPLACE INTO cow VALUES (3, 99), (9, 90)", 2, {3: 99, 9: 90}),
+    "odku": (
+        "INSERT INTO cow VALUES (3, 99), (9, 90) "
+        "ON DUPLICATE KEY UPDATE v = VALUES(v)",
+        3,
+        {3: 99, 9: 90},
+    ),
+    "merge": (_MERGE_COW, 2, {3: 99, 9: 90}),
+    "delete_no_match": ("DELETE FROM cow WHERE id = 999", 0, {}),
+    "merge_no_match": (
+        "MERGE INTO cow t USING (SELECT 999 AS id) s ON t.id = s.id "
+        "WHEN MATCHED THEN DELETE",
+        0,
+        {},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_COW_CASES))
+def test_row_level_dml_rewrites_only_touched_files(engine, case):
+    # File-level copy-on-write for every row-level DML statement:
+    # separate INSERTs append separate parquet files; a statement
+    # matching a row in one file replaces only that file, every other
+    # file stays byte-identical on disk, and inserted rows land in new
+    # files of the same commit. A statement matching nothing (and
+    # inserting nothing) changes no file at all.
+    import os
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    stmt, affected, changes = _COW_CASES[case]
     boot(engine)
     engine.sql("CREATE TABLE cow (id INT, v INT, PRIMARY KEY(id))")
-    engine.sql("INSERT INTO cow VALUES (1, 10), (2, 20)")
-    engine.sql("INSERT INTO cow VALUES (3, 30), (4, 40)")
-    before = _data_files(engine, "test_db", "cow")
-    assert len(before) >= 2
-    r = engine.sql("UPDATE cow SET v = 99 WHERE id = 3")
-    assert r.affected_rows == 1
-    after = _data_files(engine, "test_db", "cow")
-    # at least one original file survives verbatim; at least one was
-    # replaced by a fresh part file
-    assert before & after, "untouched file should not be rewritten"
-    assert after - before, "touched file should be replaced"
+    for i in (1, 3, 5, 7):
+        engine.sql(f"INSERT INTO cow VALUES ({i}, {i * 10}), ({i + 1}, {i * 10 + 10})")
+    d = engine.catalog.data_path("test_db", "cow")
+
+    def contents():
+        return {
+            f: Path(d, f).read_bytes()
+            for f in _data_files(engine, "test_db", "cow")
+        }
+
+    before = contents()
+    assert len(before) >= 4
+    touched = {
+        f
+        for f in before
+        if set(pq.read_table(os.path.join(d, f), columns=["id"])["id"].to_pylist())
+        & set(changes)
+    }
+    r = engine.sql(stmt)
+    assert r.affected_rows == affected
+    after = contents()
+    for f in set(before) - touched:
+        assert after.get(f) == before[f], f"{case} rewrote a file holding no matched row"
+    assert not touched & set(after), "touched file should be replaced"
+    if not changes:
+        assert after == before
+    expected = {k: k * 10 for k in range(1, 9)}
+    expected.update(changes)
     rows = engine.sql("SELECT id, v FROM cow ORDER BY id").rows()
-    assert [(r.id, r.v) for r in rows] == [(1, 10), (2, 20), (3, 99), (4, 40)]
-
-
-def test_delete_rewrites_only_touched_files(engine):
-    boot(engine)
-    engine.sql("CREATE TABLE cowd (id INT, v INT, PRIMARY KEY(id))")
-    engine.sql("INSERT INTO cowd VALUES (1, 10), (2, 20)")
-    engine.sql("INSERT INTO cowd VALUES (3, 30), (4, 40)")
-    before = _data_files(engine, "test_db", "cowd")
-    r = engine.sql("DELETE FROM cowd WHERE id = 2")
-    assert r.affected_rows == 1
-    after = _data_files(engine, "test_db", "cowd")
-    assert before & after
-    rows = engine.sql("SELECT id FROM cowd ORDER BY id").rows()
-    assert [r.id for r in rows] == [1, 3, 4]
-    # no-match DELETE touches nothing at all
-    mid = _data_files(engine, "test_db", "cowd")
-    r = engine.sql("DELETE FROM cowd WHERE id = 999")
-    assert r.affected_rows == 0
-    assert _data_files(engine, "test_db", "cowd") == mid
+    assert [(x.id, x.v) for x in rows] == sorted(
+        (k, v) for k, v in expected.items() if v is not None
+    )
 
 
 def test_optimize_table_compacts_files(engine):
@@ -729,7 +766,7 @@ def test_partitioned_table_pruned_cow(engine):
     )[1][:200]
 
     # 2) _matched_files returns only files under the matching partition
-    n, files = engine._matched_files("partdb", "ev", tdef, pred)
+    n, files = engine._matched_files("partdb", "ev", tdef, lambda d: d.filter(pred))
     assert n == 5
     assert files and all("region=us" in f for f in files)
 

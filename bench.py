@@ -429,10 +429,61 @@ def _burst_replaces(old: float, fresh: float) -> bool:
     return fresh < old / _BURST_X
 
 
+def _best_of_3(spark, fn, sf_dir: str) -> float:
+    """Best wall time of three build + run + fetch passes of one query.
+    The first run includes per-plan whole-stage-codegen compilation —
+    a fixed cost that is pure noise at bench scale and fully amortized
+    at production scale — and best-of-3 also damps co-tenant load
+    spikes on the bench machine."""
+    runs = []
+    for _ in range(3):
+        t0 = time.time()
+        # Full execution + Arrow result fetch. toPandas(), not
+        # count(): count() wraps the plan in a new QueryExecution
+        # each call — re-running Catalyst analysis/optimization per
+        # iteration and defeating the registry's prepared-plan
+        # cache. And Arrow batches, not collect(): collect()
+        # materializes per-row Python Row objects, which for the
+        # 100k-row results (q_asof_join, q_rolling_window) costs
+        # ~0.5 s of pure CPython deserialization on top of a
+        # ~0.14 s query — measured 4.6x on q_asof_join. Arrow is
+        # the engine's production result-delivery path (the same
+        # columnar batches a JDBC/ADBC client would stream); the
+        # full plan still executes every run.
+        _ = len(fn(spark, sf_dir).toPandas())
+        runs.append(time.time() - t0)
+    return round(min(runs), 3)
+
+
+def _drain(spark, listener: _DrainListener, name: str, sf_dir: str) -> dict:
+    """One run of a streaming drain: total wall time, batch count and
+    busy time."""
+    listener.reset()
+    t0 = time.time()
+    _ = len(registry.RAW_QUERIES[name](spark, sf_dir).toPandas())
+    total = round(time.time() - t0, 3)
+    # Listener events arrive on a background thread; wait until the
+    # batch count is stable (drains have already terminated, so
+    # this is a flush, bounded at 3 s).
+    seen, waited = -1, 0.0
+    while listener.batches != seen and waited < 3.0:
+        seen = listener.batches
+        time.sleep(0.2)
+        waited += 0.2
+    return {
+        "total_sec": total,
+        "batches": listener.batches,
+        "busy_sec": round(listener.busy_ms / 1000.0, 3),
+    }
+
+
 def _remeasure(names: list[str], sf_dir: str) -> None:
-    """Re-time ONLY the named queries and record the fresh best-of-3
-    in bench_detail.json's `remeasured` side-channel, leaving the
-    full-run `queries` values untouched.
+    """Re-time ONLY the named queries and record the fresh reading in a
+    bench_detail.json side-channel, leaving the full-run values
+    untouched unless the gap is burst-scale. A name in AUX_QUERIES is a
+    streaming drain: side-effecting and its own steady state, so one
+    fresh run is its reading and it goes into `remeasured_aux`. Any
+    other name gets a fresh best-of-3 and goes into `remeasured`.
 
     Purpose: automated flag adjudication. The bench box is co-tenant;
     a load burst that spans one query's three runs inflates its
@@ -446,15 +497,15 @@ def _remeasure(names: list[str], sf_dir: str) -> None:
 
     Persistence policy (r15, after the r14 ADVICE ratchet fix grew a
     blind spot of its own): the side-channel records BOTH readings
-    for audit, and the persisted `queries` value — which becomes the
-    committed round baseline — takes the fresh reading ONLY when it
-    is faster, i.e. when the adjudication proves the full-run number
-    was burst-inflated. Keeping a known-burst value in the baseline
-    would let next round's genuine regressions hide under it
-    (anything below burst x 1.5 passes the gate). This is not the r14
-    ratchet: the comparison is within ONE round's readings (never
-    min against a prior baseline), and bench_compare still consults
-    `remeasured` for adjudication of older artifacts.
+    for audit, and the persisted `queries` / `aux_queries` value —
+    which becomes the committed round baseline — takes the fresh
+    reading ONLY when it is faster, i.e. when the adjudication proves
+    the full-run number was burst-inflated. Keeping a known-burst value
+    in the baseline would let next round's genuine regressions hide
+    under it (anything below burst x 1.5 passes the gate). This is not
+    the r14 ratchet: the comparison is within ONE round's readings
+    (never min against a prior baseline), and bench_compare still
+    consults `remeasured` for adjudication of older artifacts.
 
     Caveat (measured r14): the re-measured value is a COLD-SESSION
     floor. A query timed inside the full bench benefits from shared
@@ -469,23 +520,24 @@ def _remeasure(names: list[str], sf_dir: str) -> None:
     registry.load_all()
     spark = get_spark("sparrow-bench")
     registry.QUERIES["q6_forecast_revenue"](spark, sf_dir).collect()
-    updated = {}
+    listener = _DrainListener()
+    spark.streams.addListener(listener)
+    updated: dict[str, dict] = {"remeasured": {}, "remeasured_aux": {}}
     for name in names:
         if name not in registry.QUERIES:
             print(f"remeasure: unknown query {name}", file=sys.stderr)
             continue
-        fn = registry.QUERIES[name]
-        runs = []
-        for _ in range(3):
-            t0 = time.time()
-            _ = len(fn(spark, sf_dir).toPandas())
-            runs.append(time.time() - t0)
-        fresh = round(min(runs), 3)
-        old = detail["queries"].get(name, fresh)
-        detail.setdefault("remeasured", {})[name] = {
-            "full_run": old,
-            "fresh": fresh,
-        }
+        if name in AUX_QUERIES:
+            fresh = _drain(spark, listener, name, sf_dir)
+            persisted, side = detail.setdefault("aux_queries", {}), "remeasured_aux"
+            old = persisted.get(name, fresh)
+            old_s, fresh_s = old["total_sec"], fresh["total_sec"]
+        else:
+            fresh = _best_of_3(spark, registry.QUERIES[name], sf_dir)
+            persisted, side = detail["queries"], "remeasured"
+            old = persisted.get(name, fresh)
+            old_s, fresh_s = old, fresh
+        detail.setdefault(side, {})[name] = {"full_run": old, "fresh": fresh}
         # When the fresh reading comes back faster by a BURST-SCALE
         # margin, the full-run number is adjudicated burst-inflated —
         # keeping it in the persisted detail (which becomes the
@@ -501,77 +553,17 @@ def _remeasure(names: list[str], sf_dir: str) -> None:
         # a gap at the same scale the flag machinery calls a
         # regression (>= _BURST_X, kept in sync with
         # scripts/bench_compare.REGRESSION_X) proves a burst.
-        if _burst_replaces(old, fresh):
-            detail["queries"][name] = fresh
-        updated[name] = {"was": old, "fresh": fresh}
-    with open("bench_detail.json", "w") as f:
-        json.dump(detail, f)
-    print(json.dumps({"remeasured": updated}))
-
-
-def _remeasure_aux(names: list[str], sf_dir: str) -> None:
-    """Aux-drain twin of _remeasure (r16): re-run ONLY the named
-    streaming drains at a different moment, record both readings in a
-    `remeasured_aux` side-channel, and replace the persisted
-    aux_queries entry only when the fresh total is burst-scale faster
-    (_burst_replaces — the same materiality rule as the headline
-    fold). A drain is side-effecting and its own steady state, so one
-    fresh run (not best-of-3) is the reading."""
-    detail = json.load(open("bench_detail.json"))
-    registry.load_all()
-    spark = get_spark("sparrow-bench")
-    registry.QUERIES["q6_forecast_revenue"](spark, sf_dir).collect()
-    listener = _DrainListener()
-    spark.streams.addListener(listener)
-    updated = {}
-    for name in names:
-        if name not in AUX_QUERIES:
-            print(f"remeasure-aux: unknown drain {name}", file=sys.stderr)
-            continue
-        listener.reset()
-        t0 = time.time()
-        df = registry.RAW_QUERIES[name](spark, sf_dir)
-        _ = len(df.toPandas())
-        fresh_total = round(time.time() - t0, 3)
-        seen, waited = -1, 0.0
-        while listener.batches != seen and waited < 3.0:
-            seen = listener.batches
-            time.sleep(0.2)
-            waited += 0.2
-        fresh = {
-            "total_sec": fresh_total,
-            "batches": listener.batches,
-            "busy_sec": round(listener.busy_ms / 1000.0, 3),
-        }
-        old = detail.get("aux_queries", {}).get(name, fresh)
-        detail.setdefault("remeasured_aux", {})[name] = {
-            "full_run": old,
-            "fresh": fresh,
-        }
-        if _burst_replaces(old["total_sec"], fresh["total_sec"]):
-            detail["aux_queries"][name] = fresh
-        updated[name] = {
-            "was": old["total_sec"], "fresh": fresh["total_sec"]
-        }
+        if _burst_replaces(old_s, fresh_s):
+            persisted[name] = fresh
+        updated[side][name] = {"was": old_s, "fresh": fresh_s}
     spark.streams.removeListener(listener)
     with open("bench_detail.json", "w") as f:
         json.dump(detail, f)
-    print(json.dumps({"remeasured_aux": updated}))
+    print(json.dumps({k: v for k, v in updated.items() if v}))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if "--remeasure-aux" in sys.argv:
-        idx = sys.argv.index("--remeasure-aux")
-        if idx + 1 >= len(sys.argv):
-            print(
-                "usage: bench.py --remeasure-aux s1[,s2,...]",
-                file=sys.stderr,
-            )
-            raise SystemExit(2)
-        arg = sys.argv[idx + 1]
-        _remeasure_aux([n for n in arg.split(",") if n], sf_dir)
-        return
     if "--remeasure" in sys.argv:
         idx = sys.argv.index("--remeasure")
         if idx + 1 >= len(sys.argv):
@@ -593,57 +585,13 @@ def main() -> None:
     loadavg_before = [round(x, 2) for x in os.getloadavg()]
     calib_first = _calibrate(spark)
 
-    # Each query runs three times; we report the best (steady-state)
-    # time. The first run includes per-plan whole-stage-codegen
-    # compilation — a fixed cost that is pure noise at bench scale and
-    # fully amortized at production scale — and best-of-3 also damps
-    # co-tenant load spikes on the bench machine.
-    timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        fn = registry.QUERIES[name]
-        runs = []
-        for _ in range(3):
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            # Full execution + Arrow result fetch. toPandas(), not
-            # count(): count() wraps the plan in a new QueryExecution
-            # each call — re-running Catalyst analysis/optimization per
-            # iteration and defeating the registry's prepared-plan
-            # cache. And Arrow batches, not collect(): collect()
-            # materializes per-row Python Row objects, which for the
-            # 100k-row results (q_asof_join, q_rolling_window) costs
-            # ~0.5 s of pure CPython deserialization on top of a
-            # ~0.14 s query — measured 4.6x on q_asof_join. Arrow is
-            # the engine's production result-delivery path (the same
-            # columnar batches a JDBC/ADBC client would stream); the
-            # full plan still executes every run.
-            n = len(df.toPandas())
-            _ = n
-            runs.append(time.time() - t0)
-        timings[name] = round(min(runs), 3)
-
+    timings = {
+        name: _best_of_3(spark, registry.QUERIES[name], sf_dir)
+        for name in BENCH_QUERIES
+    }
     listener = _DrainListener()
     spark.streams.addListener(listener)
-    aux: dict[str, dict[str, float]] = {}
-    for name in AUX_QUERIES:
-        listener.reset()
-        t0 = time.time()
-        df = registry.RAW_QUERIES[name](spark, sf_dir)
-        _ = len(df.toPandas())
-        total = round(time.time() - t0, 3)
-        # Listener events arrive on a background thread; wait until the
-        # batch count is stable (drains have already terminated, so
-        # this is a flush, bounded at 3 s).
-        seen, waited = -1, 0.0
-        while listener.batches != seen and waited < 3.0:
-            seen = listener.batches
-            time.sleep(0.2)
-            waited += 0.2
-        aux[name] = {
-            "total_sec": total,
-            "batches": listener.batches,
-            "busy_sec": round(listener.busy_ms / 1000.0, 3),
-        }
+    aux = {name: _drain(spark, listener, name, sf_dir) for name in AUX_QUERIES}
     spark.streams.removeListener(listener)
 
     calib_last = _calibrate(spark)

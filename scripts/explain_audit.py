@@ -3,15 +3,35 @@ scale-relevant properties — parquet filter pushdown (PushedFilters),
 column pruning (ReadSchema), join strategy (Broadcast vs SortMerge),
 and whole-stage codegen coverage. Run after changing any plan.
 
-Usage: python scripts/explain_audit.py [sf_dir] [query ...]
+Usage:
+  python scripts/explain_audit.py [sf_dir] [query ...]
+  python scripts/explain_audit.py --windows [sf_dir] [query ...]
+  PYTHONHASHSEED=0 python scripts/explain_audit.py --sweep OUT.json [sf_dir] [query ...]
+  python scripts/explain_audit.py --diff A.json B.json
+
+--sweep builds every non-streaming query (or the named ones) and
+records its normalised AQE initial executed plan without executing it,
+plus the plan of every action the builder itself runs (the
+localCheckpoint/collect/count pins of the iterative builders), and the
+join nodes of both with their build side. --diff lists the queries
+whose recorded plans differ between two sweeps, and says whether their
+join nodes differ too. Run both sweeps with PYTHONHASHSEED=0 and the
+same SPARK_GRAFT_CPUS: a few builders iterate over Python sets. A query
+reported with "joins same" may differ only in the order of the Expand
+Catalyst builds for several DISTINCT aggregates, which follows
+expression ids and so the queries built before it in the process:
+sweep just those queries on both sides and diff again.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from sparrow_spark import registry
 from sparrow_spark.session import get_spark
@@ -193,7 +213,121 @@ def audit_windows(sf_dir: str, names: list[str]) -> int:
     return 1 if unexplained or stale or cartesians else 0
 
 
+_JOIN_NODE = re.compile(
+    r"(?m)^[\s:+\-*()0-9]*(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
+    r"BroadcastNestedLoopJoin|CartesianProduct)\b(.*)$"
+)
+_JOIN_TYPE = re.compile(
+    r"\b(Inner|Cross|LeftOuter|RightOuter|FullOuter|LeftSemi|LeftAnti|"
+    r"ExistenceJoin)\b"
+)
+
+
+def normalise_plan(plan: str) -> str:
+    """A plan string with its per-run ids, names and paths blanked, so
+    two builds of the same query compare equal."""
+    plan = plan.replace(ROOT, "<root>")
+    plan = re.sub(r"#\d+", "#", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+    plan = re.sub(r"(RDD)\[\d+\]", r"\1[]", plan)
+    plan = re.sub(r"\b(\w+)_[0-9a-f]{8}\.", r"\1_.", plan)  # per-run database names
+    plan = re.sub(r"(lambda \w+?)_\d+", r"\1_", plan)
+    return re.sub(r"/tmp/[^\s,\]\)]*", "/tmp/", plan)
+
+
+def join_nodes(plan: str) -> list[str]:
+    """Each join node of a plan string as "node joinType buildSide"."""
+    out = []
+    for m in _JOIN_NODE.finditer(plan):
+        args = m.group(2)
+        kind = _JOIN_TYPE.search(args)
+        side = re.search(r"\bBuild(Left|Right)\b", args)
+        parts = (m.group(1), kind and kind.group(1), side and side.group(0))
+        out.append(" ".join(p for p in parts if p))
+    return out
+
+
+def sweep(out_path: str, sf_dir: str, names: list[str]) -> None:
+    """Record each query's normalised plans (see the module docstring)
+    in OUT.json: {query: {"plan", "joins", "build_plans", "build_joins"}}
+    or {query: {"error"}}."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    spark = get_spark("sparrow-plan-sweep")
+    spark.conf.set("spark.sql.maxPlanStringLength", "2147483632b")  # full plans for capture
+    # Scan metadata (DataFilters, ...) is cut at a character count,
+    # which the id digits shift; print it whole.
+    spark.conf.set("spark.sql.maxMetadataStringLength", "2147483632")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    def plan_of(df) -> str:
+        return normalise_plan(df._jdf.queryExecution().executedPlan().toString())
+
+    build_plans: list[str] = []
+
+    def recording(action):
+        def run(self, *args, **kwargs):
+            build_plans.append(plan_of(self))
+            return action(self, *args, **kwargs)
+
+        return run
+
+    actions = ("localCheckpoint", "checkpoint", "collect", "first", "count")
+    originals = {a: getattr(DataFrame, a) for a in actions}
+    for a, fn in originals.items():
+        setattr(DataFrame, a, recording(fn))
+    out: dict[str, dict] = {}
+    try:
+        for name in names:
+            build_plans.clear()
+            try:
+                plan = plan_of(registry.RAW_QUERIES[name](spark, sf_dir))
+            except Exception as e:  # noqa: BLE001 — recorded, compared like a plan
+                out[name] = {"error": str(e)[:200]}
+                print(f"{name}: error", flush=True)
+                continue
+            out[name] = {
+                "plan": plan,
+                "joins": join_nodes(plan),
+                "build_plans": list(build_plans),
+                "build_joins": [join_nodes(p) for p in build_plans],
+            }
+            print(f"{name}: {len(out[name]['joins'])} joins", flush=True)
+    finally:
+        for a, fn in originals.items():
+            setattr(DataFrame, a, fn)
+    with open(out_path, "w") as f:
+        json.dump(out, f)
+
+
+def diff(a_path: str, b_path: str) -> int:
+    """Print the queries both sweeps recorded whose plans differ;
+    returns the count."""
+    a, b = json.load(open(a_path)), json.load(open(b_path))
+    common = sorted(set(a) & set(b))
+    changed = [n for n in common if a[n] != b[n]]
+    for name in changed:
+        x, y = a[name], b[name]
+        same_joins = (x.get("joins"), x.get("build_joins")) == (
+            y.get("joins"),
+            y.get("build_joins"),
+        )
+        print(f"{name}: plan differs, joins {'same' if same_joins else 'differ'}")
+    only = len(set(a) ^ set(b))
+    print(
+        f"\n{len(changed)} of {len(common)} queries differ"
+        + (f" ({only} recorded by one sweep only)" if only else "")
+    )
+    return len(changed)
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--diff"]:
+        raise SystemExit(1 if diff(sys.argv[2], sys.argv[3]) else 0)
+    sweep_out = None
+    if sys.argv[1:2] == ["--sweep"]:
+        sweep_out = sys.argv[2]
+        del sys.argv[1:3]
     if len(sys.argv) > 1 and sys.argv[1] == "--windows":
         sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
         registry.load_all()
@@ -203,6 +337,11 @@ def main() -> None:
         raise SystemExit(audit_windows(sf_dir, names))
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     args = [a for a in sys.argv[2:] if a != "--full"]
+    if sweep_out:
+        registry.load_all()
+        batch = [n for n in registry.RAW_QUERIES if not n.startswith("q_stream")]
+        sweep(sweep_out, sf_dir, args or batch)
+        return
     if args == ["--all"]:
         registry.load_all()
         # Streaming drains aren't explainable as one plan; skip them.

@@ -60,32 +60,23 @@ EOF
     CMP_OUT=$(python scripts/bench_compare.py "$BASELINE" bench_detail.json) \
       && CMP_RC=0 || CMP_RC=$?
     echo "$CMP_OUT"
-    FLAGGED=$(echo "$CMP_OUT" | sed -n 's/^  REGRESSION \([^:]*\):.*/\1/p' \
-      | paste -sd, -)
-    FLAGGED_AUX=$(echo "$CMP_OUT" \
-      | sed -n 's/^  AUX REGRESSION \([^:]*\):.*/\1/p' | paste -sd, -)
-    if [ "$CMP_RC" -eq 1 ] && [ -n "$FLAGGED_AUX" ]; then
-      # Aux drains get the same re-measure-at-a-different-moment
-      # adjudication as headline queries (r16): a burst artifact
-      # clears via the remeasured_aux side-channel, a reproduced
-      # regression still fails the second compare below.
-      echo "== gate: re-measuring flagged aux drains: $FLAGGED_AUX =="
-      python bench.py --remeasure-aux "$FLAGGED_AUX"
-    fi
+    # Headline and aux-drain flags share one list: bench.py routes
+    # each name to its own re-measure (drains run once, queries
+    # best-of-3) and side-channel.
+    FLAGGED=$(echo "$CMP_OUT" \
+      | sed -n 's/^  \(AUX \)\{0,1\}REGRESSION \([^:]*\):.*/\2/p' | paste -sd, -)
     if [ "$CMP_RC" -eq 1 ] && [ -n "$FLAGGED" ]; then
       # Automated flag adjudication: the bench box is co-tenant, and a
       # mid-run load burst inflates a contiguous block of queries that
       # the two-point calibration sentinel cannot see. Re-measure ONLY
-      # the flagged queries at a different moment (min of two
-      # independent best-of-3s); a real regression reproduces, a burst
-      # artifact clears. The SECOND compare is the gate verdict. Only
-      # exit code 1 (real flags) takes this branch — a usage/data
-      # error (exit 2: disjoint query sets, corrupt baseline) must
-      # fail the gate directly, not boot a pointless Spark session.
+      # the flagged queries and drains at a different moment; a real
+      # regression reproduces, a burst artifact clears. The SECOND
+      # compare is the gate verdict. Only exit code 1 (real flags)
+      # takes this branch — a usage/data error (exit 2: disjoint query
+      # sets, corrupt baseline) must fail the gate directly, not boot
+      # a pointless Spark session.
       echo "== gate: re-measuring flagged queries: $FLAGGED =="
       python bench.py --remeasure "$FLAGGED"
-    fi
-    if [ "$CMP_RC" -eq 1 ] && { [ -n "$FLAGGED" ] || [ -n "$FLAGGED_AUX" ]; }; then
       echo "== gate: bench_compare (post-remeasure) vs $BASELINE =="
       python scripts/bench_compare.py "$BASELINE" bench_detail.json
     elif [ "$CMP_RC" -ne 0 ]; then

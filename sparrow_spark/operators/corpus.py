@@ -99,9 +99,9 @@ def q_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pmi = (
         bg_c.filter(F.col("c_xy") >= 25)
         .join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .crossJoin(F.broadcast(n1))
-        .crossJoin(F.broadcast(n2))
+        .join(u2, "w2")
+        .crossJoin(n1)
+        .crossJoin(n2)
         .select(
             "w1",
             "w2",
@@ -186,7 +186,7 @@ def q_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = cells.select("w").distinct()
     langs = cells.select("lang").distinct()
     grid = (
-        terms.crossJoin(F.broadcast(langs))
+        terms.crossJoin(langs)
         .join(cells, ["w", "lang"], "left")
         .select("w", "lang", F.coalesce("o", F.lit(0.0)).alias("o"))
     )
@@ -195,8 +195,8 @@ def q_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tot = cells.agg(F.sum("o").alias("n"))
     margins = (
         grid.join(row_tot, "w")
-        .join(F.broadcast(col_tot), "lang")
-        .crossJoin(F.broadcast(n_tot))
+        .join(col_tot, "lang")
+        .crossJoin(n_tot)
         .select("w", "o", "row_tot", "col_tot", "n")
     )
     e = F.col("row_tot") * F.col("col_tot") / F.col("n")
@@ -392,7 +392,7 @@ def q_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     step = F.col("t") / 25
     anchor = F.col("t") / 50
     return (
-        c.crossJoin(F.broadcast(tot))
+        c.crossJoin(tot)
         .filter(
             F.floor((F.col("cum") - anchor) / step)
             > F.floor((F.col("cum") - F.col("n_chars") - anchor) / step)
@@ -450,8 +450,8 @@ def q_lang_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = F.col("c") / F.col("n")
     return (
-        cells.join(F.broadcast(tot), "source")
-        .crossJoin(F.broadcast(n_langs_tot))
+        cells.join(tot, "source")
+        .crossJoin(n_langs_tot)
         .groupBy("source", "n", "k")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_langs"),
@@ -590,7 +590,7 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("first_doc") / 50).cast("bigint").alias("bucket")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_new_types"))
     joined = (
-        tokens_per_bucket.join(F.broadcast(new_types), "bucket", "left")
+        tokens_per_bucket.join(new_types, "bucket", "left")
         .select(
             "bucket",
             "n_tokens",
@@ -824,7 +824,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
-    return s.crossJoin(F.broadcast(n_tok)).select(
+    return s.crossJoin(n_tok).select(
         F.col("n").cast("bigint").alias("n_types"),
         "n_tokens",
         rnd(slope, 4).alias("slope"),
@@ -921,9 +921,9 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r_star = (F.col("r") + F.lit(1.0)) * F.col("n_r_next") / F.col("n_r")
     return (
-        fof.join(F.broadcast(nxt), "r")
+        fof.join(nxt, "r")
         .filter(F.col("r") <= 10)
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "r",
             "n_r",
@@ -986,7 +986,7 @@ def q_js_divergence_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     tot = c.groupBy("lang").agg(F.sum("c").cast("bigint").alias("n"))
-    p = c.join(F.broadcast(tot), "lang").select(
+    p = c.join(tot, "lang").select(
         "lang", "w", (F.col("c") / F.col("n").cast("double")).alias("p")
     )
     a = p.select(
@@ -1001,7 +1001,7 @@ def q_js_divergence_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(2.0) * F.col("pb") / (F.col("pa") + F.col("pb"))
     )
     return (
-        a.join(F.broadcast(b), "w")
+        a.join(b, "w")
         .filter(F.col("lang_a") < F.col("lang_b"))
         .groupBy("lang_a", "lang_b")
         .agg(
@@ -1154,7 +1154,7 @@ def q_sinkhorn_ot(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tot = sm.agg(F.sum("cl").cast("double").alias("t"))
         return (
-            sm.crossJoin(F.broadcast(tot))
+            sm.crossJoin(tot)
             .select(
                 F.col("tok").alias(out),
                 (F.col("cl") / F.col("t")).alias(f"{out}_m"),
@@ -1186,7 +1186,7 @@ def q_sinkhorn_ot(spark: SparkSession, sf_dir: str) -> DataFrame:
             kern.join(F.broadcast(u), "i")
             .groupBy("j")
             .agg(F.sum(F.col("k") * F.col("u")).alias("kv"))
-            .join(F.broadcast(b), "j")
+            .join(b, "j")
             .select("j", (F.col("j_m") / F.col("kv")).alias("v"))
             .localCheckpoint(eager=True)
         )
@@ -1194,7 +1194,7 @@ def q_sinkhorn_ot(spark: SparkSession, sf_dir: str) -> DataFrame:
             kern.join(F.broadcast(v), "j")
             .groupBy("i")
             .agg(F.sum(F.col("k") * F.col("v")).alias("ku"))
-            .join(F.broadcast(a), "i")
+            .join(a, "i")
             .select("i", (F.col("i_m") / F.col("ku")).alias("u"))
             .localCheckpoint(eager=True)
         )
@@ -1211,7 +1211,7 @@ def q_sinkhorn_ot(spark: SparkSession, sf_dir: str) -> DataFrame:
         gap = (
             plan.groupBy("j", "v")
             .agg(F.sum(F.col("k") * F.col("u")).alias("ks"))
-            .join(F.broadcast(b), "j")
+            .join(b, "j")
             .agg(
                 F.sum(F.abs(F.col("v") * F.col("ks") - F.col("j_m"))).alias(
                     "gap"
@@ -1219,7 +1219,7 @@ def q_sinkhorn_ot(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows.append(
-            cost.crossJoin(F.broadcast(gap)).select(
+            cost.crossJoin(gap).select(
                 F.lit(t).cast("int").alias("iter"),
                 F.lit(_OT_VOCAB).cast("int").alias("n_vocab"),
                 rnd("cost", 6).alias("sinkhorn_cost"),

@@ -2096,7 +2096,7 @@ def global_ntile(
         .cast("int")
     )
     return (
-        ranked.crossJoin(F.broadcast(total))
+        ranked.crossJoin(total)
         .withColumn(out_col, tile)
         .drop("rn", "_N")
     )
@@ -2236,7 +2236,7 @@ def pagerank(pairs: DataFrame, iters: int = PR_ITERS, damping: float = PR_DAMP) 
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     n_tab = nodes.agg(F.count(F.lit(1)).alias("n"))
-    pr = nodes.crossJoin(F.broadcast(n_tab)).select(
+    pr = nodes.crossJoin(n_tab).select(
         "node", (F.lit(1.0) / F.col("n")).alias("pr")
     )
     for _ in range(iters):
@@ -2247,7 +2247,7 @@ def pagerank(pairs: DataFrame, iters: int = PR_ITERS, damping: float = PR_DAMP) 
             .agg(F.sum(F.col("pr") / F.col("d")).alias("c"))
         )
         pr = (
-            contrib.crossJoin(F.broadcast(n_tab))
+            contrib.crossJoin(n_tab)
             .select(
                 F.col("dst").alias("node"),
                 (
@@ -2683,8 +2683,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ne = edges.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
     return (
-        nn.join(F.broadcast(ne))
-        .join(F.broadcast(tri))
+        nn.join(ne)
+        .join(tri)
         .select(
             "n_nodes", "n_edges", "n_triangles", "n_wedges",
             rnd(
@@ -2772,7 +2772,7 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_union("a_set", "b_set")
     ).cast("double")
     truth = (
-        corpus.join(F.broadcast(probes), F.col("a_id") != F.col("b_id"))
+        corpus.join(probes, F.col("a_id") != F.col("b_id"))
         .filter(jac >= LSH_AUDIT_T)
         .select("a_id", "b_id")
     )
@@ -2793,8 +2793,8 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_caught")
     )
     return (
-        nt.join(F.broadcast(nc))
-        .join(F.broadcast(caught))
+        nt.join(nc)
+        .join(caught)
         .select(
             "n_truth", "n_candidates", "n_caught",
             rnd(
@@ -3075,7 +3075,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_edges = edges.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
     return (
         sym.agg(rnd(F.corr("dx", "dy"), 6).alias("assortativity"))
-        .crossJoin(F.broadcast(n_edges))
+        .crossJoin(n_edges)
         .select("n_edges", "assortativity")
     )
 
@@ -3385,7 +3385,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ncomm = per_comm.agg(F.count(F.lit(1)).cast("bigint").alias("nc"))
     return (
-        per_comm.crossJoin(F.broadcast(m))
+        per_comm.crossJoin(m)
         .agg(
             rnd(
                 F.sum(
@@ -3397,7 +3397,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("modularity"),
             F.first(F.col("m")).cast("bigint").alias("n_edges"),
         )
-        .crossJoin(F.broadcast(ncomm))
+        .crossJoin(ncomm)
         .select(
             F.col("nc").alias("n_communities"),
             "n_edges",
@@ -3809,7 +3809,7 @@ def q_hits_hubs_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(ssum("a").alias("h"))
         )
         hn = hub_raw.agg(ssum("h").alias("s"))
-        hub = hub_raw.crossJoin(F.broadcast(hn)).select(
+        hub = hub_raw.crossJoin(hn).select(
             F.col("a_id").alias("node"), (F.col("h") / F.col("s")).alias("h")
         )
         auth_raw = (
@@ -3818,7 +3818,7 @@ def q_hits_hubs_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(ssum("h").alias("ar"))
         )
         an = auth_raw.agg(ssum("ar").alias("s"))
-        auth = auth_raw.crossJoin(F.broadcast(an)).select(
+        auth = auth_raw.crossJoin(an).select(
             F.col("b_id").alias("node"), (F.col("ar") / F.col("s")).alias("a")
         )
     return (
@@ -3932,7 +3932,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
     edges = (
-        co.crossJoin(F.broadcast(nt))
+        co.crossJoin(nt)
         .filter(F.col("c") >= F.greatest(F.lit(2), F.floor(F.col("n") / 600)))
         .select("i", "j")
         .localCheckpoint(eager=True)
@@ -4224,8 +4224,8 @@ def q_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scheme dimension whenever the corpus is non-empty.
     return (
         cand.join(F.broadcast(covered), "scheme", "left")
-        .crossJoin(F.broadcast(truth))
-        .crossJoin(F.broadcast(n))
+        .crossJoin(truth)
+        .crossJoin(n)
         .withColumn(
             "covered_pairs",
             F.coalesce(F.col("covered_pairs"), F.lit(0).cast("bigint")),
@@ -4838,9 +4838,9 @@ def q_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint").alias("n_delta_docs"),
     )
     return (
-        nd.crossJoin(F.broadcast(base_pairs.select(F.col("n").alias("base_pairs"))))
-        .crossJoin(F.broadcast(delta_pairs.select(F.col("n").alias("delta_new_pairs"))))
-        .crossJoin(F.broadcast(full_pairs.select(F.col("n").alias("full_pairs"))))
+        nd.crossJoin(base_pairs.select(F.col("n").alias("base_pairs")))
+        .crossJoin(delta_pairs.select(F.col("n").alias("delta_new_pairs")))
+        .crossJoin(full_pairs.select(F.col("n").alias("full_pairs")))
         .select(
             "n_base_docs",
             "n_delta_docs",
@@ -5000,7 +5000,7 @@ def q_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     restart = F.when(
         F.col("is_seed").isNotNull(), F.lit(1.0) / PPR_SEEDS
     ).otherwise(F.lit(0.0))
-    pr = nodes.join(F.broadcast(seeds), "node", "left").select(
+    pr = nodes.join(seeds, "node", "left").select(
         "node", restart.alias("pr")
     )
     for _ in range(PPR_ITERS):
@@ -5012,7 +5012,7 @@ def q_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumnRenamed("dst", "node")
         )
         pr = (
-            nodes.join(F.broadcast(seeds), "node", "left")
+            nodes.join(seeds, "node", "left")
             .join(contrib, "node", "left")
             .select(
                 "node",
@@ -5026,7 +5026,7 @@ def q_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     return (
-        pr.join(F.broadcast(seeds), "node", "left")
+        pr.join(seeds, "node", "left")
         .select(
             F.col("node").alias("doc_id"),
             rnd("pr", 6).alias("ppr"),

@@ -351,7 +351,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         sh.filter(F.col("doc_id") % 97 != 0)
-        .join(F.broadcast(bench), "shingle")
+        .join(bench, "shingle")
         .groupBy("doc_id")
         .agg(F.countDistinct("shingle").alias("n_shared_shingles"))
     )
@@ -451,7 +451,7 @@ def q_source_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tokens").alias("total_tokens"),
         F.avg("q").alias("avg_q"),
     )
-    return agg.crossJoin(F.broadcast(total)).select(
+    return agg.crossJoin(total).select(
         "source",
         "n_docs",
         "total_tokens",
@@ -581,7 +581,7 @@ def q_data_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = srcs.agg(
         F.sum("n_docs").alias("total"), F.count(F.lit(1)).alias("n_sources")
     )
-    fracs = srcs.crossJoin(F.broadcast(stats)).select(
+    fracs = srcs.crossJoin(stats).select(
         "source",
         "n_docs",
         F.least(
@@ -797,8 +797,8 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.lit(4294967296.0)
     )
     s4 = (
-        s3.join(F.broadcast(src3), "source")
-        .crossJoin(F.broadcast(stats3))
+        s3.join(src3, "source")
+        .crossJoin(stats3)
         .filter(u < frac)
         .select("doc_id", "source")
     )
@@ -962,7 +962,7 @@ def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.sqrt("n_docs")).alias("sum_pow"), F.sum("n_docs").alias("total")
     )
     share = F.sqrt(F.col("n_docs")) / F.col("sum_pow")
-    fracs = srcs.crossJoin(F.broadcast(stats)).select(
+    fracs = srcs.crossJoin(stats).select(
         "source",
         "n_docs",
         share.alias("share"),
@@ -1114,7 +1114,7 @@ def q_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         rem + ((F.col("rn") - big - 1) / qsize).cast("bigint") + 1
     )
     return (
-        ranked.crossJoin(F.broadcast(total))
+        ranked.crossJoin(total)
         .select("doc_id", "difficulty", shard.cast("bigint").alias("shard"))
     )
 
@@ -1281,11 +1281,7 @@ def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             child.agg(F.count(F.lit(1)).cast("bigint").alias("n_child"))
             .crossJoin(
-                F.broadcast(
-                    orphans.agg(
-                        F.count(F.lit(1)).cast("bigint").alias("n_orphans")
-                    )
-                )
+                orphans.agg(F.count(F.lit(1)).cast("bigint").alias("n_orphans"))
             )
             .select(F.lit(fk).alias("fk"), "n_child", "n_orphans")
         )
@@ -1396,7 +1392,7 @@ def q_filter_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("id").cast("double") / 10).alias("threshold")
     )
     conf = (
-        F.broadcast(thr)
+        thr
         .join(grp)
         .groupBy("threshold")
         .agg(
@@ -1422,7 +1418,7 @@ def q_filter_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tp, fp = F.col("tp"), F.col("fp")
     n, n_pos, prs = F.col("n"), F.col("n_pos"), F.col("prs")
     return (
-        conf.join(F.broadcast(stats))
+        conf.join(stats)
         .select(
             "threshold",
             "tp",
@@ -1539,9 +1535,9 @@ def q_bias_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt, n, lc, sc = F.col("cnt"), F.col("n"), F.col("lc"), F.col("sc")
     e = lc * sc / n
     return (
-        c.join(F.broadcast(rl), "lang")
-        .join(F.broadcast(cs), "source")
-        .join(F.broadcast(tot))
+        c.join(rl, "lang")
+        .join(cs, "source")
+        .join(tot)
         .groupBy("n", "n_cells")
         .agg(
             rnd(F.sum((cnt / n) * F.log(cnt * n / (lc * sc))), 6).alias(
@@ -1685,7 +1681,7 @@ def q_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = assigned.agg(F.sum("n_tokens").cast("double").alias("all_tokens"))
     return (
-        assigned.join(F.broadcast(tot))
+        assigned.join(tot)
         .groupBy("shard", "all_tokens")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1741,7 +1737,7 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = global_sort_ranks(s, ["n_words", "doc_id"])
     n = ranked.agg(F.count(F.lit(1)).alias("n"))
     return (
-        ranked.join(F.broadcast(n))
+        ranked.join(n)
         .select(
             "doc_id", "n_words",
             rnd((F.col("rn") - 1) / (F.col("n") - 1).cast("double"), 6).alias(
@@ -1863,7 +1859,7 @@ def q_quality_band_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = global_sort_ranks(s, ["neg_score", "doc_id"])
     n = ranked.agg(F.count(F.lit(1)).alias("n"))
-    banded = ranked.join(F.broadcast(n)).select(
+    banded = ranked.join(n).select(
         "doc_id",
         F.when(F.col("rn") * 3 <= F.col("n"), "head")
         .when(F.col("rn") * 3 <= 2 * F.col("n"), "middle")
@@ -1949,7 +1945,7 @@ def q_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("avail_tokens").over(ow), F.lit(0)).cast("bigint"),
     )
     return (
-        ranked.join(F.broadcast(b))
+        ranked.join(b)
         .select(
             "source", "avail_tokens",
             rnd("quality", 6).alias("quality"),
@@ -2170,7 +2166,7 @@ def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust,
         (orders.o_custkey == cust.c_custkey)
         & (orders.salt == cust.salt.cast("long")),
-    ).join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+    ).join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
     return (
         joined.groupBy("n_name")
         .agg(
@@ -2489,7 +2485,7 @@ def q_priority_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     est = (
         topk1.filter(F.col("rn") <= _PRIO_K)
-        .crossJoin(F.broadcast(tau))
+        .crossJoin(tau)
         .agg(
             F.aggregate(
                 F.array_sort(
@@ -2510,7 +2506,7 @@ def q_priority_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         est.crossJoin(F.broadcast(tau))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "n_sample",
             rnd("tau", 4).alias("tau"),
@@ -2598,7 +2594,7 @@ def q_water_filling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.orderBy("demand", "source")
     ranked = (
-        d.crossJoin(F.broadcast(tot))
+        d.crossJoin(tot)
         .withColumn("i", F.row_number().over(w).cast("bigint"))
         .withColumn(
             "cum_before",
@@ -2623,13 +2619,13 @@ def q_water_filling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("istar")
     )
     level = (
-        ranked.crossJoin(F.broadcast(cutoff))
+        ranked.crossJoin(cutoff)
         .filter(F.col("i") == F.col("istar"))
         .agg(F.coalesce(F.max("lambda_i"), F.lit(0.0)).alias("lam"))
     )
     return (
-        ranked.crossJoin(F.broadcast(cutoff))
-        .crossJoin(F.broadcast(level))
+        ranked.crossJoin(cutoff)
+        .crossJoin(level)
         .select(
             "source",
             "demand",
@@ -2744,7 +2740,7 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rel"),
     )
     res = (
-        b.crossJoin(F.broadcast(g.select("y_all")))
+        b.crossJoin(g.select("y_all"))
         .agg(
             F.sum(
                 F.col("n")
@@ -2754,7 +2750,7 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        g.crossJoin(F.broadcast(res))
+        g.crossJoin(res)
         .select(
             F.col("nn").alias("n_docs"),
             rnd("brier", 6).alias("brier"),
@@ -2860,7 +2856,7 @@ def q_knapsack_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint").alias("unit"),
     )
     items = (
-        src.crossJoin(F.broadcast(budget))
+        src.crossJoin(budget)
         .select(
             "source",
             F.floor(
@@ -2890,7 +2886,7 @@ def q_knapsack_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("best")
     )
     return (
-        folded.crossJoin(F.broadcast(budget))
+        folded.crossJoin(budget)
         .select(
             F.explode(F.sequence(F.lit(0), F.lit(G))).alias("g"),
             "best",
@@ -3017,7 +3013,7 @@ def q_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = ranked.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     rp = (
-        pos.crossJoin(F.broadcast(agg.select("n_pos")))
+        pos.crossJoin(agg.select("n_pos"))
         .filter(F.col("grn") <= F.col("n_pos"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("hits_at_npos"))
     )
@@ -3025,9 +3021,9 @@ def q_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("hits_at_50")
     )
     return (
-        agg.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(rp))
-        .crossJoin(F.broadcast(p50))
+        agg.crossJoin(tot)
+        .crossJoin(rp)
+        .crossJoin(p50)
         .select(
             "n",
             "n_pos",
@@ -3256,7 +3252,7 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("lang").cast("bigint").alias("n_lang"),
         F.countDistinct("source").cast("bigint").alias("n_src"),
     )
-    cur = cells.crossJoin(F.broadcast(tot)).withColumn(
+    cur = cells.crossJoin(tot).withColumn(
         "w", F.lit(1.0).cast("double")
     )
     for part, tcol in (
@@ -3355,8 +3351,8 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cnt",
     )
     terms = (
-        classes.crossJoin(F.broadcast(glob))
-        .crossJoin(F.broadcast(tot))
+        classes.crossJoin(glob)
+        .crossJoin(tot)
         .join(
             x,
             (F.col("xs") == F.col("source"))
@@ -3377,7 +3373,7 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        terms.crossJoin(F.broadcast(tot))
+        terms.crossJoin(tot)
         .select(
             "source",
             "len_band",
@@ -3556,7 +3552,7 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w1").alias("t1"), F.sum("w2").alias("t2")
     )
     return (
-        it2.crossJoin(F.broadcast(tot))
+        it2.crossJoin(tot)
         .select(
             "lang",
             "wins",
@@ -3692,7 +3688,7 @@ def q_rank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     offdiag = (
         nij.join(losses, ["i", "j"], "left")
-        .crossJoin(F.broadcast(dmax))
+        .crossJoin(dmax)
         .select(
             "i",
             "j",
@@ -3711,7 +3707,7 @@ def q_rank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     k = deg.agg(F.count(F.lit(1)).cast("double").alias("k"))
     pi1 = (
-        p.crossJoin(F.broadcast(k))
+        p.crossJoin(k)
         .groupBy(F.col("j").alias("lang"))
         .agg(F.sum(F.col("p") / F.col("k")).alias("v1"))
     )
@@ -3812,7 +3808,7 @@ def q_coreset_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embeddings otherwise. Pass 1 = mean, pass 2 = distances — the
     # paper's exact two-pass shape.
     d2 = (
-        vecs.crossJoin(F.broadcast(mu))
+        vecs.crossJoin(mu)
         .select(
             "vec_id",
             F.aggregate(
@@ -3827,7 +3823,7 @@ def q_coreset_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("dist_sq").alias("sum_d2"),
     )
-    s = d2.crossJoin(F.broadcast(tot)).withColumn(
+    s = d2.crossJoin(tot).withColumn(
         "sens",
         F.lit(0.5) / F.col("n") + F.lit(0.5) * F.col("dist_sq") / F.col("sum_d2"),
     )
@@ -4060,7 +4056,7 @@ def q_greedy_maxcover(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = (
             dt_w
             if covered is None
-            else dt_w.join(F.broadcast(covered), "tok", "left_anti")
+            else dt_w.join(covered, "tok", "left_anti")
         )
         gains = cand.groupBy("doc_id").agg(
             F.sum("w").cast("bigint").alias("g")
@@ -4187,7 +4183,7 @@ def q_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     srcs = pdn.select("source").distinct()
     n_src = srcs.agg(F.count(F.lit(1)).alias("n"))
-    weights = srcs.crossJoin(F.broadcast(n_src)).select(
+    weights = srcs.crossJoin(n_src).select(
         "source", (F.lit(1.0) / F.col("n")).alias("w")
     ).localCheckpoint(eager=True)
     out_rows = []
@@ -4208,7 +4204,7 @@ def q_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("w") * F.exp(_DOREMI_ETA * F.col("kl"))).alias("uw"),
         ).localCheckpoint(eager=True)
         z = u.agg(F.sum("uw").alias("z"))
-        weights = u.crossJoin(F.broadcast(z)).select(
+        weights = u.crossJoin(z).select(
             "source", (F.col("uw") / F.col("z")).alias("w")
         ).localCheckpoint(eager=True)
         out_rows.append(

@@ -58,7 +58,7 @@ def brute_force_topk(
     q = queries.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
     sims = (
-        c.join(F.broadcast(q), q.query_id != c.neighbor_id)
+        c.join(q, q.query_id != c.neighbor_id)
         .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
@@ -132,7 +132,7 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = vecs.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
                     F.col("label").alias("clabel"))
     sims = (
-        c.join(F.broadcast(q), (q.label == c.clabel) & (q.query_id != c.neighbor_id))
+        c.join(q, (q.label == c.clabel) & (q.query_id != c.neighbor_id))
         .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
@@ -242,7 +242,7 @@ def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
                  F.col("bucket").alias("cbucket"))
     sims = c.join(
-        F.broadcast(q), (q.bucket == c.cbucket) & (q.query_id != c.neighbor_id)
+        q, (q.bucket == c.cbucket) & (q.query_id != c.neighbor_id)
     ).withColumn("cos", cosine(F.col("qv"), F.col("cv")))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
@@ -299,7 +299,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = e.groupBy("dim").agg(
         F.min("v").alias("lo"), F.max("v").alias("hi")
     )
-    j = e.join(F.broadcast(stats), "dim")
+    j = e.join(stats, "dim")
     code = F.when(F.col("hi") == F.col("lo"), F.lit(0).cast("bigint")).otherwise(
         F.floor((F.col("v") - F.col("lo")) / (F.col("hi") - F.col("lo")) * 255 + 0.5)
     )
@@ -370,7 +370,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cos").desc(), F.col("neighbor_id")
     )
     approx = (
-        c.join(F.broadcast(q), (q.bucket == c.cbucket) & (q.query_id != c.neighbor_id))
+        c.join(q, (q.bucket == c.cbucket) & (q.query_id != c.neighbor_id))
         .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
@@ -428,7 +428,7 @@ def assign_to_centroids(vecs: DataFrame, seeds_row: DataFrame) -> DataFrame:
         lambda acc, s: F.when(s["cos"] > acc["cos"], s).otherwise(acc),
     )
     return (
-        vecs.crossJoin(F.broadcast(seeds_row))
+        vecs.crossJoin(seeds_row)
         .select("vec_id", "v", best.alias("best"))
         .select(
             "vec_id",
@@ -826,7 +826,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, s: F.when(s["cos"] > acc["cos"], s).otherwise(acc),
         )
 
-    coded = halves.crossJoin(F.broadcast(packed)).select(
+    coded = halves.crossJoin(packed).select(
         "vec_id",
         best_for("v0", "c0").alias("b0"),
         best_for("v1", "c1").alias("b1"),
@@ -913,7 +913,7 @@ def pq_encode(vecs: DataFrame, codebook_row: DataFrame) -> DataFrame:
             lambda acc, s: F.when(s["cos"] > acc["cos"], s).otherwise(acc),
         )["code"]
 
-    coded = halves.crossJoin(F.broadcast(codebook_row)).select(
+    coded = halves.crossJoin(codebook_row).select(
         "vec_id",
         "label",
         code_for("v0", "c0").alias("code0"),
@@ -947,7 +947,7 @@ def ivfpq_topk(
     coded = pq_encode(vecs, codebook_row)
     queries = (
         vecs.filter(F.col("vec_id") < n_queries)
-        .crossJoin(F.broadcast(codebook_row))
+        .crossJoin(codebook_row)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("label").alias("qcell"),
@@ -970,7 +970,7 @@ def ivfpq_topk(
     return (
         coded.withColumnRenamed("vec_id", "neighbor_id")
         .join(
-            F.broadcast(queries),
+            queries,
             (F.col("qcell") == F.col("label"))
             & (F.col("query_id") != F.col("neighbor_id")),
         )
@@ -1182,7 +1182,7 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_cur = (F.col("cur_cnt") + 1.0) / (F.col("n_cur") + 4.0)
     p_ref = (F.col("ref_cnt") + 1.0) / (F.col("n_ref") + 4.0)
     return (
-        cnt.join(F.broadcast(tot), "dim")
+        cnt.join(tot, "dim")
         .groupBy("dim", "n_ref", "n_cur")
         .agg(F.sum((p_cur - p_ref) * F.log(p_cur / p_ref)).alias("psi"))
         .select(
@@ -1263,7 +1263,7 @@ def q_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("sh", lambda s: s["hi"]).alias("his"),
     )
     los, his = F.col("los"), F.col("his")
-    dq = vecs.crossJoin(F.broadcast(stats_row)).select(
+    dq = vecs.crossJoin(stats_row).select(
         "vec_id",
         F.transform(
             "v",
@@ -1370,8 +1370,8 @@ def q_kmeanspp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform("svs", lambda s: cosine(F.col("v"), s))
         )
         cand = (
-            e.join(F.broadcast(seeds.select("vec_id")), "vec_id", "left_anti")
-            .crossJoin(F.broadcast(seeds_arr))
+            e.join(seeds.select("vec_id"), "vec_id", "left_anti")
+            .crossJoin(seeds_arr)
             .select("vec_id", "v", mc.alias("mc"))
         )
         pick = cand.orderBy(F.col("mc").asc(), "vec_id").limit(1)
@@ -1453,7 +1453,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         a.withColumn("pick_rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("pick_rank") <= 20)
-        .join(F.broadcast(counts), "centroid_id")
+        .join(counts, "centroid_id")
         .select("centroid_id", "vec_id", "pick_rank", "n_members")
     )
 
@@ -1565,7 +1565,7 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
-    pairs = a.join(F.broadcast(b), F.col("a_id") < F.col("b_id"))
+    pairs = a.join(b, F.col("a_id") < F.col("b_id"))
     so = sq_l2(F.col("av"), F.col("bv"))
     sp = sq_l2(F.col("ap"), F.col("bp"))
     return pairs.select(
@@ -1623,7 +1623,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("nlabel"),
     )
     sims = (
-        c.join(F.broadcast(q), F.col("qlabel") != F.col("nlabel"))
+        c.join(q, F.col("qlabel") != F.col("nlabel"))
         .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
         .filter(F.col("cos") < 0.99)
     )
@@ -1691,7 +1691,7 @@ def q_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = vecs.filter(F.col("vec_id") >= 20).select(
         F.col("vec_id").alias("cand_id"), F.col("v").alias("cv")
     )
-    s = c.join(F.broadcast(q)).select(
+    s = c.join(q).select(
         "query_id", "cand_id", cosine(F.col("qv"), F.col("cv")).alias("cos")
     )
     wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "cand_id")
@@ -1886,7 +1886,7 @@ def q_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("cv"),
         F.col("label").alias("nlabel"),
     )
-    sims = t.join(F.broadcast(q)).select(
+    sims = t.join(q).select(
         "query_id", "label_true", "nlabel", "nid",
         cosine(F.col("qv"), F.col("cv")).alias("cos"),
     )
@@ -2190,7 +2190,7 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so the eager localCheckpoint is a trivially cheap action
         # that keeps every step's plan constant-sized.
         cur = (
-            y.crossJoin(F.broadcast(norm))
+            y.crossJoin(norm)
             .select(F.col("i").alias("j"), (F.col("y") / F.col("nrm")).alias("x"))
             .localCheckpoint(eager=True)
         )
@@ -2208,7 +2208,7 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("xi") * F.col("g") * F.col("xj")).alias("lam"))
     )
     return (
-        final.crossJoin(F.broadcast(lam))
+        final.crossJoin(lam)
         .select(
             "dim_idx",
             rnd("x", 6).alias("v1"),
@@ -2554,7 +2554,7 @@ def q_silhouette_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: s["cos"],
         )
     )
-    per = vecs.crossJoin(F.broadcast(seeds)).select(
+    per = vecs.crossJoin(seeds).select(
         "label", own.alias("da"), other.alias("db")
     )
     g = F.greatest(F.col("da"), F.col("db"))
@@ -2640,8 +2640,8 @@ def q_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     js = local_df(spark, [(1,), (2,), (3,), (4,)], "j int")
     init = (
         vecs.select("vec_id")
-        .crossJoin(F.broadcast(js))
-        .crossJoin(F.broadcast(n))
+        .crossJoin(js)
+        .crossJoin(n)
         .select(
             F.col("vec_id").alias("u"),
             ((F.col("vec_id") * 48271 + F.col("j") * 1009) % F.col("n")).alias("w"),
@@ -2880,7 +2880,7 @@ def q_knn_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sq = F.zip_with("tv", "v", lambda x, y: (x - y) * (x - y))
     d = (
-        train.join(F.broadcast(tests), F.col("test_id") != F.col("train_id"))
+        train.join(tests, F.col("test_id") != F.col("train_id"))
         .withColumn("ind", (F.col("label") == F.col("ty")).cast("double"))
         .withColumn(
             "dist", F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x)
@@ -3098,7 +3098,7 @@ def q_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         c.join(
-            F.broadcast(probes),
+            probes,
             (F.col("cbucket") == F.col("pbucket"))
             & (F.col("neighbor_id") != F.col("query_id")),
         )
@@ -3243,7 +3243,7 @@ def q_rbo_ranking_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ivf_k = (
         c.join(
-            F.broadcast(q),
+            q,
             (q.label == c.clabel) & (q.query_id != c.neighbor_id),
         )
         .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
@@ -3437,7 +3437,7 @@ def q_geometric_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     both = m3_arr.join(
-        F.broadcast(m0_arr.select("label", F.col("m_arr").alias("c_arr"))),
+        m0_arr.select("label", F.col("m_arr").alias("c_arr")),
         "label",
     ).localCheckpoint(eager=True)
     # final pass: per-point distances to the median AND the mean,
@@ -3574,7 +3574,7 @@ def q_rerank_interaction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stage1 = (
         vecs.join(
-            F.broadcast(q), F.col("query_id") != F.col("vec_id")
+            q, F.col("query_id") != F.col("vec_id")
         )
         .select(
             "query_id",

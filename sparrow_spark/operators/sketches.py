@@ -197,7 +197,7 @@ def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch = countmin_from_counts(exact, "tok", "exact")
     total = exact.agg(F.sum("exact").alias("t"))
     heavy = (
-        exact.join(F.broadcast(total))
+        exact.join(total)
         .filter(F.col("exact") >= 0.01 * F.col("t"))
         .select("tok", "exact")
     )
@@ -255,7 +255,7 @@ def q_bloom_filter_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom = bloom_build(cust.select(F.col("c_custkey").cast("string").alias("k")), "k")
     orders = load_table(spark, sf_dir, "orders")
     return (
-        orders.join(F.broadcast(bloom))
+        orders.join(bloom)
         .filter(
             bloom_might_contain(F.col("o_custkey").cast("string"), F.col("bloom"))
         )
@@ -308,7 +308,7 @@ def q_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = events.agg(
         F.countDistinct("user_id").cast("bigint").alias("n_exact_users")
     )
-    return merged.crossJoin(F.broadcast(exact)).select(
+    return merged.crossJoin(exact).select(
         "n_sketches",
         "n_exact_users",
         "naive_sum_users",
@@ -511,8 +511,8 @@ def q_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     u_est = (KMV_K - 1) * F.lit(4294967296.0) / F.col("hk")
     return (
-        n_both.crossJoin(F.broadcast(hk))
-        .crossJoin(F.broadcast(exact))
+        n_both.crossJoin(hk)
+        .crossJoin(exact)
         .select(
             F.col("n_both").cast("bigint").alias("k_overlap"),
             rnd(u_est, 2).alias("union_est"),
@@ -631,7 +631,7 @@ def q_bloom_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in ("p1", "p2", "p3"):
         hit = (
             hit.join(
-                F.broadcast(bitset.withColumnRenamed("b", f"_{p}")),
+                bitset.withColumnRenamed("b", f"_{p}"),
                 F.col(p) == F.col(f"_{p}"),
                 "left",
             )
@@ -660,8 +660,8 @@ def q_bloom_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_true_negatives_probed"),
         )
-        .crossJoin(F.broadcast(n_ins))
-        .crossJoin(F.broadcast(n_bits))
+        .crossJoin(n_ins)
+        .crossJoin(n_bits)
         .select(
             "n_inserted",
             "n_bits_set",
@@ -859,7 +859,7 @@ def q_countsketch_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = exact.agg(F.sum("exact").alias("t"))
     heavy = (
-        exact.join(F.broadcast(total))
+        exact.join(total)
         .filter(F.col("exact") >= 0.01 * F.col("t"))
         .select("tok", "exact")
     )
@@ -867,7 +867,7 @@ def q_countsketch_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tok", F.explode(db_structs(F.col("tok"))).alias("db")
     ).select("tok", "db.d", "db.bucket", "db.sgn")
     est = (
-        probes.join(F.broadcast(sketch), ["d", "bucket"])
+        probes.join(sketch, ["d", "bucket"])
         .groupBy("tok")
         .agg(
             F.element_at(

@@ -353,7 +353,7 @@ def q_vocab_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = counts.agg(F.sum("n").alias("t"))
     return (
-        counts.join(F.broadcast(total))
+        counts.join(total)
         .filter(F.col("n") >= 0.01 * F.col("t"))
         .select("tok", "n", rnd(F.col("n") / F.col("t"), 6).alias("freq"))
         .orderBy(F.col("n").desc(), "tok")
@@ -393,8 +393,8 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_total"))
     tfidf = F.col("tf") * F.log(F.col("n_total") / F.col("df").cast("double"))
     return (
-        tf.join(F.broadcast(df_t), "tok")
-        .join(F.broadcast(n_docs))
+        tf.join(df_t, "tok")
+        .join(n_docs)
         .filter(tfidf > 2.0)
         .select("doc_id", "tok", rnd(tfidf, 6).alias("tfidf"))
     )
@@ -647,8 +647,8 @@ def q_perplexity_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     denom = F.col("total") + F.col("v")
     p = F.coalesce((F.col("n") + 1) / denom, F.lit(1.0) / denom)
     scored = (
-        toks.crossJoin(F.broadcast(stats))
-        .join(F.broadcast(sample_counts), "tok", "left")
+        toks.crossJoin(stats)
+        .join(sample_counts, "tok", "left")
         .select("doc_id", (-F.log(p)).alias("nll"))
     )
     return scored.groupBy("doc_id").agg(
@@ -733,10 +733,10 @@ def q_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_tgt = F.coalesce((F.col("tn") + 1) / t_denom, F.lit(1.0) / t_denom)
     p_raw = (F.col("rn") + 1) / r_denom
     scored = (
-        toks.crossJoin(F.broadcast(tstats))
-        .crossJoin(F.broadcast(rstats))
-        .join(F.broadcast(tgt), "tok", "left")
-        .join(F.broadcast(raw), "tok")
+        toks.crossJoin(tstats)
+        .crossJoin(rstats)
+        .join(tgt, "tok", "left")
+        .join(raw, "tok")
         .select("doc_id", "lang", (F.log(p_tgt) - F.log(p_raw)).alias("llr"))
     )
     per_doc = scored.groupBy("doc_id", "lang").agg(
@@ -804,8 +804,8 @@ def bm25_scored(spark: SparkSession, docs: DataFrame) -> DataFrame:
     # docs would otherwise rank-shuffle run to run).
     return (
         tf.join(F.broadcast(dfr), "tok")
-        .join(F.broadcast(terms), "tok")
-        .join(F.broadcast(corpus))
+        .join(terms, "tok")
+        .join(corpus)
         .groupBy("query_id", "doc_id")
         .agg(
             F.aggregate(
@@ -1341,10 +1341,10 @@ def q_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_bi = F.coalesce(F.col("nb") / F.col("n_prev"), F.lit(0.0))
     p_uni = F.coalesce((F.col("n_cur") + 1) / denom, F.lit(1.0) / denom)
     scored = (
-        bigrams.crossJoin(F.broadcast(stats))
-        .join(F.broadcast(bi), ["prev", "cur"], "left")
-        .join(F.broadcast(up), "prev", "left")
-        .join(F.broadcast(uc), "cur", "left")
+        bigrams.crossJoin(stats)
+        .join(bi, ["prev", "cur"], "left")
+        .join(up, "prev", "left")
+        .join(uc, "cur", "left")
         .select("doc_id", (-F.log(0.7 * p_bi + 0.3 * p_uni)).alias("nll"))
     )
     return scored.groupBy("doc_id").agg(
@@ -1877,7 +1877,7 @@ def bpe_train_rounds(
                 F.col("cnt").cast("bigint").alias("weighted_count"),
             )
         )
-        state = state.crossJoin(F.broadcast(best)).select(
+        state = state.crossJoin(best).select(
             "word",
             "freq",
             F.replace(
@@ -2116,13 +2116,13 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("lo", F.lit(0.0)).alias("lo"),
             F.col("cum_wt").alias("hi"),
         )
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
     )
     slots = spark.range(NEG_SAMPLES_PER_DOC).select(F.col("id").alias("slot"))
     draws = (
         tok.select("doc_id")
         .distinct()
-        .join(F.broadcast(slots))
+        .join(slots)
         .select(
             "doc_id", "slot",
             (
@@ -2254,14 +2254,14 @@ def q_perplexity_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("prev").alias("b_prev"), F.col("cur").alias("b_cur"), "nb"
     )
     scored = (
-        big.join(F.broadcast(ctx), F.col("prev") == F.col("c_prev"), "left")
+        big.join(ctx, F.col("prev") == F.col("c_prev"), "left")
         .join(
-            F.broadcast(bia),
+            bia,
             (F.col("prev") == F.col("b_prev")) & (F.col("cur") == F.col("b_cur")),
             "left",
         )
-        .join(F.broadcast(contw), F.col("cur") == F.col("w_cur"), "left")
-        .join(F.broadcast(stats))
+        .join(contw, F.col("cur") == F.col("w_cur"), "left")
+        .join(stats)
         .select("doc_id", (-F.log(p)).alias("nll"))
     )
     return scored.groupBy("doc_id").agg(
@@ -2353,7 +2353,7 @@ def q_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = (
         toks.join(
-            F.broadcast(terms.select("tok").distinct()), "tok", "left_semi"
+            terms.select("tok").distinct(), "tok", "left_semi"
         )
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"), F.first("dl").alias("dl"))
@@ -2375,8 +2375,8 @@ def q_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # red in r9).
     scored = (
         tf.join(F.broadcast(dfr), "tok")
-        .join(F.broadcast(terms), "tok")
-        .join(F.broadcast(stats))
+        .join(terms, "tok")
+        .join(stats)
         .groupBy("query_doc", "doc_id")
         .agg(
             F.aggregate(
@@ -2396,7 +2396,7 @@ def q_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mrr = hits.agg(F.avg(F.lit(1.0) / F.col("source_rank")).alias("m"))
     return (
-        hits.join(F.broadcast(mrr))
+        hits.join(mrr)
         .select(
             "query_doc", "source_rank",
             rnd(F.lit(1.0) / F.col("source_rank"), 6).alias("rr"),
@@ -2563,7 +2563,7 @@ def q_zipf_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("alpha_se"),
         )
-        .join(F.broadcast(nv))
+        .join(nv)
         .select("n_tail_terms", "n_vocab", "alpha_mle", "alpha_se")
     )
 
@@ -2718,8 +2718,8 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ks = local_df(spark, [(k,) for k in _COVERAGE_KS], "k bigint")
     return (
-        cum.crossJoin(F.broadcast(total))
-        .join(F.broadcast(ks))
+        cum.crossJoin(total)
+        .join(ks)
         .groupBy("k")
         .agg(
             rnd(
@@ -2843,7 +2843,7 @@ def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     grades = (
-        doc_terms.join(F.broadcast(terms), "tok")
+        doc_terms.join(terms, "tok")
         .groupBy("query_id", "doc_id")
         .agg(F.count_distinct("tok").cast("double").alias("grade"))
     )
@@ -3059,7 +3059,7 @@ def q_unigram_lm_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     picked = chars.unionAll(multi)
     total = picked.agg(F.sum("cnt").cast("double").alias("tot"))
-    vocab = picked.crossJoin(F.broadcast(total)).select(
+    vocab = picked.crossJoin(total).select(
         "piece",
         rnd(F.log(F.col("cnt") / F.col("tot")) * 1000, 0)
         .cast("bigint")
@@ -3072,7 +3072,7 @@ def q_unigram_lm_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dp_expr = UNIGRAM_DP_EXPR
     return (
-        words.crossJoin(F.broadcast(vmap))
+        words.crossJoin(vmap)
         .withColumn("dp", F.expr(dp_expr))
         .select(
             "word",
@@ -3184,9 +3184,9 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_cont = F.col("cont_types") / F.col("n_bigram_types").cast("double")
     p_kn = (F.col("c") - F.lit(0.75)) / F.col("c1") + lam * p_cont
     return (
-        cb.join(F.broadcast(ctx), "w1")
-        .join(F.broadcast(cont), "w2")
-        .crossJoin(F.broadcast(btypes))
+        cb.join(ctx, "w1")
+        .join(cont, "w2")
+        .crossJoin(btypes)
         .select(
             "w1",
             "w2",
@@ -3319,7 +3319,7 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pscore = (
         phrase.join(content, ["doc_id", "grp"])
-        .join(F.broadcast(wstat), "t")
+        .join(wstat, "t")
         .groupBy("p")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_words_x_occ"),

@@ -69,7 +69,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     anchor = ev.agg(F.max("ts").alias("t_max"))
     per_user = (
-        ev.crossJoin(F.broadcast(anchor))
+        ev.crossJoin(anchor)
         .groupBy("user_id")
         .agg(
             (
@@ -320,7 +320,7 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left",
         )
         .filter(F.col("nw").isNull())
-        .crossJoin(F.broadcast(max_w))
+        .crossJoin(max_w)
         .filter(F.col("w") + F.expr("INTERVAL 7 DAY") <= F.col("mw"))
         .select(
             "user_id",
@@ -381,7 +381,7 @@ def q_stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("user_id").alias("mau")
     )
     return (
-        daily.join(F.broadcast(monthly), "m")
+        daily.join(monthly, "m")
         .groupBy("m", "mau")
         .agg(F.avg("dau").alias("avg_dau_raw"))
         .select(
@@ -452,7 +452,7 @@ def q_watermark_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("late_s") > F.col("watermark_s"), 1).otherwise(0)
     )
     return (
-        lateness.crossJoin(F.broadcast(wm))
+        lateness.crossJoin(wm)
         .groupBy("watermark_s")
         .agg(
             dropped.cast("bigint").alias("n_dropped"),
@@ -516,8 +516,8 @@ def q_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = sizes.select(F.col("event_type").alias("type_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("event_type").alias("type_b"), F.col("n").alias("n_b"))
     return (
-        inter.join(F.broadcast(sa), "type_a")
-        .join(F.broadcast(sb), "type_b")
+        inter.join(sa, "type_a")
+        .join(sb, "type_b")
         .select(
             "type_a",
             "type_b",
@@ -628,7 +628,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     risk = (
         global_running_sums(by_t, ["duration_days"], ["cnt_all"])
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "duration_days",
             "d",
@@ -812,7 +812,7 @@ def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_sessions")
     )
     return (
-        sweep.crossJoin(F.broadcast(peak))
+        sweep.crossJoin(peak)
         .filter(F.col("concurrent") == F.col("peak"))
         .groupBy("peak")
         .agg(
@@ -820,7 +820,7 @@ def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "first_peak_at"
             )
         )
-        .crossJoin(F.broadcast(n_sessions))
+        .crossJoin(n_sessions)
         .select(
             F.col("peak").cast("bigint").alias("peak_concurrent"),
             "first_peak_at",
@@ -1141,7 +1141,7 @@ def q_coverage_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     types = ev.select("event_type").distinct()
     grid = (
-        types.crossJoin(F.broadcast(bounds))
+        types.crossJoin(bounds)
         .select(
             "event_type",
             F.explode(
@@ -1185,7 +1185,7 @@ def q_coverage_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "left",
         )
-        .crossJoin(F.broadcast(expected))
+        .crossJoin(expected)
         .select(
             "event_type",
             "n_expected_hours",
@@ -1232,7 +1232,7 @@ def q_rolling_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     days = du.select("d").distinct().select(F.col("d").alias("t_d"))
     return (
-        F.broadcast(days)
+        days
         .join(
             du,
             (du.d <= F.col("t_d"))
@@ -1311,7 +1311,7 @@ def q_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("user_id").cast("double").alias("n_active"))
     )
     rates = (
-        active.join(F.broadcast(cohort_n), "fw")
+        active.join(cohort_n, "fw")
         .filter(F.col("offset_wk") >= 1)
         .groupBy("offset_wk")
         .agg(F.avg(F.col("n_active") / F.col("n0")).alias("rate"))
@@ -1631,9 +1631,9 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("item").alias("consequent"), F.col("n_item").alias("n_consequent")
     )
     return (
-        pair.join(F.broadcast(na), "antecedent")
-        .join(F.broadcast(nc), "consequent")
-        .crossJoin(F.broadcast(nt))
+        pair.join(na, "antecedent")
+        .join(nc, "consequent")
+        .crossJoin(nt)
         .select(
             "antecedent",
             "consequent",
@@ -1771,7 +1771,7 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ss = spark.range(16).select(F.col("id").cast("bigint").alias("s"))
     v = (
         ss.join(
-            F.broadcast(cm),
+            cm,
             cm.mask.bitwiseAND(ss.s) == cm.mask,
             "left",
         )
@@ -1809,7 +1809,7 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         terms.groupBy("channel", "bit")
         .agg(F.sum("t24").cast("bigint").alias("shapley_24"))
-        .crossJoin(F.broadcast(span))
+        .crossJoin(span)
         .select(
             "channel",
             "bit",
@@ -2269,7 +2269,7 @@ def q_attribution_window_sensitivity(
     wdf = local_df(spark, [(h,) for h in _ATTR_WINDOWS_H], "h int")
     hit = F.col("lag_us") <= F.col("h").cast("bigint") * 3600000000
     return (
-        wdf.crossJoin(F.broadcast(tot))
+        wdf.crossJoin(tot)
         .join(lagged)
         .groupBy(F.col("h").alias("window_hours"), F.col("n_purchases"))
         .agg(

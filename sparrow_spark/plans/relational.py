@@ -99,7 +99,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
             rnd(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
@@ -143,13 +143,13 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = _t(spark, sf_dir, "region")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .join(
-            F.broadcast(supp),
+            supp,
             (li.l_suppkey == supp.s_suppkey) & (cust.c_nationkey == supp.s_nationkey),
         )
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(
             rnd(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
@@ -220,7 +220,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_custkey", "c_name")
         .agg(
             rnd(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
@@ -361,7 +361,7 @@ def q_join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = _t(spark, sf_dir, "supplier")
     cust = _t(spark, sf_dir, "customer")
     return (
-        F.broadcast(supp)
+        supp
         .join(
             cust,
             (supp.s_nationkey == cust.c_nationkey) & (supp.s_acctbal > cust.c_acctbal),
@@ -385,7 +385,7 @@ def q_join_using_natural(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
     return nation.join(
-        F.broadcast(region), nation.n_regionkey == region.r_regionkey
+        region, nation.n_regionkey == region.r_regionkey
     ).select("n_nationkey", "n_name", "r_name")
 
 
@@ -511,8 +511,8 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
     joined = cust.join(
-        F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
-    ).join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        nation, cust.c_nationkey == nation.n_nationkey
+    ).join(region, nation.n_regionkey == region.r_regionkey)
     return joined.rollup("r_name", "n_name").agg(F.count(F.lit(1)).alias("n_cust"))
 
 
@@ -694,7 +694,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     return (
         cust.join(
-            F.broadcast(supp),
+            supp,
             (cust.c_acctbal >= supp.s_acctbal - 100) & (cust.c_acctbal <= supp.s_acctbal + 100),
         )
         .groupBy("s_suppkey")
@@ -758,7 +758,7 @@ def q_join_cardinality_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     act = li.join(orders, F.col("l_orderkey") == F.col("o_orderkey")).agg(
         F.count(F.lit(1)).cast("bigint").alias("actual_rows")
     )
-    return est.join(F.broadcast(act)).select(
+    return est.join(act).select(
         "est_rows",
         "actual_rows",
         rnd(

@@ -153,7 +153,7 @@ def q_expectation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     refv = (
         li.join(
-            F.broadcast(orders.select("o_orderkey")),
+            orders.select("o_orderkey"),
             li["l_orderkey"] == F.col("o_orderkey"),
             "left_anti",
         )
@@ -728,7 +728,7 @@ def q_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     brk = q_at(25, "q25").crossJoin(q_at(50, "q50")).crossJoin(q_at(75, "q75"))
-    sym = daily.crossJoin(F.broadcast(brk)).select(
+    sym = daily.crossJoin(brk).select(
         "day",
         F.when(F.col("y") <= F.col("q25"), "a")
         .when(F.col("y") <= F.col("q50"), "b")
@@ -841,7 +841,7 @@ def q_binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = F.col
     cand1 = (
-        idx.crossJoin(F.broadcast(tot))
+        idx.crossJoin(tot)
         .filter(c("i") < c("n"))
         .withColumn(
             "cost",
@@ -857,17 +857,15 @@ def q_binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).localCheckpoint()
     w1 = cand1.orderBy("cost", "i").limit(1)
-    wv = F.broadcast(
-        w1.select(
-            c("i").alias("wi"),
-            c("s1").alias("ws1"),
-            c("s2").alias("ws2"),
-            c("n").alias("wn"),
-            c("g1").alias("wg1"),
-            c("g2").alias("wg2"),
-            c("day").alias("wday"),
-            c("cost").alias("wcost"),
-        )
+    wv = w1.select(
+        c("i").alias("wi"),
+        c("s1").alias("ws1"),
+        c("s2").alias("ws2"),
+        c("n").alias("wn"),
+        c("g1").alias("wg1"),
+        c("g2").alias("wg2"),
+        c("day").alias("wday"),
+        c("cost").alias("wcost"),
     )
     left_red = (
         c("ws2") - c("ws1").cast("double") * c("ws1") / c("wi")
@@ -1024,7 +1022,7 @@ def q_ridge_cv_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("double") / det
     fit = (
         lams.crossJoin(fm)
-        .crossJoin(F.broadcast(tm))
+        .crossJoin(tm)
         .withColumn("a", a)
         .withColumn("b", b)
     )
@@ -1180,7 +1178,7 @@ def q_vopt_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     nfin = idx.agg(F.max("i").alias("n"))
     dp4m = (
         level(dp3m.select("i", "c"))
-        .join(F.broadcast(nfin), c("i") == c("n"))
+        .join(nfin, c("i") == c("n"))
         .select(c("argj").alias("j3"))
     )
     b3 = dp4m
@@ -1188,7 +1186,7 @@ def q_vopt_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = dp2m.join(b2, dp2m["i"] == c("j2")).select(
         c("argj").alias("j1"), "j2", "j3"
     )
-    bt = b1.crossJoin(F.broadcast(nfin))
+    bt = b1.crossJoin(nfin)
     bounds = bt.select(
         F.expr(
             "stack(4,"
@@ -1293,7 +1291,7 @@ def q_forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     joined = li.join(
-        F.broadcast(part.select("p_partkey", "p_brand")),
+        part.select("p_partkey", "p_brand"),
         li["l_partkey"] == F.col("p_partkey"),
     ).select(
         F.col("p_brand").alias("brand"),
@@ -1321,7 +1319,7 @@ def q_forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fc = grand.select(
         F.expr("CAST(g * 31 DIV 28 AS BIGINT)").alias("tot_fc"), "g"
     )
-    base = hist.crossJoin(F.broadcast(fc)).select(
+    base = hist.crossJoin(fc).select(
         "brand",
         "h",
         F.expr("CAST(h * 31 DIV 28 AS BIGINT)").alias("bu_usd"),
@@ -1484,15 +1482,15 @@ def q_cascade_filter_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("mz") == 0,
         )
         .join(
-            F.broadcast(s.selectExpr("m AS ma", "cnt AS n1")),
+            s.selectExpr("m AS ma", "cnt AS n1"),
             F.col("ma") == F.col("m1"),
         )
         .join(
-            F.broadcast(s.selectExpr("m AS mb", "cnt AS n12")),
+            s.selectExpr("m AS mb", "cnt AS n12"),
             F.col("mb") == F.col("m12"),
         )
         .join(
-            F.broadcast(s.selectExpr("m AS mc", "cnt AS n123")),
+            s.selectExpr("m AS mc", "cnt AS n123"),
             F.col("mc") == F.col("m123"),
         )
         .withColumn(
@@ -1910,7 +1908,7 @@ def q_emd_distribution_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = (
         cum.filter(F.col("nxt").isNotNull())
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             (
                 F.abs(F.col("f1") * F.col("n2") - F.col("f2") * F.col("n1"))
@@ -2430,7 +2428,7 @@ def q_cube_materialization_greedy(
     b1 = (
         sizes.filter(F.col("mask") != 7)
         .join(w, F.expr("(w_mask & mask) = w_mask"))
-        .crossJoin(F.broadcast(top))
+        .crossJoin(top)
         .groupBy("mask", "v_rows")
         .agg(
             F.sum(
@@ -2447,8 +2445,8 @@ def q_cube_materialization_greedy(
         F.col("mask").alias("m1"), F.col("v_rows").alias("r1")
     )
     cost1 = (
-        w.crossJoin(F.broadcast(v1))
-        .crossJoin(F.broadcast(top))
+        w.crossJoin(v1)
+        .crossJoin(top)
         .select(
             "w_mask",
             F.when(
@@ -2461,7 +2459,7 @@ def q_cube_materialization_greedy(
         )
     )
     b2 = (
-        sizes.crossJoin(F.broadcast(v1))
+        sizes.crossJoin(v1)
         .filter((F.col("mask") != 7) & (F.col("mask") != F.col("m1")))
         .join(w, F.expr("(w_mask & mask) = w_mask"))
         .join(cost1, "w_mask")
@@ -2481,9 +2479,9 @@ def q_cube_materialization_greedy(
         F.col("mask").alias("m2"), F.col("v_rows").alias("r2")
     )
     return (
-        sizes.crossJoin(F.broadcast(v1))
-        .crossJoin(F.broadcast(v2))
-        .crossJoin(F.broadcast(top))
+        sizes.crossJoin(v1)
+        .crossJoin(v2)
+        .crossJoin(top)
         .select(
             "mask",
             F.col("v_rows").cast("bigint").alias("n_rows"),

@@ -215,12 +215,12 @@ def q_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = summary.filter(F.col("tok").isNotNull()).select("tok").distinct()
     total = summary.agg(F.sum("pt").alias("t"))
     exact = (
-        tok.join(F.broadcast(cand), "tok", "left_semi")
+        tok.join(cand, "tok", "left_semi")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     return (
-        exact.join(F.broadcast(total))
+        exact.join(total)
         .filter(F.col("n") >= _HH_THRESHOLD * F.col("t"))
         .select(
             "tok",
@@ -388,7 +388,7 @@ def q_target_encoding_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     j = (
         widen(o)
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        .join(c, o["o_custkey"] == c["c_custkey"])
         .select(
             F.col("c_mktsegment").alias("seg"),
             (F.col("o_orderkey") % _TE_FOLDS).alias("fold"),
@@ -411,7 +411,7 @@ def q_target_encoding_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior = F.col("gs") / (100.0 * F.col("gn"))
     return (
         per.join(F.broadcast(tot), "seg")
-        .join(F.broadcast(glob))
+        .join(glob)
         .select(
             "seg",
             F.col("fold").cast("int").alias("fold"),
@@ -494,7 +494,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_gram = (
         grams.join(first_seen, "g")
-        .join(F.broadcast(n_docs))
+        .join(n_docs)
         .select(
             "doc_id",
             F.when(F.col("first_doc") == F.col("doc_id"), 1)
@@ -587,7 +587,7 @@ def q_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.size("arr") == 7)
     taus = local_df(spark, [(50,), (90,)], "tau100 int")
     fc_idx = ((F.col("tau100") * F.size("arr") + 99) / 100).cast("int")
-    evald = hist.join(F.broadcast(taus)).select(
+    evald = hist.join(taus).select(
         "tau100",
         "rev",
         F.element_at("arr", fc_idx).alias("fc"),
@@ -735,7 +735,7 @@ def q_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = (
         widen(li)
-        .join(F.broadcast(mm))
+        .join(mm)
         .select(
             "l_orderkey",
             "l_linenumber",
@@ -817,7 +817,7 @@ def q_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("rows_scanned"),
         )
-        .join(F.broadcast(matched))
+        .join(matched)
         .orderBy("layout")
     )
 
@@ -1147,7 +1147,7 @@ def q_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
         "dx int, dy int",
     )
-    probes = core.join(F.broadcast(offsets)).select(
+    probes = core.join(offsets).select(
         F.col("cell").alias("u"),
         (F.col("cx") + F.col("dx")).alias("nx"),
         (F.col("cy") + F.col("dy")).alias("ny"),
@@ -1297,7 +1297,7 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ney_exact = _NEYMAN_BUDGET * F.col("wt") / F.col("tw")
     prop_exact = _NEYMAN_BUDGET * F.col("n_h") / F.col("tn").cast("double")
-    quota = w.crossJoin(F.broadcast(tots)).select(
+    quota = w.crossJoin(tots).select(
         "stratum",
         "n_h",
         "sd",
@@ -1330,7 +1330,7 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        ranked.crossJoin(F.broadcast(short))
+        ranked.crossJoin(short)
         .select(
             "stratum",
             "n_h",
@@ -1435,7 +1435,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     deg = sym.groupBy(F.col("a").alias("node")).agg(F.sum("w").alias("wd"))
     n_nodes = deg.agg(F.count(F.lit(1)).cast("double").alias("nn"))
-    pr = deg.join(F.broadcast(n_nodes)).select(
+    pr = deg.join(n_nodes).select(
         "node", (F.lit(1.0) / F.col("nn")).alias("score")
     )
     for _ in range(_TR_ROUNDS):
@@ -1448,7 +1448,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         pr = (
-            contrib.join(F.broadcast(n_nodes))
+            contrib.join(n_nodes)
             .select(
                 "node",
                 (0.15 / F.col("nn") + _TR_DAMP * F.col("c")).alias("score"),
@@ -1700,7 +1700,7 @@ def q_grid_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
         "dx int, dy int",
     )
-    probes = vecs.join(F.broadcast(offsets)).select(
+    probes = vecs.join(offsets).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         (F.col("cx") + F.col("dx")).alias("nx"),
@@ -1733,7 +1733,7 @@ def q_grid_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv")
     )
     exact = (
-        allc.join(F.broadcast(qsample), F.col("query_id") != F.col("neighbor_id"))
+        allc.join(qsample, F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id", "neighbor_id",
             cosine(F.col("qv"), F.col("cv")).alias("cos"),
@@ -1754,8 +1754,8 @@ def q_grid_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_exact_match"),
     )
     return (
-        n_points.join(F.broadcast(n_approx))
-        .join(F.broadcast(aud))
+        n_points.join(n_approx)
+        .join(aud)
         .select(
             "n_points",
             "n_with_candidate",
@@ -1831,7 +1831,7 @@ def q_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     pk = li.agg(F.min("l_partkey").alias("p"))
     nz = (
         widen(li)
-        .join(F.broadcast(pk), F.col("l_partkey") == F.col("p"))
+        .join(pk, F.col("l_partkey") == F.col("p"))
         .groupBy(F.to_date("l_shipdate").alias("d"))
         .agg(F.sum("l_quantity").cast("double").alias("x"))
     )
@@ -1940,7 +1940,7 @@ def q_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         edges.join(du, "u")
         .join(dv, "v")
-        .crossJoin(F.broadcast(m))
+        .crossJoin(m)
         .withColumn(
             "gain_num", 4 * F.col("m") - 2 * F.col("ku") * F.col("kv")
         )
@@ -2075,7 +2075,7 @@ def q_hilbert_curve_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = (
         widen(li)
-        .join(F.broadcast(mm))
+        .join(mm)
         .select(
             "l_orderkey",
             "l_linenumber",
@@ -2237,7 +2237,7 @@ def q_learned_index_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         b.alias("b"),
         ((F.col("sr") - b * F.col("sk")) / F.col("n")).alias("a"),
     )
-    errs = ranked.crossJoin(F.broadcast(fit)).select(
+    errs = ranked.crossJoin(fit).select(
         "n",
         "a",
         "b",

@@ -112,7 +112,7 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         * ((ntot + 1) - F.col("tie_sum") / (ntot * (ntot - 1)))
     )
     z = (u1 - F.col("n1") * F.col("n2") / 2) / sigma
-    return agg.join(F.broadcast(n)).select(
+    return agg.join(n).select(
         F.col("n1").cast("bigint").alias("n1"),
         F.col("n2").cast("bigint").alias("n2"),
         rnd(u1, 2).alias("u1"),
@@ -209,7 +209,7 @@ def q_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cum_c2").alias("cum2"),
     )
     d = (
-        ecdf.join(F.broadcast(n), "event_type")
+        ecdf.join(n, "event_type")
         .groupBy("event_type", "n1", "n2")
         .agg(
             F.max(
@@ -329,7 +329,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(5)
     )
     means = (
-        ev.crossJoin(F.broadcast(reps))
+        ev.crossJoin(reps)
         .withColumn("u", u)
         .withColumn("wt", wt)
         .groupBy("event_type", "b")
@@ -345,7 +345,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("value").alias("mean_value"),
     )
     return (
-        means.join(F.broadcast(point), "event_type")
+        means.join(point, "event_type")
         .groupBy("event_type", "n", "mean_value")
         .agg(
             rnd(F.expr("percentile(mean_b, 0.025)"), 4).alias("ci_lo"),
@@ -417,7 +417,7 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = F.col("row_tot") * F.col("col_tot") / F.col("n")
     chi = (
-        margins.join(F.broadcast(tot))
+        margins.join(tot)
         .agg(F.sum((F.col("o") - e) * (F.col("o") - e) / e).alias("chi2"))
     )
     return chi.join(F.broadcast(tot)).select(
@@ -794,7 +794,7 @@ def q_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.covar_pop("x_pre", "y_post") / F.var_pop("x_pre")).alias("th"),
         F.avg("x_pre").alias("x_bar"),
     )
-    adjusted = per_user.crossJoin(F.broadcast(theta)).select(
+    adjusted = per_user.crossJoin(theta).select(
         "arm",
         "y_post",
         (
@@ -1089,7 +1089,7 @@ def q_value_at_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("rev") - F.lag("rev").over(Window.orderBy("d"))).alias("chg")
     ).filter(F.col("chg").isNotNull())
     var = deltas.agg(F.expr("percentile(chg, 0.05)").alias("var_95"))
-    stats = deltas.crossJoin(F.broadcast(var)).agg(
+    stats = deltas.crossJoin(var).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
         rnd(F.first("var_95"), 4).alias("var_95"),
         rnd(
@@ -1228,7 +1228,7 @@ def q_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     left = F.col("n_chars") <= F.col("thr")
     stats = (
-        labeled.crossJoin(F.broadcast(thr))
+        labeled.crossJoin(thr)
         .groupBy("thr")
         .agg(
             F.sum(F.when(left, 1).otherwise(0)).cast("double").alias("n_l"),
@@ -1255,7 +1255,7 @@ def q_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = stats.select("thr", gain.alias("gini_gain"))
     best = scored.agg(F.max("gini_gain").alias("best"))
     return (
-        scored.crossJoin(F.broadcast(best))
+        scored.crossJoin(best)
         .select(
             F.col("thr").cast("bigint").alias("threshold"),
             rnd("gini_gain", 6).alias("gini_gain"),
@@ -1392,7 +1392,7 @@ def q_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     def pick(cur, col):
         return F.max(F.when(F.col("cur") == cur, F.col(col)))
     wide = (
-        halves.join(F.broadcast(tot), "cur")
+        halves.join(tot, "cur")
         .withColumn("w", F.col("n") / F.col("nt"))
         .groupBy("event_type")
         .agg(
@@ -1473,8 +1473,8 @@ def q_markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = -F.sum((F.col("c") / F.col("n")) * F.log(F.col("c") / F.col("c_cur")))
     return (
         margins.agg(h.alias("h"))
-        .crossJoin(F.broadcast(k))
-        .crossJoin(F.broadcast(npairs))
+        .crossJoin(k)
+        .crossJoin(npairs)
         .select(
             rnd("h", 6).alias("conditional_entropy_nats"),
             rnd(F.col("h") / F.log("k"), 6).alias("normalized"),
@@ -1526,7 +1526,7 @@ def q_importance_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     weights = (
         docs.join(F.broadcast(shares), "source")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(((1.0 / F.col("k")) / (F.col("n") / F.col("nt"))).alias("w"))
     )
     ess = F.sum("w") * F.sum("w") / F.sum(F.col("w") * F.col("w"))
@@ -1591,7 +1591,7 @@ def q_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ucl = F.col("pbar") + 3 * sigma
     lcl = F.greatest(F.lit(0.0), F.col("pbar") - 3 * sigma)
     return (
-        daily.crossJoin(F.broadcast(center))
+        daily.crossJoin(center)
         .select(
             F.date_format("d", "yyyy-MM-dd").alias("day"),
             F.col("n").cast("bigint").alias("n_events"),
@@ -1806,7 +1806,7 @@ def q_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         st = remaining.agg(
             F.avg("x").alias("mu"), F.stddev_samp("x").alias("sd")
         )
-        cand = remaining.crossJoin(F.broadcast(st)).withColumn(
+        cand = remaining.crossJoin(st).withColumn(
             "r_stat", F.abs(F.col("x") - F.col("mu")) / F.col("sd")
         )
         top = (
@@ -1995,7 +1995,7 @@ def q_theil_sen_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("value").cast("double").alias("x"))
     )
     mind = daily.agg(F.min("d").alias("md"))
-    idx = daily.crossJoin(F.broadcast(mind)).select(
+    idx = daily.crossJoin(mind).select(
         F.datediff("d", "md").cast("bigint").alias("t"), "x"
     )
     a, b = idx.alias("a"), idx.alias("b")
@@ -2016,7 +2016,7 @@ def q_theil_sen_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nn = idx.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     ic = (
-        idx.crossJoin(F.broadcast(sl.select("slope")))
+        idx.crossJoin(sl.select("slope"))
         .select((F.col("x") - F.col("slope") * F.col("t")).alias("resid"))
         .agg(F.expr("percentile(resid, 0.5)").alias("icept"))
     )
@@ -2027,8 +2027,8 @@ def q_theil_sen_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5) / 18.0
     )
     return (
-        sl.crossJoin(F.broadcast(nn))
-        .crossJoin(F.broadcast(ic))
+        sl.crossJoin(nn)
+        .crossJoin(ic)
         .select(
             F.col("n").alias("n_days"),
             "n_pairs",
@@ -2232,7 +2232,7 @@ def q_simpson_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("slope_all")
     )
     return (
-        seg.crossJoin(F.broadcast(pooled))
+        seg.crossJoin(pooled)
         .select(
             "segment",
             "n",
@@ -2971,7 +2971,7 @@ def q_effect_size_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cum_cnt") - F.col("cnt") + (F.col("cnt") + 1) / 2,
     )
     u = ranked.agg(F.sum(F.col("avg_rank") * F.col("c1")).alias("r1"))
-    d = m.crossJoin(F.broadcast(u)).select(
+    d = m.crossJoin(u).select(
         "n1",
         "n2",
         (
@@ -3072,7 +3072,7 @@ def q_did_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = (
         ev.filter(F.col("event_type") == "purchase")
-        .crossJoin(F.broadcast(bounds))
+        .crossJoin(bounds)
         .groupBy(
             F.datediff(F.date_trunc("day", "ts"), "cut").cast("bigint").alias(
                 "rel_day"
@@ -3098,7 +3098,7 @@ def q_did_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("g").alias("g_ref")
     )
     return (
-        gap.crossJoin(F.broadcast(ref))
+        gap.crossJoin(ref)
         .filter(F.col("rel_day").between(-7, 7))
         .select(
             "rel_day",
@@ -3216,9 +3216,9 @@ def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = 2 * F.col("e_xy") - F.col("e_xx") - F.col("e_yy")
     return (
-        xy.crossJoin(F.broadcast(xx))
-        .crossJoin(F.broadcast(yy))
-        .crossJoin(F.broadcast(nn))
+        xy.crossJoin(xx)
+        .crossJoin(yy)
+        .crossJoin(nn)
         .select(
             F.col("n1").alias("n_weekend"),
             F.col("n2").alias("n_weekday"),
@@ -3473,7 +3473,7 @@ def q_jackknife_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("q").alias("tq"),
         F.count(F.lit(1)).cast("bigint").alias("ng"),
     )
-    reps = g.crossJoin(F.broadcast(tot)).select(
+    reps = g.crossJoin(tot).select(
         ((F.col("ts") - F.col("s")) / (F.col("tq") - F.col("q"))).alias("r"),
         "ts", "tq", "ng",
     )
@@ -3482,7 +3482,7 @@ def q_jackknife_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     se = F.sqrt((F.col("ng") - 1.0) / F.col("ng") * F.sum(dev))
     ratio = F.col("ts") / F.col("tq")
     return (
-        reps.crossJoin(F.broadcast(rb))
+        reps.crossJoin(rb)
         .groupBy("ng", "ts", "tq", "rbar")
         .agg(F.sum(dev).alias("_ssq"))
         .select(

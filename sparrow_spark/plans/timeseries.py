@@ -267,7 +267,7 @@ def q_regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmin = ev.agg(
         (F.min(F.unix_micros("ts")) / 1e6).alias("__t0")
     )
-    base = ev.crossJoin(F.broadcast(tmin)).select(
+    base = ev.crossJoin(tmin).select(
         "event_type",
         (F.unix_micros("ts") / 1e6 - F.col("__t0")).alias("x"),
         F.col("value").alias("y"),
@@ -405,7 +405,7 @@ def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z = (F.col("value") - F.col("mu")) / F.col("sigma")
     return (
-        ev.join(F.broadcast(stats), ev.event_type == F.col("s_type"))
+        ev.join(stats, ev.event_type == F.col("s_type"))
         .filter(F.abs(z) > 3.0)
         .select(
             "event_id",
@@ -1167,13 +1167,13 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(value, 0.5)").alias("med")
     )
     m2 = (
-        ev.join(F.broadcast(m1), "event_type")
+        ev.join(m1, "event_type")
         .groupBy("event_type")
         .agg(F.expr("percentile(abs(value - med), 0.5)").alias("mad"))
     )
     return (
-        ev.join(F.broadcast(m1), "event_type")
-        .join(F.broadcast(m2), "event_type")
+        ev.join(m1, "event_type")
+        .join(m2, "event_type")
         .groupBy("event_type", "med", "mad")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1302,7 +1302,7 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("c"))
     tot = pairs.groupBy("from_type").agg(F.sum("c").alias("n"))
     return (
-        pairs.join(F.broadcast(tot), "from_type")
+        pairs.join(tot, "from_type")
         .select(
             "from_type", "to_type",
             F.col("c").cast("bigint").alias("n_transitions"),
@@ -1653,7 +1653,7 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n1") + F.col("n2")) / (F.col("n1") * F.col("n2"))
     )
     return (
-        ecdf.join(F.broadcast(n))
+        ecdf.join(n)
         .groupBy("n1", "n2")
         .agg(
             rnd(d, 6).alias("ks_d"),
@@ -1730,7 +1730,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
-        wk_rev.join(F.broadcast(cohort_n), "cohort")
+        wk_rev.join(cohort_n, "cohort")
         .select(
             F.date_format("cohort", "yyyy-MM-dd").alias("cohort"),
             "wk", "n_users",
@@ -1925,7 +1925,7 @@ def q_variance_decomposition(
     seasonal = trended.groupBy("dow").agg(
         F.avg(F.col("x") - F.col("trend")).alias("s")
     )
-    parts = trended.join(F.broadcast(seasonal), "dow").select(
+    parts = trended.join(seasonal, "dow").select(
         "x",
         "trend",
         "s",
@@ -2021,7 +2021,7 @@ def q_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     seas = det.groupBy("event_type", "dow").agg(
         F.avg("detrended").alias("s")
     )
-    comp = det.join(F.broadcast(seas), ["event_type", "dow"]).select(
+    comp = det.join(seas, ["event_type", "dow"]).select(
         "event_type",
         "detrended",
         (F.col("x") - F.col("s")).alias("deseasonalized"),

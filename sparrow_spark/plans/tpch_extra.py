@@ -79,10 +79,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
         .filter(pair)
         .withColumn("l_year", F.year("l_shipdate"))
         .groupBy("supp_nation", "cust_nation", "l_year")
@@ -142,12 +142,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), F.col("c_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(region), F.col("n1_region") == F.col("r_regionkey"))
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
+        .join(part, li.l_partkey == part.p_partkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(n1, F.col("c_nationkey") == F.col("n1_key"))
+        .join(region, F.col("n1_region") == F.col("r_regionkey"))
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(n2, F.col("s_nationkey") == F.col("n2_key"))
         .withColumn("o_year", F.year("o_orderdate"))
         .groupBy("o_year")
         .agg(
@@ -190,9 +190,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(part, li.l_partkey == part.p_partkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .select(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").alias("o_year"),
@@ -278,8 +278,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
     supp = _t(spark, sf_dir, "supplier")
     return (
-        revenue.join(F.broadcast(max_rev), F.col("total_revenue") == F.col("max_revenue"))
-        .join(F.broadcast(supp), F.col("supplier_no") == F.col("s_suppkey"))
+        revenue.join(max_rev, F.col("total_revenue") == F.col("max_revenue"))
+        .join(supp, F.col("supplier_no") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", "total_revenue")
         .orderBy("s_suppkey")
     )
@@ -310,7 +310,7 @@ def q16_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = _t(spark, sf_dir, "lineitem")
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
@@ -343,7 +343,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(0.2) * F.avg("l_quantity")).alias("qty_threshold")
     )
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(thresholds, li.l_partkey == F.col("t_partkey"))
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .agg(rnd(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"))
@@ -434,8 +434,8 @@ def q21_suppliers_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_supps") >= 2) & (F.col("l_shipdate") >= F.col("other_max"))
     )
     return (
-        waiting.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
+        waiting.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.col("numwait").desc(), "s_name")
@@ -485,7 +485,7 @@ def q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     )
     return (
-        cust.join(F.broadcast(avg_bal))
+        cust.join(avg_bal)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
         .groupBy("cntrycode")
@@ -579,7 +579,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey", "p_name")
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     nation = _t(spark, sf_dir, "nation").join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
+        region, F.col("n_regionkey") == F.col("r_regionkey")
     ).select("n_nationkey", "n_name")
     supp = _t(spark, sf_dir, "supplier").join(
         F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
@@ -589,7 +589,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Semi-prune to filtered parts BEFORE the link aggregate: at
         # 100 TB this turns a full (part, supp) rollup into one over
         # the ~1/2000 selected parts.
-        .join(F.broadcast(part.select("p_partkey")),
+        .join(part.select("p_partkey"),
               F.col("l_partkey") == F.col("p_partkey"), "left_semi")
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost"))
@@ -601,7 +601,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.join(F.broadcast(min_cost), F.col("l_partkey") == F.col("mc_partkey"))
         .filter(F.col("unit_cost") == F.col("min_cost"))
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .select(
             rnd("s_acctbal", 2).alias("s_acctbal"),
             "s_name",
@@ -691,7 +691,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name").isin("NATION_1", "NATION_2", "NATION_3")
     )
     supp = _t(spark, sf_dir, "supplier").join(
-        F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey")
+        nation, F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey")
     pv = (
         _t(spark, sf_dir, "lineitem")
@@ -703,7 +703,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     threshold = pv.agg((F.sum("val") * F.lit(0.001)).alias("cut"))
     return (
-        pv.join(F.broadcast(threshold))
+        pv.join(threshold)
         .filter(F.col("val") > F.col("cut"))
         .select("p_partkey", rnd("val", 2).alias("part_value"))
         .orderBy(F.col("part_value").desc(), "p_partkey")
@@ -755,7 +755,7 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
         )
-        .join(F.broadcast(bolt_parts), F.col("l_partkey") == F.col("p_partkey"), "left_semi")
+        .join(bolt_parts, F.col("l_partkey") == F.col("p_partkey"), "left_semi")
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum("l_quantity").alias("qty"))
     )
@@ -763,17 +763,17 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("qty").alias("total_qty")
     )
     qualifying = (
-        sp.join(F.broadcast(pt), F.col("l_partkey") == F.col("pk"))
+        sp.join(pt, F.col("l_partkey") == F.col("pk"))
         .filter(F.col("qty") > F.lit(0.2) * F.col("total_qty"))
         .select("l_suppkey")
     )
     region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = _t(spark, sf_dir, "nation").join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
+        region, F.col("n_regionkey") == F.col("r_regionkey")
     ).select("n_nationkey")
     return (
         _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
         .join(qualifying, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select("s_name", rnd("s_acctbal", 2).alias("acctbal"))
         .orderBy("s_name")

@@ -218,7 +218,7 @@ def q_apportion_largest_remainder(
         F.sum("n_chars").cast("double").alias("sz")
     )
     tot = w.agg(F.sum("sz").alias("t"))
-    quota = w.crossJoin(F.broadcast(tot)).select(
+    quota = w.crossJoin(tot).select(
         "source",
         (1000 * F.col("sz") / F.col("t")).alias("exact_share"),
         F.floor(1000 * F.col("sz") / F.col("t")).alias("base"),
@@ -235,7 +235,7 @@ def q_apportion_largest_remainder(
         ),
     )
     return (
-        ranked.crossJoin(F.broadcast(short))
+        ranked.crossJoin(short)
         .select(
             "source",
             rnd("exact_share", 4).alias("exact_share"),
@@ -347,7 +347,7 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = by_price.groupBy("l_returnflag").agg(F.sum("w").alias("tw"))
     cum = global_running_sums(
         by_price, ["l_extendedprice"], ["w"], reset_cols=["l_returnflag"]
-    ).join(F.broadcast(tot), "l_returnflag")
+    ).join(tot, "l_returnflag")
     return (
         cum.filter(F.col("cum_w") >= F.col("tw") / 2)
         .groupBy("l_returnflag")
@@ -737,7 +737,7 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     benford = F.log10(1 + 1.0 / F.col("d"))
     dev = F.col("c") / F.col("n") - benford
     return (
-        obs.crossJoin(F.broadcast(tot))
+        obs.crossJoin(tot)
         .select(
             F.col("d").alias("leading_digit"),
             F.col("c").cast("bigint").alias("n_rows"),
@@ -805,7 +805,7 @@ def q_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["neg_rev", "l_partkey"],
             ["rev"],
         )
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select("rev", "cum_rev", "total_rev")
     )
     before_share = (F.col("cum_rev") - F.col("rev")) / F.col("total_rev")
@@ -1244,10 +1244,10 @@ def q_ratio_to_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "r_regionkey", "r_name"
     )
     nat_rev = (
-        li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(nation, customer.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
             F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
@@ -1318,12 +1318,12 @@ def q_all_tables_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey")
     star = (
-        li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .join(F.broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(nation, customer.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(part, li.l_partkey == part.p_partkey)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_star_rows"),
             rnd(
@@ -1345,9 +1345,9 @@ def q_all_tables_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_embeddings")
     )
     return (
-        star.crossJoin(F.broadcast(ev))
-        .crossJoin(F.broadcast(docs))
-        .crossJoin(F.broadcast(emb))
+        star.crossJoin(ev)
+        .crossJoin(docs)
+        .crossJoin(emb)
     )
 
 
@@ -1654,7 +1654,7 @@ def q_compaction_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("st")
     )
     return (
-        tot.crossJoin(F.broadcast(packed))
+        tot.crossJoin(packed)
         .select(
             "n_files",
             "total_units",
@@ -1822,13 +1822,13 @@ def q_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m0 = pm.agg(F.min("m").alias("m0"))
     base = (
-        pm.join(F.broadcast(m0), pm["m"] == m0["m0"])
+        pm.join(m0, pm["m"] == m0["m0"])
         .select(
             "l_partkey", F.col("q").alias("q0"), F.col("p").alias("p0")
         )
     )
     joined = (
-        pm.crossJoin(F.broadcast(m0))
+        pm.crossJoin(m0)
         .filter(F.col("m") > F.col("m0"))
         .join(base, "l_partkey")
     )
@@ -1894,7 +1894,7 @@ def q_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     daily = (
         load_table(spark, sf_dir, "lineitem")
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(
             F.col("p_brand").alias("brand"),
             F.date_trunc("day", "l_shipdate").alias("d"),
@@ -1993,7 +1993,7 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         per.join(cum, "decile")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "decile",
             "n_customers",

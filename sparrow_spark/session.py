@@ -90,9 +90,9 @@ def get_spark(
         # q_dedup_clusters/savings 0.18->0.115 (same-session A/B/A).
         # 128 KiB keeps every human-sized plan intact (the audit
         # queries' plan-shape assertions read 2-40 KB plans); tools
-        # that capture full plans (scripts/explain_audit.py,
-        # scripts/r16/measure.py, plan_sweep.py) raise this conf at
-        # runtime — it is session-dynamic.
+        # that capture full plans (scripts/explain_audit.py, including
+        # its --sweep mode) raise this conf at runtime — it is
+        # session-dynamic.
         .config("spark.sql.maxPlanStringLength", "131072")
         # r16 (guide §2.2): AQE's coalescing floor
         # (minPartitionSize, default 1 MiB) serializes small-but-

@@ -215,7 +215,7 @@ def _register_csv_malformed() -> None:
                 ).cast("bigint").alias("n_ok")
             )
         )
-        both = F.broadcast(lines).crossJoin(F.broadcast(ok))
+        both = lines.crossJoin(ok)
         drop_row = both.select(
             F.lit("DROPMALFORMED").alias("mode"),
             F.col("n_ok").alias("n_rows"),
@@ -519,7 +519,7 @@ def _register_dpp_prune() -> None:
         )
         agg = (
             fact.join(
-                F.broadcast(dim).filter(F.col("category") == "conv"),
+                dim.filter(F.col("category") == "conv"),
                 "event_type",
             )
             .groupBy("event_type")

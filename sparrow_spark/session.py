@@ -12,6 +12,9 @@ SparkSession configured for analytics:
 Scale notes: `spark.sql.shuffle.partitions` defaults to a small number
 for local test scale factors; on a real cluster AQE coalescing makes the
 initial value mostly a ceiling — set it to ~2-3x total cores there.
+The driver JVM runs at C1 only (see get_spark); executor JVMs on a
+cluster take no `spark.executor.*` setting from here and keep C2 for
+their data-plane loops.
 """
 
 from __future__ import annotations
@@ -69,6 +72,23 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # The driver JVM compiles with C1 only. Its work is mostly
+        # one-shot: statement handling, Catalyst planning, Janino
+        # classes that differ per inlined literal, and local-mode tasks
+        # over small inputs. One 30-statement sql_wire cycle with the
+        # default JIT spent >=15.3 CPU-s in C2 compiler threads against
+        # 3.3 CPU-s in all task threads together (27.8 CPU-s in all);
+        # C1 only cut perfbench's sql_wire cpu_s_per_op 0.93 -> 0.39
+        # (4-vCPU box, medians of 10 pairs). The cost falls on steady
+        # CPU-bound loops: perfbench's 32-task calibration job takes
+        # ~2.5 s warm at C1 only against ~0.4 s with C2. Driver-only:
+        # executor JVMs on a cluster keep C2 for their data-plane
+        # loops. Set as defaultJavaOptions, which the launcher puts
+        # before extraJavaOptions, so a caller's extraJavaOptions
+        # (benchmark harness, deployers) adds to it instead of
+        # replacing it; a caller that wants C2 back overrides this key
+        # through extra_conf.
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
         # r16 (guide §4): stock pyspark workers call
         # importlib.invalidate_caches() at the top of EVERY task, and on
         # Python 3.11 each cached zipimporter re-reads its whole zip
@@ -120,6 +140,8 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
 
     The driver may hand us a session it built itself; only runtime-settable
     confs are applied here (timezone matters for timestamp correctness).
+    Its JVM is already running, so launch-time settings of get_spark
+    (driver memory, the C1-only JIT) cannot apply to it.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Session-wide once, not per-load: TIMESTAMP(NANOS) parquet columns

@@ -480,14 +480,16 @@ def test_registration_order_is_process_independent():
     test_check_if_fresh_enforces_non_addition_slots). load_all() now
     canonicalizes by (pinned module order, registration sequence);
     the in-suite order must equal a fresh interpreter's exactly."""
+    import os
     import subprocess
     import sys
 
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     fresh = subprocess.run(
         [
             sys.executable,
             "-c",
-            "import sys; sys.path.insert(0, '/root/repo');"
+            f"import sys; sys.path.insert(0, {root!r});"
             "from sparrow_spark import registry; registry.load_all();"
             "print('\\n'.join(registry.RAW_QUERIES))",
         ],
@@ -505,8 +507,10 @@ def test_committed_baseline_has_no_adjudicated_burst_values():
     would let next round's real regressions hide under it (anything
     below burst x 1.5 passes the gate)."""
     import json as _json
+    import os
 
-    d = _json.load(open("/root/repo/bench_baseline_r15.json"))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    d = _json.load(open(os.path.join(root, "bench_baseline_r15.json")))
     for q, r in d.get("remeasured", {}).items():
         assert d["queries"][q] <= min(r["full_run"], r["fresh"]) + 1e-9, (
             f"{q}: baseline keeps a burst-inflated reading"

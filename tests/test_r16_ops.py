@@ -46,8 +46,9 @@ def test_bench_burst_threshold_matches_compare_gate():
     import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
-    sys.path.insert(0, os.path.join("/root/repo", "scripts"))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    sys.path.insert(0, os.path.join(root, "scripts"))
     import bench
     import bench_compare as bc
 

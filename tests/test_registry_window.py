@@ -3,7 +3,11 @@ the FIRST 50 registry entries per round, so the window composition is
 load-bearing — a refactor that reshuffles registration order would
 silently change which queries get driver rows. Pin it."""
 
+import os
+
 from sparrow_spark import registry
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 registry.load_all()
 
@@ -30,7 +34,7 @@ def test_window_queries_all_have_oracles():
 def test_every_query_in_rotation_ledger():
     # COVERAGE.md's ledger must mention the window rotation; keep the
     # registry and ledger in the same commit (judge checklist item).
-    text = open("/root/repo/COVERAGE.md").read()
+    text = open(os.path.join(ROOT, "COVERAGE.md")).read()
     assert "rotation ledger" in text or "Window contents" in text
 
 
@@ -39,7 +43,7 @@ def test_readme_registry_count_is_current():
     # in a row (421 -> 440 -> 451 while the registry grew); pin it so
     # a stale count fails loudly in the same commit that registers a
     # new query.
-    text = open("/root/repo/README.md").read()
+    text = open(os.path.join(ROOT, "README.md")).read()
     expected = f"{len(registry.QUERIES)} registered queries"
     assert expected in text, (
         f"README.md count is stale: expected the literal {expected!r} "

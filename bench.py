@@ -373,12 +373,16 @@ AUX_QUERIES = [
 def _calibrate(spark) -> float:
     """Machine-load sentinel: wall time of a FIXED CPU-bound 32-task
     run (32 partitions x 2M-row local sum, no shuffle, no I/O). Its
-    cost is constant across rounds by construction, so a drift between
-    two bench artifacts' calibration times measures co-tenant machine
-    load, not this repo's code — the evidence the r11 forensics had to
-    reconstruct from git archaeology (untouched streaming code timing
-    2.4x slower under a loaded driver run). Run first and last so the
-    artifact also shows load CHANGE during the run."""
+    query is constant across rounds, so between two bench artifacts
+    whose driver JVMs ran with the same Java options a drift in
+    calibration time measures co-tenant machine load, not this repo's
+    code — the evidence the r11 forensics had to reconstruct from git
+    archaeology (untouched streaming code timing 2.4x slower under a
+    loaded driver run). Its time does depend on the driver JVM's JIT:
+    at C1 only (get_spark) it runs about 12x slower than with C2, so
+    the artifact records the driver's Java options and bench_compare
+    reads the sentinel only across equal ones. Run first and last so
+    the artifact also shows load CHANGE during the run."""
     from pyspark.sql import functions as F
 
     t0 = time.time()
@@ -601,6 +605,9 @@ def main() -> None:
         "calib_last_sec": calib_last,
         "loadavg_before": loadavg_before,
         "loadavg_after": loadavg_after,
+        "driver_java_options": spark.sparkContext.getConf().get(
+            "spark.driver.defaultJavaOptions", ""
+        ),
     }
 
     sf = sf_dir.rstrip("/").split("sf")[-1]

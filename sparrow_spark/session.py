@@ -12,9 +12,10 @@ SparkSession configured for analytics:
 Scale notes: `spark.sql.shuffle.partitions` defaults to a small number
 for local test scale factors; on a real cluster AQE coalescing makes the
 initial value mostly a ceiling — set it to ~2-3x total cores there.
-The driver JVM runs at C1 only (see get_spark); executor JVMs on a
-cluster take no `spark.executor.*` setting from here and keep C2 for
-their data-plane loops.
+The driver JVM runs at C1 only (see get_spark), which costs CPU-bound
+queries re-run in one long-lived driver; executor JVMs on a cluster
+take no `spark.executor.*` setting from here and keep C2 for their
+data-plane loops.
 """
 
 from __future__ import annotations
@@ -72,22 +73,25 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        # The driver JVM compiles with C1 only. Its work is mostly
-        # one-shot: statement handling, Catalyst planning, Janino
-        # classes that differ per inlined literal, and local-mode tasks
-        # over small inputs. One 30-statement sql_wire cycle with the
-        # default JIT spent >=15.3 CPU-s in C2 compiler threads against
-        # 3.3 CPU-s in all task threads together (27.8 CPU-s in all);
-        # C1 only cut perfbench's sql_wire cpu_s_per_op 0.93 -> 0.39
-        # (4-vCPU box, medians of 10 pairs). The cost falls on steady
-        # CPU-bound loops: perfbench's 32-task calibration job takes
-        # ~2.5 s warm at C1 only against ~0.4 s with C2. Driver-only:
-        # executor JVMs on a cluster keep C2 for their data-plane
-        # loops. Set as defaultJavaOptions, which the launcher puts
-        # before extraJavaOptions, so a caller's extraJavaOptions
-        # (benchmark harness, deployers) adds to it instead of
-        # replacing it; a caller that wants C2 back overrides this key
-        # through extra_conf.
+        # The driver JVM compiles with C1 only. This trades speed of
+        # code the JVM runs again and again for CPU spent compiling
+        # code it runs a few times (4-vCPU box, sf0.1; ROADMAP
+        # "Measured: the JIT"). Wins: one 30-statement sql_wire cycle
+        # in a fresh JVM spent >=15.3 CPU-s in C2 compiler threads
+        # against 3.3 CPU-s in all task threads; C1 only cut sql_wire
+        # cpu_s_per_op 0.93 -> 0.39 over 15 s of traffic and
+        # 0.49 -> 0.33 over 60 s (read p50 0.67 -> 0.50 s at 15 s,
+        # within noise at 60 s). Costs: bench.py's warm headline (300
+        # queries, each re-run in one long-lived JVM) 16.5 -> 20.6 s,
+        # 13 queries over 1.5x; its streaming drains 31 -> 44 s; its
+        # whole run, builds and first executions included, ~60% longer;
+        # perfbench's 32-task calibration job ~2.5 s against ~0.4 s.
+        # Driver-only: executor JVMs on a cluster keep C2 for their
+        # data-plane loops. Set as defaultJavaOptions, which the
+        # launcher puts before extraJavaOptions, so a caller's
+        # extraJavaOptions (benchmark harness, deployers) adds to it
+        # instead of replacing it; a caller that wants C2 back
+        # overrides this key through extra_conf.
         .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
         # r16 (guide §4): stock pyspark workers call
         # importlib.invalidate_caches() at the top of EVERY task, and on

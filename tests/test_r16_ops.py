@@ -205,6 +205,63 @@ def test_bench_compare_aux_remeasure_adjudicates(
     assert bc.main() == 1
     assert "AUX REGRESSION s1" in capsys.readouterr().out
 
+
+def test_bench_compare_sentinel_needs_equal_driver_jit(
+    tmp_path, monkeypatch, capsys
+):
+    """The calibration job runs in the driver JVM, so its time follows
+    the JIT: a C1-only run against a C2 baseline reads ~12x slower
+    with no load at all. That ratio must neither be reported as
+    machine load nor discount a regression flag; with equal Java
+    options the sentinel still does both."""
+    import json as _json
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(__file__), "..", "scripts")
+    )
+    import bench_compare as bc
+
+    old = tmp_path / "old.json"
+    new = tmp_path / "new.json"
+    # A baseline recorded before the field existed ran with C2.
+    old.write_text(
+        _json.dumps(
+            {
+                "queries": {"qa": 0.1},
+                "load_sentinel": {
+                    "calib_first_sec": 0.2,
+                    "calib_last_sec": 0.3,
+                },
+            }
+        )
+    )
+    doc = {
+        "queries": {"qa": 0.3},
+        "load_sentinel": {
+            "calib_first_sec": 2.4,
+            "calib_last_sec": 2.6,
+            "driver_java_options": "-XX:TieredStopAtLevel=1",
+        },
+    }
+    new.write_text(_json.dumps(doc))
+    monkeypatch.setattr(
+        sys, "argv", ["bench_compare.py", str(old), str(new)]
+    )
+    assert bc.main() == 1
+    out = capsys.readouterr().out
+    assert "not comparable" in out
+    assert "loaded machine" not in out
+    assert "sentinel load delta" not in out
+
+    doc["load_sentinel"]["driver_java_options"] = ""
+    new.write_text(_json.dumps(doc))
+    assert bc.main() == 1
+    out = capsys.readouterr().out
+    assert "loaded machine" in out
+    assert "within 10.00x sentinel load delta" in out
+
 # ---------------------------------------------------------------------------
 # q_dup_span_merge
 # ---------------------------------------------------------------------------

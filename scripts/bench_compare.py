@@ -40,11 +40,17 @@ def _calib(doc: dict) -> float | None:
     return sum(vals) / len(vals) if vals else None
 
 
-def _driver_java_options(doc: dict) -> str:
-    """The driver JVM's defaultJavaOptions the sentinel ran under.
-    Artifacts that predate the field ran before get_spark set any,
-    i.e. with HotSpot's default tiered JIT (C2)."""
-    return (doc.get("load_sentinel") or {}).get("driver_java_options", "")
+def _driver_jit(doc: dict) -> str:
+    """The driver JVM's JIT setting (its -XX:TieredStopAtLevel flags)
+    the sentinel ran under. Only the JIT moves the sentinel's time: the
+    class-data archive flags beside it change from a recording run to
+    later ones and leave the job's cost alone. Artifacts that predate
+    the field ran before get_spark set any, i.e. with HotSpot's default
+    tiered JIT (C2)."""
+    opts = (doc.get("load_sentinel") or {}).get("driver_java_options", "")
+    return " ".join(
+        o for o in opts.split() if o.startswith("-XX:TieredStopAtLevel=")
+    )
 
 
 def main() -> int:
@@ -66,14 +72,14 @@ def main() -> int:
         f"new={t_new:.3f}s  ratio={t_new / max(t_old, 1e-9):.2f}x"
     )
     c_old, c_new = _calib(old_doc), _calib(new_doc)
-    j_old, j_new = _driver_java_options(old_doc), _driver_java_options(new_doc)
+    j_old, j_new = _driver_jit(old_doc), _driver_jit(new_doc)
     calib_x = None
     if c_old and c_new and j_old != j_new:
         # The sentinel's time depends on the driver JVM's JIT (C1 only
         # runs it ~12x slower than C2), so across different options
         # its ratio is not machine load and must not discount flags.
         print(
-            f"load sentinel: not comparable, driver Java options differ "
+            f"load sentinel: not comparable, driver JIT settings differ "
             f"(old {j_old!r}, new {j_new!r})"
         )
     elif c_old and c_new:

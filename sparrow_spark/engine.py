@@ -38,6 +38,7 @@ import os
 import re
 import shutil
 import uuid
+import weakref
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -173,6 +174,15 @@ class Session:
             self._engine.close_prepared(stmt_id)
 
 
+# The schema each SparkSession's current database and database() UDF
+# were last pointed at. Every Engine on one SparkSession shares it, so
+# one engine's switch is seen by the next statement of another.
+_SYNCED_DB: "weakref.WeakKeyDictionary[SparkSession, str | None]" = (
+    weakref.WeakKeyDictionary()
+)
+_UNSYNCED = object()
+
+
 class Engine:
     def __init__(self, spark: SparkSession, warehouse_dir: str):
         self.spark = spark
@@ -201,7 +211,8 @@ class Engine:
         # (not the engine — it holds the SparkContext) and be
         # re-registered whenever USE (or session switch) changes the
         # current schema.
-        self._register_database_udf()
+        _SYNCED_DB.pop(spark, None)
+        self._sync_spark_session_state()
         # `dual` as a real 1-row relation (reference: 1-row MemTable,
         # src/datafusion_impl/catalog/information_schema.rs:117-133).
         spark.sql("SELECT 1 AS dummy").createOrReplaceTempView("dual")
@@ -228,20 +239,22 @@ class Engine:
     @contextmanager
     def activate(self, session: Session):
         """Run statements under `session`'s state; restores the previous
-        session (and the Spark-side current database + database() UDF)
-        afterwards."""
+        session afterwards. The Spark-side current database and
+        database() UDF follow at the next statement (`sql`)."""
         prev = self._active
         self._active = session
-        if prev is not session:
-            self._sync_spark_session_state()
         try:
             yield
         finally:
             self._active = prev
-            if prev is not session:
-                self._sync_spark_session_state()
 
     def _sync_spark_session_state(self) -> None:
+        """Point the SparkSession's current database and database() UDF
+        at the active session's schema, unless they already are: each
+        sync costs a UDF registration plus a catalog call (~7.5 ms CPU),
+        which connections on one database need not pay per statement."""
+        if _SYNCED_DB.get(self.spark, _UNSYNCED) == self._active.db:
+            return
         self._register_database_udf()
         db = self._active.db
         try:
@@ -282,6 +295,7 @@ class Engine:
     def _register_database_udf(self) -> None:
         db_val = self._active.db
         self.spark.udf.register("database", lambda: db_val)
+        _SYNCED_DB[self.spark] = db_val
 
     # ------------------------------------------------------------------
     # public API
@@ -294,6 +308,7 @@ class Engine:
 
     def sql(self, text: str) -> Result:
         """Execute one statement (the COM_QUERY path, SURVEY §3.1)."""
+        self._sync_spark_session_state()
         stmt = strip_comments(text)
         if not stmt:
             return Result("ok")

@@ -23,31 +23,18 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparrow_spark.operators.text import fingerprint, normalize_text, tokens
+from sparrow_spark.operators.text import (
+    _text_shingles,
+    fingerprint,
+    normalize_text,
+    tokens,
+)
 from sparrow_spark.registry import query
 from sparrow_spark.rounding import rnd
 from sparrow_spark.sources import load_table, materialize, widen
 
 N_MINHASHES = 8
 BAND_SIZE = 2  # 4 bands of 2 hashes
-
-
-def _shingles_of(w: Column, k: int) -> Column:
-    """k-word shingle array from an already-materialized token-array
-    column (must be an attribute, not an expression — see
-    sources.materialize)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.size(w) - k),
-        lambda i: F.concat_ws(" ", *[F.element_at(w, i + j + 1) for j in range(k)]),
-    )
-
-
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Array of k-word shingles from lowercased whitespace tokens.
-    Caller must ensure at least k tokens (filter n_tokens >= k).
-    NOTE: inlines the tokenizer into the shingle lambda — for hot paths
-    materialize() the token array first and use _shingles_of."""
-    return _shingles_of(tokens(col), k)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -96,7 +83,7 @@ def minhash_signatures(
     )
     shingled = toks.select(
         F.col(id_col),
-        F.explode(_shingles_of(F.col("w"), shingle_k)).alias("shingle"),
+        F.explode(_text_shingles(F.col("w"), shingle_k)).alias("shingle"),
     )
     if hash_fn == "md5":
         digests = [
@@ -1277,7 +1264,7 @@ def q_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("w") >= 3
     )
     ssets = toks.select(
-        "doc_id", F.array_distinct(_shingles_of(F.col("w"), 3)).alias("s")
+        "doc_id", F.array_distinct(_text_shingles(F.col("w"), 3)).alias("s")
     )
     xa = ssets.select(F.col("doc_id").alias("a_id"), F.col("s").alias("a_s"))
     xb = ssets.select(F.col("doc_id").alias("b_id"), F.col("s").alias("b_s"))
@@ -1512,7 +1499,7 @@ def q_setsim_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenizer over the raw corpus; swap for reliable checkpointing
     # there for executor-loss tolerance.
     tsets = toks.select(
-        "doc_id", F.array_distinct(_shingles_of(F.col("w"), 3)).alias("tset")
+        "doc_id", F.array_distinct(_text_shingles(F.col("w"), 3)).alias("tset")
     ).localCheckpoint(eager=True)
     prefixes = setsim_prefix_tokens(tsets, SETSIM_T)
     probe = (
@@ -1793,7 +1780,7 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # posting lists, and both verify sides); one localCheckpoint
     # replaces four full corpus re-shingle passes per execution.
     tsets = toks.select(
-        "doc_id", F.array_distinct(_shingles_of(F.col("w"), 3)).alias("tset")
+        "doc_id", F.array_distinct(_text_shingles(F.col("w"), 3)).alias("tset")
     ).localCheckpoint(eager=True)
     probe_prefix = (
         setsim_prefix_tokens(
@@ -2153,7 +2140,7 @@ def q_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = toks.select(
         "doc_id",
         F.substring(normalize_text(F.col("text")), 1, SN_KEY_LEN).alias("k"),
-        F.array_distinct(_shingles_of(F.col("w"), 3)).alias("tset"),
+        F.array_distinct(_text_shingles(F.col("w"), 3)).alias("tset"),
     )
     ranked = global_sort_ranks(keyed, ["k", "doc_id"]).select(
         "doc_id", "tset", "rn"
@@ -2760,7 +2747,7 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("w") >= 3
     )
     tsets = toks.select(
-        "doc_id", F.array_distinct(_shingles_of(F.col("w"), 3)).alias("tset")
+        "doc_id", F.array_distinct(_text_shingles(F.col("w"), 3)).alias("tset")
     )
     probes = tsets.filter(F.col("doc_id") % LSH_AUDIT_MOD == 0).select(
         F.col("doc_id").alias("a_id"), F.col("tset").alias("a_set")
@@ -4363,7 +4350,7 @@ def q_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         widen(docs.select("doc_id", "text")), w=tokens(F.col("text"))
     ).filter(F.size("w") >= 3)
     ssets = toks.select(
-        "doc_id", F.array_distinct(_shingles_of(F.col("w"), 3)).alias("s")
+        "doc_id", F.array_distinct(_text_shingles(F.col("w"), 3)).alias("s")
     )
     xa = ssets.select(F.col("doc_id").alias("a_id"), F.col("s").alias("a_s"))
     xb = ssets.select(F.col("doc_id").alias("b_id"), F.col("s").alias("b_s"))

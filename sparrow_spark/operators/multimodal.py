@@ -61,12 +61,6 @@ def real_decode(blob: bytes) -> tuple[int, int]:  # pragma: no cover
         return im.width, im.height
 
 
-def fake_decode_dims(n_bytes: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """Deterministic stand-in for decode: dims derived from byte length.
-    (Oracle SQL mirrors this arithmetic exactly.)"""
-    return (n_bytes % 640 + 1), ((n_bytes * 7) % 480 + 1)
-
-
 def decode_media_batches(use_pil: bool = HAVE_PIL):
     """Factory for the mapInPandas decode worker: one Arrow batch in,
     one metadata batch out. At scale each task decodes its partition's

@@ -16,8 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparrow_spark.operators.dedup import _shingles_of
-from sparrow_spark.operators.text import tokens
+from sparrow_spark.operators.text import _text_shingles, tokens
 from sparrow_spark.registry import query
 from sparrow_spark.rounding import rnd
 from sparrow_spark.sources import load_table, local_df, materialize, widen
@@ -245,7 +244,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-inlined into the per-element trigram lambda."""
     docs = widen(load_table(spark, sf_dir, "documents"))
     toks = materialize(docs.select("doc_id", "text"), w=tokens(F.col("text")))
-    tri = _shingles_of(F.col("w"), 3)
+    tri = _text_shingles(F.col("w"), 3)
     scored = toks.filter(F.size("w") >= 3).select(
         "doc_id", tri.alias("t")
     )
@@ -344,7 +343,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen(load_table(spark, sf_dir, "documents"))
     toks = materialize(docs.select("doc_id", "text"), w=tokens(F.col("text")))
     sh = toks.filter(F.size("w") >= 5).select(
-        "doc_id", F.explode(_shingles_of(F.col("w"), 5)).alias("shingle")
+        "doc_id", F.explode(_text_shingles(F.col("w"), 5)).alias("shingle")
     )
     bench = (
         sh.filter(F.col("doc_id") % 97 == 0).select("shingle").distinct()
@@ -1595,7 +1594,7 @@ def q_weak_supervision(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainer's aggregation."""
     docs = widen(load_table(spark, sf_dir, "documents"))
     toks = materialize(docs.select("doc_id", "text"), w=tokens(F.col("text")))
-    tri = _shingles_of(F.col("w"), 3)
+    tri = _text_shingles(F.col("w"), 3)
     l_len = F.size("w") >= 40
     l_rep = F.when(
         F.size("w") >= 3,

@@ -40,26 +40,6 @@ def _bucket(col: Column, seed: int, width: int) -> Column:
     return (h.cast("bigint") % width).cast("bigint")
 
 
-def countmin_build(
-    items: DataFrame, item_col: str = "item", depth: int = CM_DEPTH, width: int = CM_WIDTH
-) -> DataFrame:
-    """(d, bucket, c): the count-min table. One explode to (row, d)
-    pairs, one keyed groupBy — the whole sketch is depth*width rows."""
-    rows = items.select(
-        F.col(item_col),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(d).alias("d"),
-                    _bucket(F.col(item_col), d, width).alias("bucket"),
-                )
-                for d in range(depth)
-            ])
-        ).alias("db"),
-    ).select(item_col, F.col("db.d").alias("d"), F.col("db.bucket").alias("bucket"))
-    return rows.groupBy("d", "bucket").agg(F.count(F.lit(1)).alias("c"))
-
-
 def countmin_from_counts(
     counts: DataFrame,
     item_col: str = "item",

@@ -146,13 +146,6 @@ def _bigrams_of(norm: Column) -> Column:
     )
 
 
-def char_bigrams(col: Column) -> Column:
-    """Array of character bigrams of the normalized text (JVM-side).
-    NOTE: inlines the normalizer into the per-element lambda — for hot
-    paths materialize() the normalized text first and use _bigrams_of."""
-    return _bigrams_of(normalize_text(col))
-
-
 def langid_ngram(
     df: DataFrame,
     text_col: str = "text",
@@ -264,16 +257,6 @@ def _rolling_hash_of(norm: Column) -> Column:
         F.lit(0).cast("bigint"),
         lambda a, b: (a * ROLLING_HASH_BASE + b) % ROLLING_HASH_MOD,
     )
-
-
-def rolling_hash(col: Column) -> Column:
-    """Polynomial rolling hash over the normalized text's characters
-    (h = h*31 + ascii(c) mod 1e9+7) — a deterministic integer document
-    fingerprint computed entirely JVM-side via higher-order functions.
-    NOTE: inlines the normalizer into the per-character lambda — for hot
-    paths materialize() the normalized text first and use
-    _rolling_hash_of."""
-    return _rolling_hash_of(normalize_text(col))
 
 
 @query(
@@ -1363,9 +1346,10 @@ WINNOW_W = 4  # winnowing window: guarantee one fingerprint per w k-grams
 
 
 def _text_shingles(w: Column, k: int) -> Column:
-    """k-word shingle array from a materialized token-array column
-    (same contract as operators.dedup._shingles_of — duplicated here
-    to keep the text module import-independent of dedup)."""
+    """k-word shingle array from an already-materialized token-array
+    column (must be an attribute, not an expression — see
+    sources.materialize). Shared by the text, dedup and sketch
+    operators."""
     return F.transform(
         F.sequence(F.lit(0), F.size(w) - k),
         lambda i: F.concat_ws(" ", *[F.element_at(w, i + j + 1) for j in range(k)]),

@@ -554,6 +554,45 @@ def test_session_isolation(engine):
     s1.sql("DROP TABLE t")
     s2.sql("DROP TABLE t")
 
+def test_alternating_sessions_on_one_database_do_not_resync(
+    engine, tmp_path, monkeypatch
+):
+    """Two connections on one database alternate statements without
+    re-registering the database() UDF (a registration plus a catalog
+    call, twice per statement when every switch re-synced). A second
+    engine on the same SparkSession that moves it to another database
+    is still followed by a re-sync."""
+    from pyspark.sql.udf import UDFRegistration
+
+    from sparrow_spark.engine import Engine
+
+    s1, s2 = engine.new_session(), engine.new_session()
+    s1.sql("CREATE DATABASE IF NOT EXISTS alt_db")
+    s1.sql("USE alt_db")
+    s2.sql("USE alt_db")
+    s1.sql("CREATE TABLE t (id INT, PRIMARY KEY(id))")
+    s1.sql("INSERT INTO t VALUES (7)")
+    registered = []
+    register = UDFRegistration.register
+    monkeypatch.setattr(
+        UDFRegistration,
+        "register",
+        lambda self, name, *a, **k: (
+            registered.append(name) or register(self, name, *a, **k)
+        ),
+    )
+    for s in (s1, s2, s1, s2, s1, s2):
+        assert s.sql("SELECT database() AS d").df.collect()[0].d == "alt_db"
+        assert [r.id for r in s.sql("SELECT id FROM t").df.collect()] == [7]
+    assert registered == []
+    other = Engine(engine.spark, str(tmp_path / "other")).new_session()
+    other.sql("CREATE DATABASE IF NOT EXISTS alt_other")
+    other.sql("USE alt_other")
+    assert other.sql("SELECT database() AS d").df.collect()[0].d == "alt_other"
+    assert s2.sql("SELECT database() AS d").df.collect()[0].d == "alt_db"
+    assert [r.id for r in s2.sql("SELECT id FROM t").df.collect()] == [7]
+    s1.sql("DROP TABLE t")
+
 def test_performance_schema_and_mysql_tables(engine):
     # reference hosts these as real system tables
     # (src/meta/def/performance_schema.rs:9, src/meta/def/mysql.rs:9);

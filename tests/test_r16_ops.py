@@ -262,6 +262,24 @@ def test_bench_compare_sentinel_needs_equal_driver_jit(
     assert "loaded machine" in out
     assert "within 10.00x sentinel load delta" in out
 
+    # Same JIT, different class-data archive flags (a recording run
+    # against a later run that maps the archive): still comparable.
+    old_doc = _json.loads(old.read_text())
+    old_doc["load_sentinel"]["driver_java_options"] = (
+        "-XX:TieredStopAtLevel=1 -XX:ArchiveClassesAtExit=/c/k.1.rec.jsa "
+        "-Xlog:cds=off,cds+dynamic=off,class+path=off"
+    )
+    old.write_text(_json.dumps(old_doc))
+    doc["load_sentinel"]["driver_java_options"] = (
+        "-XX:TieredStopAtLevel=1 -XX:SharedArchiveFile=/c/k.jsa "
+        "-Xlog:cds=off,cds+dynamic=off,class+path=off"
+    )
+    new.write_text(_json.dumps(doc))
+    assert bc.main() == 1
+    out = capsys.readouterr().out
+    assert "not comparable" not in out
+    assert "loaded machine" in out
+
 # ---------------------------------------------------------------------------
 # q_dup_span_merge
 # ---------------------------------------------------------------------------

@@ -2,8 +2,11 @@
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+
+import pytest
 
 C1_ONLY = "-XX:TieredStopAtLevel=1"
 
@@ -39,3 +42,129 @@ def test_caller_java_options_add_to_c1_only():
     args = json.loads(out.strip().splitlines()[-1])
     assert C1_ONLY in args
     assert "-Dsparrow.probe=1" in args
+
+
+# Class-data archive (session.ClassDataArchive). Each start runs in its
+# own interpreter, since the JVM starts once per process, with
+# XDG_CACHE_HOME pointing into the test's directory. subprocess.run
+# returns only once the JVM has exited too (it holds the pipes), so a
+# recording is complete when it returns.
+ARCHIVE_PROBE = """
+import json, os, signal, sys
+sys.path.insert(0, {root!r})
+from sparrow_spark.session import get_spark
+spark = get_spark('sparrow-archive-probe', master='local[1]',
+    extra_conf={{'spark.driver.memory': '512m'}})
+jvm = spark._jvm
+pid = jvm.java.lang.ProcessHandle.current().pid()
+with open(f'/proc/{{pid}}/maps') as f:
+    mapped = sorted({{l.split()[-1] for l in f if l.rstrip().endswith('.jsa')}})
+out = {{
+    'mapped': mapped,
+    'args': [str(a) for a in
+             jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+             .getInputArguments()],
+    'conf_dir': jvm.java.lang.System.getenv('SPARK_CONF_DIR'),
+    'probe_conf': spark.conf.get('spark.sparrow.probe', None),
+    'answer': spark.range(10).selectExpr('sum(id) AS s').collect()[0].s,
+}}
+with open(sys.argv[1], 'w') as f:
+    json.dump(out, f)
+if '--kill' in sys.argv:
+    # End the JVM without its exit-time archive dump, as a recorder
+    # killed mid-dump would.
+    os.kill(pid, signal.SIGKILL)
+"""
+
+
+def _start(tmp_path, name, kill=False, **env):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / f"{name}.json"
+    r = subprocess.run(
+        [sys.executable, "-c", ARCHIVE_PROBE.format(root=root), str(out)]
+        + (["--kill"] if kill else []),
+        env=dict(os.environ, XDG_CACHE_HOME=str(tmp_path / "cache"), **env),
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    # Nothing from the JVM may reach stdout: the wire server's READY/BYE
+    # protocol and bench.py's last-line-is-JSON contract share it.
+    assert r.stdout == ""
+    assert not list(tmp_path.glob("hs_err*")) and not list(tmp_path.glob("core*"))
+    doc = json.loads(out.read_text())
+    assert doc["answer"] == 45
+    return doc
+
+
+def _flags(doc, flag):
+    return [a for a in doc["args"] if a.startswith(flag)]
+
+
+@pytest.fixture(scope="module")
+def recorded(tmp_path_factory):
+    """A first start that records an archive, then a second start."""
+    tmp = tmp_path_factory.mktemp("archive")
+    cache = tmp / "cache" / "sparrow_spark"
+    first = _start(tmp, "first")
+    recordings = list(cache.glob("*.rec.jsa"))
+    (meta,) = [json.loads(p.read_text()) for p in cache.glob("*.rec.json")]
+    second = _start(tmp, "second")
+    yield {"cache": cache, "first": first, "second": second,
+           "recordings": recordings, "classpath": meta["classpath"]}
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_first_start_records_archive_and_second_maps_it(recorded):
+    cache, first, second = recorded["cache"], recorded["first"], recorded["second"]
+    assert first["conf_dir"] == str(cache / "conf")
+    assert len(_flags(first, "-XX:ArchiveClassesAtExit=")) == 1
+    assert not _flags(first, "-XX:SharedArchiveFile=")
+    assert len(recorded["recordings"]) == 1
+    # The second start checked the recording, published it and mapped it.
+    published = [p for p in cache.glob("*.jsa") if ".rec." not in p.name]
+    assert len(published) == 1
+    assert str(published[0]) in second["mapped"]
+    assert _flags(second, "-XX:SharedArchiveFile=") == [
+        f"-XX:SharedArchiveFile={published[0]}"
+    ]
+    assert not _flags(second, "-XX:ArchiveClassesAtExit=")
+    assert not list(cache.glob("*.rec.*"))
+    assert C1_ONLY in second["args"]
+
+
+def test_truncated_recording_is_never_published_or_mapped(recorded, tmp_path):
+    """A recorder killed mid-dump leaves a truncated archive; mapping one
+    kills the JVM with SIGBUS. It must be checked and dropped, and the
+    session must start and answer anyway."""
+    (published,) = [p for p in recorded["cache"].glob("*.jsa")
+                    if ".rec." not in p.name]
+    cache = tmp_path / "cache" / "sparrow_spark"
+    cache.mkdir(parents=True)
+    key = published.name[: -len(".jsa")]
+    truncated = cache / f"{key}.truncated.rec.jsa"
+    with open(published, "rb") as src, open(truncated, "wb") as dst:
+        dst.write(src.read(50 * 2**20))
+    (cache / f"{key}.truncated.rec.json").write_text(
+        json.dumps({"pid": 2**22 + 1, "classpath": recorded["classpath"]})
+    )
+    doc = _start(tmp_path, "truncated", kill=True)
+    assert not [m for m in doc["mapped"] if m.startswith(str(tmp_path))]
+    assert not truncated.exists()
+    assert not (cache / f"{key}.jsa").exists()
+    # With nothing published it records afresh.
+    assert len(_flags(doc, "-XX:ArchiveClassesAtExit=")) == 1
+
+
+def test_conf_dir_with_real_files_launches_unchanged(tmp_path):
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.sparrow.probe true\n")
+    doc = _start(tmp_path, "conf", SPARK_CONF_DIR=str(conf))
+    assert doc["conf_dir"] == str(conf)
+    assert doc["probe_conf"] == "true"
+    assert not [a for a in doc["args"] if "Archive" in a or "-Xlog:" in a]
+    assert not [m for m in doc["mapped"] if m.startswith(str(tmp_path))]
+    assert not (tmp_path / "cache").exists()

@@ -76,10 +76,6 @@ class TableDef:
     # touch only matching directories.
     partition_by: list[str] = field(default_factory=list)
 
-    @property
-    def qualified(self) -> str:
-        return f"{self.schema}.{self.name}"
-
     def column(self, name: str) -> ColumnDef | None:
         for c in self.columns:
             if c.name == name.lower():

@@ -2250,7 +2250,6 @@ class Engine:
         os.rename(staging, data_dir)
         shutil.rmtree(old, ignore_errors=True)
         self._sync_partitions(schema, table, tdef)
-        self.spark.sql(f"REFRESH TABLE `{schema}`.`{table}`")
 
     def _truncate_data(self, schema: str, table: str, tdef: TableDef) -> None:
         """TRUNCATE and the unconditional DELETE: swap in an empty dir."""

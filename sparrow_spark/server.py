@@ -214,16 +214,15 @@ class _Conn:
         return result.df.schema, result.df.collect()
 
     def send_resultset(
-        self, result: Result, binary: bool = False, materialized=None
+        self, result: Result, materialized, binary: bool = False
     ) -> None:
-        if result.kind != "resultset" or result.df is None:
+        """Send `materialized` (the (schema, rows) that _materialize
+        collected under the engine lock), or an OK packet when the
+        statement produced no resultset (materialized is None)."""
+        if materialized is None:
             self.send_ok(result.affected_rows)
             return
-        schema, rows = (
-            materialized
-            if materialized is not None
-            else (result.df.schema, result.df.collect())
-        )
+        schema, rows = materialized
         self.write_packet(_lenenc_int(len(schema.fields)))
         mysql_types = [
             _SPARK_TO_MYSQL.get(f.dataType.simpleString(), T_VAR_STRING)
@@ -336,7 +335,7 @@ class _Conn:
                     with self.lock:
                         result = self.session.sql(sql)
                         mat = self._materialize(result)
-                    self.send_resultset(result, materialized=mat)
+                    self.send_resultset(result, mat)
                 elif cmd == 0x04:  # COM_FIELD_LIST
                     table = payload[1:].split(b"\x00")[0].decode()
                     with self.lock:
@@ -368,7 +367,7 @@ class _Conn:
                     with self.lock:
                         result = self.session.execute_prepared(stmt_id, params)
                         mat = self._materialize(result)
-                    self.send_resultset(result, binary=True, materialized=mat)
+                    self.send_resultset(result, mat, binary=True)
                 elif cmd == 0x18:  # COM_STMT_SEND_LONG_DATA (no response)
                     stmt_id = struct.unpack_from("<I", payload, 1)[0]
                     param_id = struct.unpack_from("<H", payload, 5)[0]

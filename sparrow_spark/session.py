@@ -228,6 +228,19 @@ class ClassDataArchive:
         return r.returncode == 0
 
 
+def _export_pythonpath() -> None:
+    """Put this package's root on PYTHONPATH. Local-mode Python workers
+    start by `python -m` in a fresh process whose PYTHONPATH is the
+    Spark-provided zips plus the driver's, so they can import the
+    package whatever cwd the driver was launched from."""
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pythonpath = os.environ.get("PYTHONPATH", "")
+    if repo_root not in pythonpath.split(os.pathsep):
+        os.environ["PYTHONPATH"] = (
+            repo_root + (os.pathsep + pythonpath if pythonpath else "")
+        )
+
+
 def get_spark(
     app_name: str = "sparrow-spark",
     master: str | None = None,
@@ -237,17 +250,9 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    # The worker daemon wrapper (spark.python.daemon.module below) is
-    # imported by `python -m` in a fresh process whose PYTHONPATH is the
-    # Spark-provided zips plus the driver's: make sure this package's
-    # root is on it BEFORE the context starts, whatever cwd the driver
-    # was launched from.
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pythonpath = os.environ.get("PYTHONPATH", "")
-    if repo_root not in pythonpath.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            repo_root + (os.pathsep + pythonpath if pythonpath else "")
-        )
+    # Before the context starts: the worker daemon wrapper
+    # (spark.python.daemon.module below) is imported from it.
+    _export_pythonpath()
     # The driver JVM starts from a class-data archive (AppCDS) of the
     # classes an earlier driver loaded, which it maps instead of
     # loading and verifying each class from the jars again. This speeds
@@ -359,12 +364,9 @@ def get_spark(
         # 0.100->0.062 at 256 KiB; the <50 ms tail unchanged, A/B/A).
         # At production volumes post-shuffle bytes/cores far exceeds
         # any floor, so this knob only affects small interactive
-        # stages; env-overridable for clusters that want the 1 MiB
-        # default back.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "262144"),
-        )
+        # stages; clusters that want the 1 MiB default back pass it
+        # in extra_conf.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "262144")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -393,21 +395,10 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     apply to it.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Session-wide once, not per-load: TIMESTAMP(NANOS) parquet columns
-    # (events.ts) need the legacy long read path; sources.load_table
-    # relies on this being set and converts longs explicitly.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Local-mode python workers inherit the driver env: make sure they
-    # can import this package even when the driver process was started
-    # from another cwd. (Worker callables are cloudpickled by value
-    # anyway — see operators/multimodal.py — this is belt-and-braces
-    # for user-registered UDFs.)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pythonpath = os.environ.get("PYTHONPATH", "")
-    if repo_root not in pythonpath.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            repo_root + (os.pathsep + pythonpath if pythonpath else "")
-        )
+    # Worker callables are cloudpickled by value anyway (see
+    # operators/multimodal.py); this is belt-and-braces for
+    # user-registered UDFs.
+    _export_pythonpath()
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     except Exception:

@@ -10,13 +10,16 @@ verify with df.explain() that PushedFilters/ReadSchema reach the scan.
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import LongType, StructField, StructType, TimestampNTZType
 
 TABLES = [
     "region",
@@ -32,72 +35,58 @@ TABLES = [
 ]
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark's vectorized
-    reader rejects them outright, so they need the legacy long path."""
-    try:
-        schema = pq.read_schema(path)
-    except Exception:
-        return []
-    return [
-        n
-        for n, t in zip(schema.names, schema.types)
-        if pa.types.is_timestamp(t) and t.unit == "ns"
-    ]
+def fixture_schema(
+    spark: SparkSession, path: str
+) -> tuple[StructType, dict[str, Column]]:
+    """Read the arrow schema of the parquet file at `path` (for a
+    directory: the first *.parquet file under it) once, and return the
+    Spark read schema plus the per-column conversions that bring every
+    timestamp to TimestampType (LTZ).
 
-
-def _ntz_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP (isAdjustedToUTC=false) that
-    Spark reads as TIMESTAMP_NTZ. The fixture generator has produced
-    both UTC-adjusted and NTZ micros across rounds; the engine's
-    canonical in-memory type is TimestampType (LTZ), which every
-    timestamp function (unix_micros, window(), date_trunc) accepts.
-    With the session timezone pinned to UTC (session.py) the NTZ->LTZ
-    cast is a value-exact reinterpretation, so normalizing here keeps
-    every downstream plan and oracle identical regardless of which
-    physical annotation the fixture carries. Nanos NTZ is excluded:
-    it goes through the legacy-long path above."""
-    try:
-        schema = pq.read_schema(path)
-    except Exception:
-        return []
-    return [
-        n
-        for n, t in zip(schema.names, schema.types)
-        if pa.types.is_timestamp(t) and t.tz is None and t.unit != "ns"
-    ]
+    Handing the reader this schema means no schema-inference job per
+    load; the reference likewise gives its scan the catalog schema
+    instead of inferring one. The fixture generator has shipped three
+    timestamp encodings across rounds, so none is assumed:
+    - TIMESTAMP(NANOS): Spark's vectorized reader rejects it, so it is
+      read as epoch-nanos bigint (spark.sql.legacy.parquet.nanosAsLong,
+      set here and only when such a column exists) and converted with
+      integer `div` — exact for microsecond-aligned data, immune to the
+      precision loss of a float division.
+    - micros, isAdjustedToUTC=false: read as timestamp_ntz and cast to
+      LTZ, a value-exact reinterpretation under the UTC session
+      timezone pinned in session.py.
+    - UTC-adjusted micros: read as TimestampType as is.
+    Every other column maps through from_arrow_type; a type it cannot
+    map raises."""
+    probe = path
+    if os.path.isdir(path):
+        # Recurse: partitioned/nested layouts keep their data files in
+        # subdirectories.
+        files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+        if not files:
+            raise FileNotFoundError(f"no .parquet file under {path}")
+        probe = files[0]
+    fields, fixes = [], {}
+    for f in pq.read_schema(probe):
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            dtype = LongType()
+            fixes[f.name] = F.timestamp_micros(F.expr(f"`{f.name}` div 1000"))
+        else:
+            dtype = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+            if isinstance(dtype, TimestampNTZType):
+                fixes[f.name] = F.col(f.name).cast("timestamp")
+        # File sources read every column as nullable.
+        fields.append(StructField(f.name, dtype, True))
+    return StructType(fields), fixes
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Paths are plain parquet files/dirs.
-
-    TIMESTAMP(NANOS) columns (e.g. events.ts) are read as nanosecond
-    longs via spark.sql.legacy.parquet.nanosAsLong and converted to
-    TimestampType with integer `div` arithmetic — exact for
-    microsecond-aligned data, and immune to double-precision loss that
-    a float division by 1000 would introduce on epoch-nanos magnitudes.
-    """
+    """Load one fixture table (a parquet file or directory) with its
+    timestamps normalized; see fixture_schema."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_cols(path)
-    if not ns_cols:
-        df = spark.read.parquet(path)
-        for c in _ntz_timestamp_cols(path):
-            # NTZ -> LTZ reinterpretation; value-exact under the UTC
-            # session timezone pinned in session.py. Plain column cast —
-            # stays in whole-stage codegen, no effect on pushdown of
-            # predicates over the other columns.
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-        return df
-    # Session setup (session.py tune_for_session / get_spark callers)
-    # enables nanosAsLong once; set here only if this session was never
-    # tuned (e.g. a bare external session) — at most one mutation, not
-    # one per load.
-    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+    schema, fixes = fixture_schema(spark, path)
+    return spark.read.schema(schema).parquet(path).withColumns(fixes)
 
 
 def widen(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

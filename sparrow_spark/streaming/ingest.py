@@ -16,7 +16,6 @@ state is per key and evicted on window close.
 from __future__ import annotations
 
 import atexit
-import glob
 import os
 import shutil
 import tempfile
@@ -24,6 +23,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparrow_spark.sources.tables import fixture_schema, load_table
 from sparrow_spark.streaming.constants import (
     ATTRIBUTION_INTERVAL,
     SESSION_GAP_INTERVAL,
@@ -34,61 +34,20 @@ from sparrow_spark.streaming.constants import (
     stream_scratch_dir,
 )
 
-EVENTS_SCHEMA_NANOS = (
-    "event_id bigint, ts bigint, user_id bigint, event_type string, "
-    "value double, props string"
-)
-EVENTS_SCHEMA_NTZ = (
-    "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
-    "value double, props string"
-)
-EVENTS_SCHEMA_LTZ = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-    "value double, props string"
-)
-
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream over events parquet, normalized so `ts` is
-    always TimestampType (LTZ) downstream. The fixture generator has
-    produced three physical encodings across rounds — TIMESTAMP(NANOS)
-    (read as long under nanosAsLong, integer div to micros),
-    TIMESTAMP(MICROS) isAdjustedToUTC=false (read as TIMESTAMP_NTZ,
-    cast to LTZ — value-exact under the UTC session timezone), and
-    UTC-adjusted micros (read as TimestampType directly). Detect which
-    via the parquet footer instead of assuming one (the round-4 bench
-    crash was a hard-coded nanos schema silently reading raw micros)."""
-    from sparrow_spark.sources.tables import _nanos_timestamp_cols, _ntz_timestamp_cols
-
-    probe = path
-    if os.path.isdir(path):
-        # Recurse: partitioned/nested layouts keep their data files in
-        # subdirectories, and probing the directory path itself would
-        # silently fall through to the LTZ branch (mis-decoding a
-        # nanos/NTZ fixture). No parquet file at all is a hard error.
-        files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-        if not files:
-            raise FileNotFoundError(
-                f"no .parquet file under {path} to probe the events "
-                "timestamp encoding from"
-            )
-        probe = files[0]
-    is_nanos = "ts" in _nanos_timestamp_cols(probe)
-    is_ntz = "ts" in _ntz_timestamp_cols(probe)
+    """File-source stream over events parquet (a file or a directory),
+    read with the schema and timestamp conversions of
+    sources.tables.fixture_schema, so `ts` is TimestampType (LTZ)
+    whatever encoding the fixture carries."""
+    schema, fixes = fixture_schema(spark, path)
     if os.path.isfile(path):
         # The file source requires a directory; expose a single-file
         # fixture through a symlink dir (read-only, nothing copied).
         d = tempfile.mkdtemp(prefix="events-stream-")
         os.symlink(os.path.abspath(path), os.path.join(d, os.path.basename(path)))
         path = d
-    if is_nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.readStream.schema(EVENTS_SCHEMA_NANOS).parquet(path)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if is_ntz:
-        raw = spark.readStream.schema(EVENTS_SCHEMA_NTZ).parquet(path)
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.readStream.schema(EVENTS_SCHEMA_LTZ).parquet(path)
+    return spark.readStream.schema(schema).parquet(path).withColumns(fixes)
 
 
 def windowed_event_counts(
@@ -476,8 +435,6 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcnt = spark.table(name).withColumn("cnt", F.col("cnt").cast("double"))
 
     # Baseline: corpus-wide bin distribution (5 rows, broadcast).
-    from sparrow_spark.sources import load_table
-
     base = (
         load_table(spark, sf_dir, "events")
         .select(_value_bin(F.col("value")).alias("bin"))

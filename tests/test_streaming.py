@@ -81,7 +81,6 @@ def test_stateful_sessionize_matches_batch(spark, sf_dir, tmp_path):
     must be emitted."""
     from pyspark.sql import Window
 
-    from sparrow_spark.streaming.ingest import EVENTS_SCHEMA_NANOS
     from sparrow_spark.streaming.stateful import stateful_sessionize
 
     ev = load_table(spark, sf_dir, "events")
@@ -93,7 +92,10 @@ def test_stateful_sessionize_matches_batch(spark, sf_dir, tmp_path):
     ev_raw.filter(F.col("event_id") > mid).coalesce(1).write.parquet(f"{src}/b")
 
     raw = (
-        spark.readStream.schema(EVENTS_SCHEMA_NANOS)
+        spark.readStream.schema(
+            "event_id bigint, ts bigint, user_id bigint, event_type string, "
+            "value double, props string"
+        )
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(src)

@@ -19,7 +19,16 @@ Spark-first:
   multi-executor scale (no collect-to-driver in any operator path).
 """
 
-from sparrow_spark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # Lazy (PEP 562): `python -m sparrow_spark.worker_daemon` imports
+    # this package first, and must choose where pyspark comes from
+    # before anything imports it.
+    if name == "get_spark":
+        from sparrow_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -569,6 +569,10 @@ class SparrowServer:
 
         class Handler(socketserver.BaseRequestHandler):
             def handle(self) -> None:
+                # send_resultset makes one sendall per packet; with
+                # Nagle on, each response after the first packet waits
+                # for the client's delayed ACK (~40 ms per statement).
+                self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
                 conn = _Conn(self.request, outer.engine.new_session(), outer.lock)
                 try:
                     conn.run()

@@ -37,7 +37,7 @@ from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
-C1_ONLY = "-XX:TieredStopAtLevel=1"
+C1_ONLY = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 # CDS warnings ("shared class paths mismatch", "Skipping ..." at dump)
 # go to stdout by default, which the wire server's READY/BYE protocol
 # and bench.py's last-line-is-JSON contract share with the JVM.
@@ -321,7 +321,12 @@ def get_spark(
         # whole run, builds and first executions included, ~60% longer;
         # perfbench's 32-task calibration job ~2.5 s against ~0.4 s.
         # Driver-only: executor JVMs on a cluster keep C2 for their
-        # data-plane loops. Set as defaultJavaOptions, which the
+        # data-plane loops. Without tiering the JVM reserves a 48 MiB
+        # code cache, not the tiered 240 MiB; one long selfcheck JVM
+        # filled it ("CodeCache is full. Compiler has been disabled",
+        # then "Out of space in CodeCache for adapters" killed a
+        # task), so C1_ONLY sizes it back to 240 MiB, a reservation of
+        # address space, not of memory. Set as defaultJavaOptions, which the
         # launcher puts before extraJavaOptions, so a caller's
         # extraJavaOptions (benchmark harness, deployers) adds to it
         # instead of replacing it; a caller that wants C2 back
@@ -367,6 +372,23 @@ def get_spark(
         # stages; clusters that want the 1 MiB default back pass it
         # in extra_conf.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "262144")
+        # Tungsten execution pages of 1 MiB. Left unset, Spark sizes a
+        # page from the heap (execution pool / cores / 16, rounded up
+        # to a power of two): 64 MiB for the 8g driver
+        # (memoryManager().pageSizeBytes() = 67108848). Every task that
+        # sorts, aggregates or writes a shuffle allocates and zeroes at
+        # least one page, even for a few KB of rows, and under G1 with
+        # 4 MiB regions each page is a humongous object. One olap_pack
+        # pass (4-vCPU box) ran 17 humongous-allocation concurrent
+        # starts and 8 mark cycles and committed 2.5-4.5 GB of heap;
+        # with 1 MiB pages it ran none and 1 mark cycle and committed
+        # 1.06 GB, peak RSS 4.3-4.5 -> 2.7-2.9 GB. The page table has
+        # 8192 entries per task, so 1 MiB pages cap one task's
+        # in-memory execution state at 8 GiB; here the pool (4.7 GB
+        # for the whole local driver) runs out first, and a task
+        # spills. Cluster deployers with larger executors pass a
+        # larger page in extra_conf.
+        .config("spark.buffer.pageSize", "1m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -391,8 +413,9 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     The driver may hand us a session it built itself; only runtime-settable
     confs are applied here (timezone matters for timestamp correctness).
     Its JVM is already running, so launch-time settings of get_spark
-    (driver memory, the C1-only JIT, the class-data archive) cannot
-    apply to it.
+    (driver memory, the C1-only JIT and its code cache, the class-data
+    archive, the 1 MiB execution page) cannot apply to it: it keeps
+    Spark's heap-derived page size.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Worker callables are cloudpickled by value anyway (see

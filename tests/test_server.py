@@ -489,3 +489,22 @@ def test_wire_change_user_switches_schema(server):
     _, rows = c.query("SELECT database() AS d, @stale AS s")
     assert rows == [["cu_new", None]]  # schema switched, vars cleared
     c.quit()
+
+
+def test_accepted_socket_disables_nagle(server, monkeypatch):
+    # A result set goes out as one sendall per packet; with Nagle on,
+    # the client's delayed ACK holds each response back ~40 ms.
+    from sparrow_spark import server as server_mod
+
+    seen = []
+    run = server_mod._Conn.run
+
+    def recording_run(conn):
+        seen.append(conn.sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+        return run(conn)
+
+    monkeypatch.setattr(server_mod._Conn, "run", recording_run)
+    c = MiniClient(server.host, server.port)
+    assert c.ping() == ("ok", 0)
+    c.quit()
+    assert seen and all(seen)

@@ -16,6 +16,52 @@ def test_driver_jvm_runs_c1_only(spark):
     assert C1_ONLY in [str(a) for a in mx.getInputArguments()]
 
 
+def test_driver_code_cache_is_the_tiered_size(spark):
+    # C1 only would otherwise reserve 48 MiB, which one long
+    # selfcheck JVM filled.
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("ReservedCodeCacheSize").getValue() == str(240 * 2**20)
+
+
+def test_execution_page_is_one_mib(spark):
+    env = spark._jvm.org.apache.spark.SparkEnv.get()
+    assert env.memoryManager().pageSizeBytes() == 2**20
+
+
+def test_one_task_state_spans_many_pages(spark):
+    """A groupBy and an orderBy whose state, in one task each, is many
+    1 MiB pages: 220k distinct string keys."""
+    from pyspark.sql import functions as F
+
+    n, keys = 300_000, 220_000
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        rows = (
+            spark.range(0, n, 1, 1)
+            .select(
+                F.format_string("key-%07d", F.col("id") % keys).alias("k"),
+                F.col("id"),
+            )
+            .groupBy("k")
+            .agg(F.count("*").alias("c"), F.sum("id").alias("s"))
+            .orderBy("k")
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    expected = {}
+    for i in range(n):
+        c, s = expected.get(i % keys, (0, 0))
+        expected[i % keys] = (c + 1, s + i)
+    assert [(r.k, r.c, r.s) for r in rows] == [
+        (f"key-{k:07d}", c, s) for k, (c, s) in sorted(expected.items())
+    ]
+
+
 def test_caller_java_options_add_to_c1_only():
     """A caller's spark.driver.extraJavaOptions (the benchmark harness,
     a deployer) must reach the JVM beside the C1-only flag, not replace

@@ -20,6 +20,7 @@ import json
 import os
 import re
 import shutil
+import uuid
 from dataclasses import dataclass, field
 
 # Reference type surface (src/meta/meta_util.rs:548-562): INT/FLOAT/CHAR
@@ -189,7 +190,9 @@ class EngineCatalog:
         if not os.path.isdir(p):
             return []
         return sorted(
-            d for d in os.listdir(p) if os.path.isfile(self._meta_path(schema, d))
+            d
+            for d in os.listdir(p)
+            if not d.startswith(".") and os.path.isfile(self._meta_path(schema, d))
         )
 
     def has_table(self, schema: str, table: str) -> bool:
@@ -210,7 +213,15 @@ class EngineCatalog:
     def drop_table(self, schema: str, table: str) -> None:
         if not self.has_table(schema, table):
             raise ValueError(f"Unknown table '{schema}.{table}'")
-        shutil.rmtree(self.table_path(schema, table))
+        # Move the directory out of the table's path before removing
+        # it: a writer waiting for the table's lock reopens the lock
+        # file with O_CREAT, and must find no directory rather than add
+        # a file to a tree being removed.
+        doomed = os.path.join(
+            self.schema_path(schema), f".dropped-{table}-{uuid.uuid4().hex}"
+        )
+        os.rename(self.table_path(schema, table), doomed)
+        shutil.rmtree(doomed)
 
     def rename_table(
         self, schema: str, table: str, new_schema: str, new_table: str

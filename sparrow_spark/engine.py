@@ -31,15 +31,17 @@ Design decisions vs the reference:
 
 from __future__ import annotations
 
+import fcntl
 import functools
 import itertools
 import json
 import os
 import re
 import shutil
+import time
 import uuid
 import weakref
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -187,12 +189,6 @@ class Engine:
     def __init__(self, spark: SparkSession, warehouse_dir: str):
         self.spark = spark
         self.catalog = EngineCatalog(warehouse_dir)
-        # Lock-holder identity finer than the pid: two Engine instances
-        # in ONE process (the shared-warehouse test topology, or two
-        # server sessions in one interpreter) must not mistake each
-        # other's lock files for their own — the carried-lock removal
-        # after a rename checks this id, not just the pid.
-        self._engine_id = uuid.uuid4().hex
         # All per-connection state lives in Session objects; the engine
         # always executes on behalf of exactly one (its default session
         # when called directly, the activated one under Session.sql).
@@ -344,7 +340,7 @@ class Engine:
         if two == "ALTER TABLE":
             return self._locked_dml(stmt, self._alter_table)
         if two == "RENAME TABLE":
-            return self._locked_dml(stmt, self._rename_table)
+            return self._rename_table(stmt)
         if head == "INSERT":
             return self._locked_dml(stmt, self._insert)
         if two == "TRUNCATE TABLE" or head == "TRUNCATE":
@@ -747,19 +743,17 @@ class Engine:
     def _drop_table(self, stmt: str) -> Result:
         m = re.match(r"DROP\s+TABLE\s+(IF\s+EXISTS\s+)?(.+)$", stmt, re.I)
         if_exists, names = m.groups()
-        # Validate every name before dropping any, so a typo in a
-        # multi-table DROP doesn't leave partial effects.
-        resolved = []
-        for raw in split_top_level(names):
-            schema, table = self._resolve_table_name(raw)
-            if not self.catalog.has_table(schema, table):
-                if if_exists:
-                    continue
+        named = [self._resolve_table_name(raw) for raw in split_top_level(names)]
+        with self._write_locks(named):
+            # Validate every name before dropping any, so a typo in a
+            # multi-table DROP doesn't leave partial effects.
+            existing = [n for n in named if self.catalog.has_table(*n)]
+            if len(existing) < len(named) and not if_exists:
+                schema, table = next(n for n in named if n not in existing)
                 raise SparrowError(1051, f"Unknown table '{schema}.{table}'")
-            resolved.append((schema, table))
-        for schema, table in resolved:
-            self.catalog.drop_table(schema, table)
-            self.spark.sql(f"DROP TABLE IF EXISTS `{schema}`.`{table}`")
+            for schema, table in existing:
+                self.catalog.drop_table(schema, table)
+                self.spark.sql(f"DROP TABLE IF EXISTS `{schema}`.`{table}`")
         return Result("ok")
 
     def _rename_table(self, stmt: str) -> Result:
@@ -779,6 +773,13 @@ class Engine:
             src = self._resolve_table_name(m.group(1))
             dst = self._resolve_table_name(m.group(2))
             pairs.append((src, dst))
+        with self._write_locks(name for pair in pairs for name in pair):
+            return self._rename_pairs(pairs)
+
+    def _rename_pairs(self, pairs) -> Result:
+        """Validate and apply RENAME pairs; the caller holds the write
+        lock of every table named. Each table's lock file moves with
+        its directory, so the lock stays held under the new name."""
         renamed_away = set()
         created = set()
         for (ss, st), (ds, dt) in pairs:
@@ -796,44 +797,8 @@ class Engine:
             created.add((ds, dt))
         for (ss, st), (ds, dt) in pairs:
             tdef = self.catalog.rename_table(ss, st, ds, dt)
-            # The directory move carries the source's .write.lock file
-            # along to the DESTINATION: _locked_dml's release then
-            # no-ops on the old path, and the carried file wedges every
-            # later statement on the new name until the 120 s stale
-            # timeout (it records a live pid — our own). Remove it iff
-            # it is ours — pid AND engine id, so a sibling Engine in
-            # the same process keeps its lock; a foreign holder's lock
-            # is left for the staleness sweep (the multi-pair form
-            # never locked that source, so a foreign holder is already
-            # racing the move itself). try/finally: destination mutual
-            # exclusion is held until the Spark re-registration
-            # completes on success, but a failing DROP/re-register must
-            # still release our own carried lock — otherwise the
-            # exception leaves the new name wedged behind a live-pid
-            # lock.
-            try:
-                self.spark.sql(f"DROP TABLE IF EXISTS `{ss}`.`{st}`")
-                self._register_spark_table(tdef)
-            finally:
-                carried = os.path.join(
-                    self.catalog.table_path(ds, dt), ".write.lock"
-                )
-                try:
-                    with open(carried) as f:
-                        holder = json.load(f)
-                    # A pre-eid lock format (pid only) written by an
-                    # older build and carried through the move is
-                    # still OURS when the pid is this process: treat
-                    # a MISSING eid as own-lock for mixed-version
-                    # operation on one warehouse. A present-but-
-                    # different eid is a sibling Engine in this
-                    # process — keep its lock.
-                    if holder.get("pid") == os.getpid() and holder.get(
-                        "eid", self._engine_id
-                    ) == self._engine_id:
-                        os.remove(carried)
-                except (FileNotFoundError, ValueError, OSError):
-                    pass
+            self.spark.sql(f"DROP TABLE IF EXISTS `{ss}`.`{st}`")
+            self._register_spark_table(tdef)
         return Result("ok")
 
     def _alter_rename(self, stmt: str) -> Result | None:
@@ -894,9 +859,8 @@ class Engine:
         if m:
             src = self._resolve_table_name(m.group(1))
             dst = self._resolve_table_name(m.group(2))
-            return self._rename_table(
-                f"RENAME TABLE {src[0]}.{src[1]} TO {dst[0]}.{dst[1]}"
-            )
+            # ALTER TABLE already holds the source's write lock.
+            return self._rename_pairs([(src, dst)])
         return None
 
     def _alter_table(self, stmt: str) -> Result:
@@ -1598,32 +1562,20 @@ class Engine:
     # directory must not interleave read-modify-write statements on the
     # same table: UPDATE/DELETE read the matched file list and then
     # swap files, so an unserialized concurrent writer could delete a
-    # file between those steps (lost update / dangling read). An
-    # exclusive per-table ADVISORY lock file (O_CREAT|O_EXCL — atomic
-    # on POSIX and on HDFS/S3-with-conditional-put equivalents)
-    # serializes whole statements; readers never take it (COW file
-    # swaps keep scans consistent enough for the reference's
-    # non-transactional contract). Within the serialized order the
-    # semantics are last-writer-wins, exactly like the reference's KV
-    # store under its global mutex (src/meta/meta_def.rs guards
-    # metadata, not data, the same trade). A lock whose holder process
-    # is dead, or older than _LOCK_STALE_S, is broken — crash
-    # recovery without an external coordinator.
+    # file between those steps (lost update / dangling read). Each
+    # statement holds an exclusive flock(2) on <table_path>/.write.lock
+    # for its whole run; readers never take it (COW file swaps keep
+    # scans consistent enough for the reference's non-transactional
+    # contract). Within the serialized order the semantics are
+    # last-writer-wins, exactly like the reference's KV store under its
+    # global mutex (src/meta/meta_def.rs guards metadata, not data, the
+    # same trade). The file is never removed and its content is never
+    # read: the kernel releases the lock when the holder's descriptor
+    # closes or its process dies, so there is no holder to probe and no
+    # stale lock to break. flock, not POSIX record locks: those belong
+    # to the process, and two Engines in one process must exclude each
+    # other. The lock travels with the table directory on RENAME.
     _LOCK_TIMEOUT_S = 10.0
-    _LOCK_STALE_S = 120.0
-    # Hard ceiling: a lock older than this is broken even if its
-    # recorded pid probes alive. Liveness alone cannot distinguish the
-    # real holder from an unrelated process that recycled its pid (or
-    # a same-numbered pid on another host sharing the warehouse), and
-    # without an age backstop that collision wedges the table forever.
-    # Age = time since the last HEARTBEAT (r16): the holder refreshes
-    # its lock's mtime every _LOCK_HEARTBEAT_S while the statement
-    # runs, so a legitimate operation of ANY duration never trips the
-    # ceiling (the r15 ADVICE gap: a >1h OPTIMIZE used to lose its
-    # lock mid-write at the ceiling) — only a holder that stopped
-    # heartbeating (crashed, frozen, or pre-heartbeat) ages past it.
-    _LOCK_HARD_STALE_S = 3600.0
-    _LOCK_HEARTBEAT_S = 20.0
 
     _DML_TARGET_RE = re.compile(
         r"^(?:INSERT\s+(?:IGNORE\s+)?INTO|REPLACE\s+INTO|MERGE\s+INTO"
@@ -1637,211 +1589,52 @@ class Engine:
         m = self._DML_TARGET_RE.match(stmt)
         if not m:
             return fn(stmt)
-        schema, table = self._resolve_table_name(m.group(1))
-        if not self.catalog.has_table(schema, table):
-            return fn(stmt)  # let the statement raise its own 1146
-        with self._write_lock(schema, table):
+        with self._write_lock(*self._resolve_table_name(m.group(1))):
             return fn(stmt)
 
     @contextmanager
     def _write_lock(self, schema: str, table: str):
-        import time
-
         lock_path = os.path.join(
             self.catalog.table_path(schema, table), ".write.lock"
         )
-        deadline = time.time() + self._LOCK_TIMEOUT_S
+        deadline = time.monotonic() + self._LOCK_TIMEOUT_S
         while True:
             try:
-                fd = os.open(lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(
-                    fd,
-                    json.dumps(
-                        {
-                            "pid": os.getpid(),
-                            "eid": self._engine_id,
-                            "ts": time.time(),
-                        }
-                    ).encode(),
+                fd = os.open(lock_path, os.O_CREAT | os.O_RDWR)
+            except FileNotFoundError:
+                # No such table (or dropped or renamed away while we
+                # waited): the statement itself reports it.
+                yield
+                return
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                # The holder we waited for may have dropped or renamed
+                # the table: our lock is then on another path's file.
+                if os.fstat(fd).st_ino == os.stat(lock_path).st_ino:
+                    break
+            except (BlockingIOError, FileNotFoundError):
+                pass
+            os.close(fd)
+            if time.monotonic() > deadline:
+                raise SparrowError(
+                    1205,
+                    "Lock wait timeout exceeded; try restarting "
+                    f"transaction (table `{schema}`.`{table}`)",
                 )
-                os.close(fd)
-                break
-            except FileExistsError:
-                pid = None
-                try:
-                    st = os.stat(lock_path)
-                    with open(lock_path) as f:
-                        holder = json.load(f)
-                    pid = holder.get("pid")
-                    alive = False
-                    if isinstance(pid, int):
-                        try:
-                            os.kill(pid, 0)
-                            alive = True
-                        except ProcessLookupError:
-                            alive = False
-                        except PermissionError:
-                            alive = True  # exists, owned by another user
-                    age = time.time() - st.st_mtime
-                    stale = age > self._LOCK_STALE_S
-                    # Liveness is authoritative for local holders: a
-                    # lock recording a live local pid is not broken at
-                    # _LOCK_STALE_S — OPTIMIZE/whole-table compactions
-                    # legitimately exceed it and locks are not
-                    # refreshed mid-operation, so an age-only break
-                    # would re-admit exactly the lost write the lock
-                    # prevents (the waiter raises 1205 instead). The
-                    # ordinary stale window breaks only locks whose
-                    # holder cannot be probed (no parseable pid — e.g.
-                    # a crashed writer from another host in a shared
-                    # warehouse); a confirmed-dead local pid breaks
-                    # immediately. _LOCK_HARD_STALE_S breaks REGARDLESS
-                    # of liveness: a probed-alive pid may be an
-                    # unrelated process that recycled the dead
-                    # holder's pid, and without the hard ceiling that
-                    # collision wedges the table forever.
-                    dead_or_unprobeable = (
-                        (not alive) if isinstance(pid, int) else stale
-                    )
-                    if dead_or_unprobeable or age > self._LOCK_HARD_STALE_S:
-                        self._break_lock(lock_path, st)
-                        continue
-                except FileNotFoundError:
-                    continue  # holder released mid-probe; retry acquire
-                except (ValueError, OSError):
-                    # Unreadable or corrupt lock (e.g. a writer killed
-                    # between O_CREAT and the json write leaves a
-                    # 0-byte file): an unprobeable holder is broken by
-                    # age. Do NOT `continue` here — that would skip
-                    # the deadline check and the sleep below and spin
-                    # this waiter at 100% CPU forever on a permanently
-                    # corrupt lock.
-                    try:
-                        st = os.stat(lock_path)
-                        if (
-                            time.time() - st.st_mtime
-                            > self._LOCK_STALE_S
-                        ):
-                            self._break_lock(lock_path, st)
-                            continue
-                    except FileNotFoundError:
-                        continue  # released mid-probe; retry acquire
-                    except OSError:
-                        pass  # fall through to deadline + sleep
-                if time.time() > deadline:
-                    raise SparrowError(
-                        1205,
-                        "Lock wait timeout exceeded; try restarting "
-                        f"transaction (table `{schema}`.`{table}` "
-                        f"write-locked by pid {pid})",
-                    )
-                time.sleep(0.05)
-        import threading
-
-        stop_hb = threading.Event()
-        hb = threading.Thread(
-            target=self._lock_heartbeat,
-            args=(lock_path, stop_hb),
-            daemon=True,
-        )
-        hb.start()
+            time.sleep(0.05)
         try:
             yield
         finally:
-            stop_hb.set()
-            hb.join(timeout=1.0)
-            self._release_own_lock(lock_path)
+            os.close(fd)
 
-    def _break_lock(self, lock_path: str, observed) -> bool:
-        """Break a probed-breakable lock WITHOUT the probe->remove race
-        (r15 ADVICE): between a slow waiter's probe and its remove,
-        another waiter can break the same lock and a NEW holder can
-        re-create it — an unconditional remove then deletes the new
-        holder's LIVE lock and admits two writers. Instead the lock is
-        atomically RENAMED aside (only one waiter can win the rename)
-        and the renamed file's identity is compared against the stat
-        the probe decided on: same (inode, mtime) -> it really was the
-        stale/dead lock, discard it; different -> a live successor was
-        stolen, restore it with link() (atomic — fails rather than
-        clobbering if a third writer acquired meanwhile). Returns True
-        iff the probed lock was broken."""
-        breaking = (
-            f"{lock_path}.breaking.{os.getpid()}.{self._engine_id[:8]}"
-        )
-        try:
-            os.rename(lock_path, breaking)
-        except FileNotFoundError:
-            return False  # another waiter won the break / holder released
-        except OSError:
-            return False
-        try:
-            st = os.stat(breaking)
-            if (st.st_ino, st.st_mtime_ns) == (
-                observed.st_ino,
-                observed.st_mtime_ns,
-            ):
-                os.remove(breaking)
-                return True
-            # Stole a live successor's lock (created between our probe
-            # and the rename). Put it back atomically.
-            try:
-                os.link(breaking, lock_path)
-            except FileExistsError:
-                # Doubly raced within microseconds: a third writer
-                # already holds a new lock, so the stolen holder's
-                # cannot be restored without clobbering it. The stolen
-                # holder finishes unserialized (its identity-checked
-                # release is a no-op) — a bounded residual vs. the
-                # unconditional-remove bug this replaces.
-                pass
-            except OSError:
-                # link() unsupported on this filesystem: best-effort
-                # restore only if no new lock appeared.
-                if not os.path.exists(lock_path):
-                    try:
-                        os.rename(breaking, lock_path)
-                        return False
-                    except OSError:
-                        pass
-            try:
-                os.remove(breaking)
-            except OSError:
-                pass
-            return False
-        except OSError:
-            return False
-
-    def _lock_heartbeat(self, lock_path: str, stop) -> None:
-        """Refresh our lock's mtime every _LOCK_HEARTBEAT_S while the
-        statement runs, so the staleness windows measure time since
-        the holder was last ALIVE, not statement duration — the hard
-        ceiling then only ever breaks genuinely abandoned locks (r15
-        ADVICE). Refreshes only while the file still records OUR
-        engine id: never extends a successor's lock after ours was
-        broken."""
-        while not stop.wait(self._LOCK_HEARTBEAT_S):
-            try:
-                with open(lock_path) as f:
-                    if json.load(f).get("eid") != self._engine_id:
-                        return
-                os.utime(lock_path)
-            except (OSError, ValueError):
-                return
-
-    def _release_own_lock(self, lock_path: str) -> None:
-        """Remove the lock only if it is still OURS (r15 ADVICE: an
-        unconditional remove-by-path deletes a successor's live lock
-        whenever ours was broken mid-statement — the release-side twin
-        of the probe->remove race)."""
-        try:
-            with open(lock_path) as f:
-                if json.load(f).get("eid") != self._engine_id:
-                    return
-            os.remove(lock_path)
-        except (FileNotFoundError, ValueError):
-            pass
-        except OSError:
-            pass
+    @contextmanager
+    def _write_locks(self, tables):
+        """Lock several tables in sorted order, so two statements
+        naming the same tables cannot deadlock."""
+        with ExitStack() as stack:
+            for schema, table in sorted(set(tables)):
+                stack.enter_context(self._write_lock(schema, table))
+            yield
 
     # ------------------------------------------------------------------
     # physical helpers
@@ -2029,13 +1822,11 @@ class Engine:
                 "MIN FILES n must be trailing clauses",
             )
         rows = []
-        # Per-table write lock (r14 carried-lock-class sweep): OPTIMIZE
-        # rewrites the data dir via the same COW swap as UPDATE/DELETE,
-        # so an unlocked compaction could interleave with a concurrent
-        # DML's _replace_files and lose its writes. _locked_dml can't
-        # cover the multi-target form, so each target locks here; the
-        # lock file lives in table_path (never moved by the data-dir
-        # swap), so release always finds it.
+        # Per-table write lock: OPTIMIZE rewrites the data dir via the
+        # same COW swap as UPDATE/DELETE, so an unlocked compaction
+        # could interleave with a concurrent DML's _replace_files and
+        # lose its writes. _locked_dml can't cover the multi-target
+        # form, so each target locks here, one at a time.
         for schema, table in self._maintenance_targets(stmt, "OPTIMIZE"):
             with self._write_lock(schema, table):
                 tdef = self.catalog.load(schema, table)
@@ -2322,8 +2113,6 @@ class Engine:
         empty versions. The manifest create is O_EXCL-atomic; on a
         collision (concurrent committer — normally excluded by the
         write lock) the version number advances and retries."""
-        import time
-
         data_dir = self.catalog.data_path(schema, table)
         pool = self._snap_pool_dir(schema, table)
         os.makedirs(pool, exist_ok=True)

@@ -448,34 +448,25 @@ def _propagation_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
 
 def minlabel_clusters(
     pairs: DataFrame,
-    iterations: int | None = 3,
+    iterations: int = 3,
     partitions: int = 16,
-    max_rounds: int = 64,
 ) -> DataFrame:
     """Connected components over an (a_id, b_id) pair list by min-label
     propagation: every node starts as its own label; each round takes
     the min of its own and its neighbors' labels. After k rounds every
     node within graph distance k of its component's minimum carries it.
 
-    Two modes:
-
-    - ``iterations=k`` (lazy, bounded): builds a PURE plan — no driver
-      action at build time, so it composes with prepared-plan caching
-      and cold 1 g drivers (corpus work runs only at execution). LSH
-      duplicate components are near-cliques (measured diameter <= 2 at
-      sf0.001/0.01 vs the exact recursive-CTE oracle), so small k
-      converges — and because a silent mis-split would be a WRONG
-      ANSWER at corpus scale, the result carries a lazy convergence
-      guard: one extra propagation round feeds assert_true, so a
-      diameter > k component fails the query loudly at execution
-      instead of returning split clusters.
-    - ``iterations=None`` (converge): iterates until a round changes no
-      labels (the check is a count() on the pair-list-sized label
-      table, far from the corpus), unpersisting each superseded round
-      and the edge list before returning. The returned final round
-      stays persisted (it was just materialized by the convergence
-      check); callers unpersist it when done. Use this mode from batch
-      jobs; the lazy mode is for registered/prepared queries.
+    Runs ``iterations`` rounds and builds a PURE plan — no driver
+    action at build time, so it composes with prepared-plan caching
+    and cold 1 g drivers (corpus work runs only at execution). LSH
+    duplicate components are near-cliques (measured diameter <= 2 at
+    sf0.001/0.01 vs the exact recursive-CTE oracle), so small k
+    converges — and because a silent mis-split would be a WRONG
+    ANSWER at corpus scale, the result carries a lazy convergence
+    guard: one extra propagation round feeds assert_true, so a
+    diameter > k component fails the query loudly at execution
+    instead of returning split clusters. For graphs of unknown
+    diameter use ``alternating_cc``, which iterates until converged.
 
     Scale: each round is one equi-join + one groupBy on the PAIR list
     (tiny relative to the corpus); the corpus itself is never touched.
@@ -500,62 +491,31 @@ def minlabel_clusters(
     labels = edges.select("src").distinct().select(
         F.col("src").alias("id"), F.col("src").alias("label")
     )
-
-    if iterations is not None:
-        for _ in range(iterations):
-            labels = (
-                _propagation_round(edges, labels)
-                .drop("changed")
-                .repartition(partitions, "id")
-                .persist()
-            )
-        # Lazy convergence guard: one more round; any would-be change
-        # raises at execution. The guard must feed an OUTPUT column or
-        # column pruning would drop it — adding the always-NULL assert
-        # (cast to long, coalesced to 0) to the label keeps it alive
-        # without changing any value.
-        guard = F.coalesce(
-            F.assert_true(
-                ~F.col("changed"),
-                F.lit(
-                    "minlabel_clusters: component diameter exceeds "
-                    f"iterations={iterations}; raise iterations or use "
-                    "iterations=None (converge mode)"
-                ),
-            ).cast("long"),
-            F.lit(0),
-        )
-        return _propagation_round(edges, labels).select(
-            "id", (F.col("label") + guard).alias("label")
-        )
-
-    prev: DataFrame | None = None
-    for _ in range(max_rounds):
-        new = (
+    for _ in range(iterations):
+        labels = (
             _propagation_round(edges, labels)
+            .drop("changed")
             .repartition(partitions, "id")
             .persist()
         )
-        n_changed = new.filter("changed").count()  # materializes the round
-        if prev is not None:
-            prev.unpersist()
-        prev = new
-        labels = new.drop("changed")
-        if n_changed == 0:
-            # Hand back a single self-contained cached result: persist
-            # the label-only projection, materialize it off the round's
-            # cache, then drop the round and edge caches — the caller
-            # unpersists exactly the DataFrame it received.
-            final = labels.persist()
-            final.count()
-            new.unpersist()
-            edges.unpersist()
-            return final
-    edges.unpersist()
-    if prev is not None:
-        prev.unpersist()
-    raise RuntimeError(
-        f"minlabel_clusters did not converge within {max_rounds} rounds"
+    # Lazy convergence guard: one more round; any would-be change
+    # raises at execution. The guard must feed an OUTPUT column or
+    # column pruning would drop it — adding the always-NULL assert
+    # (cast to long, coalesced to 0) to the label keeps it alive
+    # without changing any value.
+    guard = F.coalesce(
+        F.assert_true(
+            ~F.col("changed"),
+            F.lit(
+                "minlabel_clusters: component diameter exceeds "
+                f"iterations={iterations}; raise iterations or use "
+                "alternating_cc, which iterates until converged"
+            ),
+        ).cast("long"),
+        F.lit(0),
+    )
+    return _propagation_round(edges, labels).select(
+        "id", (F.col("label") + guard).alias("label")
     )
 
 

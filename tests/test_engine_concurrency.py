@@ -2,20 +2,75 @@
 
 Two Engine instances pointed at ONE warehouse directory model two
 server processes mounting the same storage. Statement-level write
-serialization comes from the per-table advisory lock file
-(engine.py:_write_lock): read-modify-write statements never
-interleave, giving last-writer-wins over a serial order — the same
-non-transactional contract as the reference's KV store under its
+serialization comes from an exclusive flock(2) on each table's
+`.write.lock` (engine.py:_write_lock): read-modify-write statements
+never interleave, giving last-writer-wins over a serial order — the
+same non-transactional contract as the reference's KV store under its
 global mutex, but at table granularity.
+
+Foreign holders here take the same kernel lock through their own file
+descriptor, in this process or in a child process. The kernel frees
+the lock when that descriptor closes or its process dies, so the
+tests check that the lock is free with a non-blocking flock rather
+than by looking for the file.
 """
 
-import json
+import fcntl
 import os
+import subprocess
+import sys
 import threading
+import time
+from contextlib import contextmanager
 
 import pytest
 
 from sparrow_spark.engine import Engine, SparrowError
+
+# Takes the lock on argv[1], says so, and holds it for argv[2] seconds.
+_HOLDER = (
+    "import fcntl, os, sys, time\n"
+    "fd = os.open(sys.argv[1], os.O_CREAT | os.O_RDWR)\n"
+    "fcntl.flock(fd, fcntl.LOCK_EX)\n"
+    "print('held', flush=True)\n"
+    "time.sleep(float(sys.argv[2]))\n"
+)
+
+
+def _lock_path(engine, table):
+    return os.path.join(engine.catalog.table_path("s", table), ".write.lock")
+
+
+@contextmanager
+def held(engine, table):
+    """Hold `table`'s write lock through a descriptor of our own."""
+    fd = os.open(_lock_path(engine, table), os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        os.close(fd)
+
+
+def lock_is_free(engine, table):
+    fd = os.open(_lock_path(engine, table), os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        return True
+    except BlockingIOError:
+        return False
+    finally:
+        os.close(fd)
+
+
+def _start_holder(engine, table, seconds):
+    holder = subprocess.Popen(
+        [sys.executable, "-c", _HOLDER, _lock_path(engine, table), str(seconds)],
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    assert holder.stdout.readline().strip() == "held"
+    return holder
 
 
 @pytest.fixture()
@@ -73,70 +128,46 @@ def test_contended_threads_never_lose_updates(shared_warehouse):
 def test_lock_contention_times_out_with_1205(shared_warehouse, monkeypatch):
     e1, e2 = shared_warehouse
     monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    # A live foreign holder: our own pid is alive, and a fresh mtime
-    # defeats the staleness break.
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "ts": 0}, f)
-    try:
+    with held(e1, "t"):
         with pytest.raises(SparrowError) as ei:
             e2.sql("UPDATE t SET v = 9 WHERE id = 1")
         assert ei.value.code == 1205
-    finally:
-        os.remove(lock)
+    (v,) = e1.sql("SELECT v FROM t WHERE id = 1").rows()[0]
+    assert v == 0
 
 
-def test_dead_holder_lock_is_broken(shared_warehouse):
+def test_dead_holder_lock_is_broken(shared_warehouse, monkeypatch):
+    """A holder process killed mid-hold frees the lock at once: the
+    next UPDATE runs well inside even a short lock timeout."""
     e1, e2 = shared_warehouse
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": 2 ** 22 + 12345, "ts": 0}, f)  # no such pid
-    e2.sql("UPDATE t SET v = 7 WHERE id = 2")  # breaks the stale lock
+    monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
+    holder = _start_holder(e1, "t", 60)
+    try:
+        assert not lock_is_free(e1, "t")
+    finally:
+        holder.kill()
+        holder.wait(timeout=10)
+    e2.sql("UPDATE t SET v = 7 WHERE id = 2")
     (v,) = e1.sql("SELECT v FROM t WHERE id = 2").rows()[0]
     assert v == 7
-    assert not os.path.exists(lock)
 
 
 def test_lock_released_after_statement_and_after_error(shared_warehouse):
-    e1, e2 = shared_warehouse
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
+    e1, _e2 = shared_warehouse
     e1.sql("UPDATE t SET v = 1 WHERE id = 1")
-    assert not os.path.exists(lock)
+    assert lock_is_free(e1, "t")
     with pytest.raises(SparrowError):
         e1.sql("UPDATE t SET nosuch = 1 WHERE id = 1")
-    assert not os.path.exists(lock)
+    assert lock_is_free(e1, "t")
 
 
 def test_waits_for_live_foreign_process_holder(shared_warehouse):
     """A lock held by a DIFFERENT live process blocks the statement
     until released — the cross-process case the threaded tests can't
-    exercise (same pid)."""
-    import subprocess
-    import sys
-    import time
-
+    exercise."""
     e1, e2 = shared_warehouse
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    holder = subprocess.Popen(
-        [
-            sys.executable,
-            "-c",
-            (
-                "import json, os, sys, time\n"
-                f"fd = os.open({lock!r}, os.O_CREAT | os.O_EXCL | os.O_WRONLY)\n"
-                "os.write(fd, json.dumps({'pid': os.getpid(),"
-                " 'ts': time.time()}).encode())\n"
-                "os.close(fd)\n"
-                "print('held', flush=True)\n"
-                "time.sleep(1.5)\n"
-                f"os.remove({lock!r})\n"
-            ),
-        ],
-        stdout=subprocess.PIPE,
-        text=True,
-    )
+    holder = _start_holder(e1, "t", 1.5)
     try:
-        assert holder.stdout.readline().strip() == "held"
         t0 = time.time()
         e2.sql("UPDATE t SET v = 42 WHERE id = 1")
         waited = time.time() - t0
@@ -193,48 +224,111 @@ def test_concurrent_snapshot_writers_linear_history(shared_warehouse):
 
 
 def test_optimize_respects_the_write_lock(shared_warehouse, monkeypatch):
-    """r14 carried-lock-class sweep: OPTIMIZE compacts via the same COW
-    data-dir swap as UPDATE, so it must honor the per-table advisory
-    lock — an unlocked compaction racing a DML could drop the DML's
-    file swap."""
+    """OPTIMIZE compacts via the same COW data-dir swap as UPDATE, so
+    it must honor the per-table lock — an unlocked compaction racing a
+    DML could drop the DML's file swap."""
     e1, e2 = shared_warehouse
     monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "ts": 0}, f)
-    try:
+    with held(e1, "t"):
         with pytest.raises(SparrowError) as ei:
             e2.sql("OPTIMIZE TABLE t")
         assert ei.value.code == 1205
-    finally:
-        os.remove(lock)
 
 
 def test_truncate_respects_the_write_lock(shared_warehouse, monkeypatch):
-    """TRUNCATE is a whole-table COW rewrite; before r14 it slipped
-    through _DML_TARGET_RE and ran unlocked."""
+    """TRUNCATE is a whole-table COW rewrite and must wait its turn."""
     e1, e2 = shared_warehouse
     monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "ts": 0}, f)
-    try:
+    with held(e1, "t"):
         with pytest.raises(SparrowError) as ei:
             e2.sql("TRUNCATE TABLE t")
         assert ei.value.code == 1205
-    finally:
-        os.remove(lock)
+    assert len(e1.sql("SELECT id FROM t").rows()) == 3
+
+
+def test_rename_and_drop_wait_for_the_write_lock(shared_warehouse, monkeypatch):
+    """RENAME TABLE moves, and DROP TABLE deletes, the directory a
+    concurrent writer is rewriting: both must wait for its lock."""
+    e1, e2 = shared_warehouse
+    monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
+    with held(e1, "t"):
+        for stmt in ("RENAME TABLE t TO u", "DROP TABLE t"):
+            with pytest.raises(SparrowError) as ei:
+                e2.sql(stmt)
+            assert ei.value.code == 1205, stmt
+    assert not e1.catalog.has_table("s", "u")
+    assert len(e1.sql("SELECT id FROM t").rows()) == 3
+
+
+def test_drop_leaves_no_tree_for_a_polling_writer(shared_warehouse, monkeypatch):
+    """A writer waiting for a table's lock reopens the lock file with
+    O_CREAT on every poll. A poll that lands while DROP TABLE removes
+    the table must find no directory, rather than add a file to the
+    tree and make the removal fail."""
+    e1, _e2 = shared_warehouse
+    lock = _lock_path(e1, "t")
+    unlink = os.unlink
+
+    def unlink_then_poll(path, *args, **kwargs):
+        unlink(path, *args, **kwargs)
+        if os.path.basename(path) == ".write.lock":
+            try:
+                os.close(os.open(lock, os.O_CREAT | os.O_RDWR))
+            except FileNotFoundError:
+                pass
+
+    monkeypatch.setattr(os, "unlink", unlink_then_poll)
+    e1.sql("DROP TABLE t")
+    monkeypatch.undo()
+    assert os.listdir(e1.catalog.schema_path("s")) == []
+
+
+def test_lock_held_across_rename_blocks_new_name(shared_warehouse, monkeypatch):
+    """The lock file moves with the table directory, and the kernel
+    lock stays on it: while RENAME TABLE t TO u still holds the lock,
+    a writer on the new name u waits for it."""
+    e1, e2 = shared_warehouse
+    monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
+    codes = []
+    register = e1._register_spark_table
+
+    def register_then_contend(tdef):
+        register(tdef)
+        try:
+            e2.sql("UPDATE u SET v = 5 WHERE id = 1")
+        except SparrowError as e:
+            codes.append(e.code)
+
+    monkeypatch.setattr(e1, "_register_spark_table", register_then_contend)
+    e1.sql("RENAME TABLE t TO u")
+    assert codes == [1205]
+    e2.sql("UPDATE u SET v = 5 WHERE id = 1")
+    (v,) = e1.sql("SELECT v FROM u WHERE id = 1").rows()[0]
+    assert v == 5
+
+
+def test_old_format_lock_file_blocks_nobody(shared_warehouse, monkeypatch):
+    """A `.write.lock` left by a build that used the file's existence
+    as the lock (a JSON holder record) is an ordinary file now: only a
+    kernel lock on it blocks a writer."""
+    import json
+
+    e1, e2 = shared_warehouse
+    monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
+    with open(_lock_path(e1, "t"), "w") as f:
+        json.dump({"pid": os.getpid(), "eid": "old", "ts": time.time()}, f)
+    e2.sql("UPDATE t SET v = 3 WHERE id = 3")
+    (v,) = e1.sql("SELECT v FROM t WHERE id = 3").rows()[0]
+    assert v == 3
 
 
 def test_directory_rewriting_ops_do_not_orphan_locks(shared_warehouse):
-    """RESTORE / OPTIMIZE / VACUUM all rewrite or prune files UNDER the
-    table directory while the lock file sits at its top level; each op
-    followed by an IMMEDIATE DML must run without waiting out a lock
-    timeout, and no .write.lock may survive any of them (the rename
-    carried-lock failure mode, audited across every dir-moving op)."""
+    """RESTORE / OPTIMIZE / VACUUM / TRUNCATE all rewrite or prune
+    files UNDER the table directory while the lock file sits at its
+    top level; after each op the lock must be free again, so the next
+    DML runs without waiting."""
     e1, _e2 = shared_warehouse
     e1.sql("CREATE TABLE mt (id INT, v INT, PRIMARY KEY(id)) ENGINE=SNAPSHOT")
-    lock = os.path.join(e1.catalog.table_path("s", "mt"), ".write.lock")
     e1.sql("INSERT INTO mt VALUES (1, 1), (2, 2)")
     e1.sql("INSERT INTO mt VALUES (3, 3)")
     chain = [
@@ -249,235 +343,7 @@ def test_directory_rewriting_ops_do_not_orphan_locks(shared_warehouse):
     ]
     for stmt in chain:
         e1.sql(stmt)
-        assert not os.path.exists(lock), f"orphaned lock after: {stmt}"
+        assert lock_is_free(e1, "mt"), f"lock still held after: {stmt}"
     rows = e1.sql("SELECT id, v FROM mt").rows()
     assert [(r.id, r.v) for r in rows] == [(7, 7)]
     e1.sql("DROP TABLE mt")
-
-
-def test_rename_leaves_sibling_engines_carried_lock(shared_warehouse):
-    """The carried-lock removal after RENAME matches on (pid, engine
-    id), not pid alone: a lock held by a SIBLING Engine in the same
-    process (same pid, different engine id) must survive the move —
-    removing it would break the sibling's mutual exclusion mid-DML."""
-    e1, _e2 = shared_warehouse
-    e1.sql("CREATE TABLE sib (id INT, PRIMARY KEY(id))")
-    lock = os.path.join(e1.catalog.table_path("s", "sib"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "eid": "not-our-engine", "ts": 0}, f)
-    e1.sql("RENAME TABLE sib TO sib2")
-    carried = os.path.join(e1.catalog.table_path("s", "sib2"), ".write.lock")
-    assert os.path.exists(carried), "sibling's lock was wrongly removed"
-    os.remove(carried)
-    e1.sql("DROP TABLE sib2")
-
-
-def test_live_holder_lock_survives_staleness_age(shared_warehouse, monkeypatch):
-    """A lock recording a LIVE local pid is not broken at the ordinary
-    _LOCK_STALE_S age: OPTIMIZE-class compactions can legitimately
-    outlive it and locks are not refreshed mid-operation, so a
-    stale-window break would re-admit the lost write the lock
-    prevents. The waiter must raise 1205 and leave the lock in place
-    (inside the _LOCK_HARD_STALE_S ceiling — see the next test)."""
-    import time as _time
-
-    e1, e2 = shared_warehouse
-    monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "eid": "other-engine", "ts": 0}, f)
-    # well past _LOCK_STALE_S but inside the hard ceiling
-    t = _time.time() - Engine._LOCK_STALE_S * 3
-    os.utime(lock, (t, t))
-    try:
-        with pytest.raises(SparrowError) as ei:
-            e2.sql("UPDATE t SET v = 9 WHERE id = 1")
-        assert ei.value.code == 1205
-        assert os.path.exists(lock), "live holder's lock was broken on age"
-    finally:
-        os.remove(lock)
-
-
-def test_live_pid_lock_breaks_at_hard_ceiling(shared_warehouse, monkeypatch):
-    """A probed-alive pid may be an unrelated process that recycled
-    the dead holder's pid (or a same-numbered pid from another host's
-    lock in a shared warehouse). Liveness alone would wedge the table
-    forever; past _LOCK_HARD_STALE_S the lock breaks regardless."""
-    import time as _time
-
-    e1, e2 = shared_warehouse
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "eid": "other-engine", "ts": 0}, f)
-    t = _time.time() - Engine._LOCK_HARD_STALE_S - 60
-    os.utime(lock, (t, t))
-    r = e2.sql("UPDATE t SET v = 9 WHERE id = 1")
-    assert r.kind == "ok"
-    assert not os.path.exists(lock), "e2 must re-acquire then release"
-
-
-def test_corrupt_lock_file_times_out_then_sweeps(
-    shared_warehouse, monkeypatch
-):
-    """A 0-byte lock (writer killed between O_CREAT and the json
-    write) must NOT busy-loop the waiter forever: while fresh it
-    times out with 1205 (the deadline check and the sleep still run
-    on the unparseable path); once older than _LOCK_STALE_S it is
-    swept like any other unprobeable holder."""
-    import time as _time
-
-    e1, e2 = shared_warehouse
-    monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    open(lock, "w").close()  # 0 bytes — json.load raises
-    try:
-        t0 = _time.time()
-        with pytest.raises(SparrowError) as ei:
-            e2.sql("UPDATE t SET v = 9 WHERE id = 1")
-        assert ei.value.code == 1205
-        assert _time.time() - t0 < 5, "waiter spun past its deadline"
-        assert os.path.exists(lock)
-        # age it past the stale window: the sweep must now clear it
-        t = _time.time() - Engine._LOCK_STALE_S * 2
-        os.utime(lock, (t, t))
-        r = e2.sql("UPDATE t SET v = 9 WHERE id = 1")
-        assert r.kind == "ok"
-    finally:
-        if os.path.exists(lock):
-            os.remove(lock)
-
-
-def test_unprobeable_holder_lock_breaks_only_when_stale(
-    shared_warehouse, monkeypatch
-):
-    """A lock whose holder pid cannot be probed (no parseable local
-    pid — a crashed writer from another host) is broken by AGE only:
-    fresh → the waiter times out with 1205; stale → swept."""
-    e1, e2 = shared_warehouse
-    monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": "remote-host-writer", "ts": 0}, f)
-    try:
-        with pytest.raises(SparrowError) as ei:
-            e2.sql("UPDATE t SET v = 9 WHERE id = 1")
-        assert ei.value.code == 1205
-        assert os.path.exists(lock)
-    finally:
-        if os.path.exists(lock):
-            os.remove(lock)
-    with open(lock, "w") as f:
-        json.dump({"pid": "remote-host-writer", "ts": 0}, f)
-    os.utime(lock, (0, 0))
-    e2.sql("UPDATE t SET v = 7 WHERE id = 2")  # sweeps the stale lock
-    (v,) = e1.sql("SELECT v FROM t WHERE id = 2").rows()[0]
-    assert v == 7
-    assert not os.path.exists(lock)
-
-
-def test_rename_removes_pre_eid_format_own_lock(shared_warehouse):
-    """Mixed-version compatibility: a lock written by a pre-eid build
-    records pid only. When the pid is this process's own, the carried
-    lock after RENAME is OURS and must be removed — otherwise the
-    destination stays wedged behind a live-pid lock that the (new)
-    liveness-authoritative sweep will never break."""
-    e1, _e2 = shared_warehouse
-    e1.sql("CREATE TABLE oldfmt (id INT, PRIMARY KEY(id))")
-    lock = os.path.join(e1.catalog.table_path("s", "oldfmt"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "ts": 0}, f)  # no eid field
-    e1.sql("RENAME TABLE oldfmt TO newfmt")
-    carried = os.path.join(e1.catalog.table_path("s", "newfmt"), ".write.lock")
-    assert not os.path.exists(carried), "pre-eid own lock wedged destination"
-    e1.sql("INSERT INTO newfmt VALUES (1)")  # destination usable at once
-    e1.sql("DROP TABLE newfmt")
-
-
-def test_break_lock_restores_stolen_live_successor(shared_warehouse):
-    """r16 ADVICE fix: a waiter that probed a breakable lock must NOT
-    remove whatever file sits at the path by the time it acts — if a
-    new holder re-created the lock in between, the break must detect
-    the identity mismatch (inode/mtime differ from the probed stat)
-    and restore the stolen live lock instead of discarding it."""
-    import time as _time
-
-    e1, _e2 = shared_warehouse
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": 2 ** 22 + 1, "eid": "dead", "ts": 0}, f)
-    probed = os.stat(lock)
-    # successor replaces the lock between probe and break (new inode)
-    os.remove(lock)
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "eid": "live-successor",
-                   "ts": _time.time()}, f)
-    assert e1._break_lock(lock, probed) is False
-    assert os.path.exists(lock), "live successor's lock was discarded"
-    with open(lock) as f:
-        assert json.load(f)["eid"] == "live-successor"
-    os.remove(lock)
-
-
-def test_break_lock_breaks_only_the_probed_identity(shared_warehouse):
-    """The matching-identity path: same inode + mtime as probed ->
-    broken (returns True, file gone)."""
-    e1, _e2 = shared_warehouse
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": 2 ** 22 + 1, "eid": "dead", "ts": 0}, f)
-    probed = os.stat(lock)
-    assert e1._break_lock(lock, probed) is True
-    assert not os.path.exists(lock)
-
-
-def test_release_own_lock_spares_foreign_lock(shared_warehouse):
-    """r16 ADVICE fix (release-side twin): releasing must remove the
-    lock only when it still records OUR engine id — after our lock was
-    broken and a successor acquired, our release must be a no-op."""
-    e1, _e2 = shared_warehouse
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "eid": "not-ours", "ts": 0}, f)
-    e1._release_own_lock(lock)
-    assert os.path.exists(lock), "foreign lock removed at release"
-    os.remove(lock)
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "eid": e1._engine_id, "ts": 0}, f)
-    e1._release_own_lock(lock)
-    assert not os.path.exists(lock)
-
-
-def test_lock_heartbeat_keeps_mtime_fresh_for_own_lock(
-    shared_warehouse, monkeypatch
-):
-    """r16 ADVICE fix: the heartbeat refreshes OUR lock's mtime while
-    a statement runs (so the hard-stale ceiling measures abandonment,
-    not statement duration) and stops the moment the file records a
-    different engine id."""
-    import threading
-    import time as _time
-
-    e1, _e2 = shared_warehouse
-    monkeypatch.setattr(Engine, "_LOCK_HEARTBEAT_S", 0.05)
-    lock = os.path.join(e1.catalog.table_path("s", "t"), ".write.lock")
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "eid": e1._engine_id, "ts": 0}, f)
-    old = _time.time() - 500
-    os.utime(lock, (old, old))
-    stop = threading.Event()
-    t = threading.Thread(
-        target=e1._lock_heartbeat, args=(lock, stop), daemon=True
-    )
-    t.start()
-    _time.sleep(0.3)
-    assert _time.time() - os.stat(lock).st_mtime < 5, "no heartbeat"
-    # foreign takeover: heartbeat must stop refreshing
-    with open(lock, "w") as f:
-        json.dump({"pid": os.getpid(), "eid": "successor", "ts": 0}, f)
-    os.utime(lock, (old, old))
-    _time.sleep(0.3)
-    assert _time.time() - os.stat(lock).st_mtime > 400, (
-        "heartbeat refreshed a successor's lock"
-    )
-    stop.set()
-    t.join(timeout=2)

@@ -1219,33 +1219,37 @@ def test_dunder_column_names_are_reserved(engine):
 
 
 def test_rename_does_not_carry_the_write_lock(engine):
-    """Regression (r13): the table-directory move of a RENAME carried
-    the source's .write.lock file to the destination — our own lock
-    record, which the post-rename release could no longer find (it
-    removes the OLD path), wedging every later DML on the new name
-    behind a live-pid lock until the 120s stale sweep. The whole chain
-    below must run immediately (the old behavior raised 1205 after the
-    10s lock timeout on the UPDATE). Asserted deterministically: no
-    .write.lock file survives under the destination directory after
-    each rename — wall-clock bounds flake on loaded CI boxes, and the
-    regression's own failure mode (error 1205) would surface anyway."""
+    """A rename moves the table directory, and the lock file in it, to
+    the new name. Once the statement ends the lock under the new name
+    must be free, so the next DML there runs at once: ALTER TABLE ...
+    RENAME runs under the source's lock and must not wait for it a
+    second time, and RENAME TABLE takes it itself."""
+    import fcntl
     import os
 
     boot(engine)
     engine.sql("CREATE TABLE inv (id INT, qty INT, PRIMARY KEY(id))")
     engine.sql("INSERT INTO inv VALUES (1, 10), (2, 20)")
 
-    def lockfile(table):
-        return os.path.join(
+    def lock_is_free(table):
+        path = os.path.join(
             engine.catalog.table_path(engine.current_schema, table),
             ".write.lock",
         )
+        fd = os.open(path, os.O_CREAT | os.O_RDWR)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            return True
+        except BlockingIOError:
+            return False
+        finally:
+            os.close(fd)
 
     engine.sql("ALTER TABLE inv RENAME TO stock")
-    assert not os.path.exists(lockfile("stock")), "rename carried the lock"
+    assert lock_is_free("stock"), "rename carried a held lock"
     engine.sql("UPDATE stock SET qty = qty + 1 WHERE id = 1")
     engine.sql("RENAME TABLE stock TO stock2")
-    assert not os.path.exists(lockfile("stock2")), "rename carried the lock"
+    assert lock_is_free("stock2"), "rename carried a held lock"
     engine.sql("DELETE FROM stock2 WHERE id = 2")
     rows = engine.sql("SELECT id, qty FROM stock2 ORDER BY id").rows()
     assert [(r.id, r.qty) for r in rows] == [(1, 11)]

@@ -154,28 +154,6 @@ def _chain_pairs(spark, n=5):
     )
 
 
-def test_minlabel_converge_mode_handles_long_chains(spark):
-    from sparrow_spark.operators.dedup import minlabel_clusters
-
-    labels = minlabel_clusters(_chain_pairs(spark), iterations=None, partitions=2)
-    got = {(r.id, r.label) for r in labels.collect()}
-    assert got == {(i, 1) for i in range(1, 6)}  # one component, min label
-    labels.unpersist()
-
-
-def test_minlabel_converge_mode_unpersists(spark):
-    from sparrow_spark.operators.dedup import minlabel_clusters
-
-    jsc = spark.sparkContext._jsc
-    base = jsc.getPersistentRDDs().size()
-    labels = minlabel_clusters(_chain_pairs(spark), iterations=None, partitions=2)
-    labels.collect()
-    labels.unpersist()
-    # Superseded rounds and the edge list are unpersisted inside the
-    # operator; the caller unpersists the returned final round.
-    assert jsc.getPersistentRDDs().size() <= base
-
-
 def test_minlabel_bounded_mode_raises_on_nonconvergence(spark):
     import pytest
 

@@ -1,7 +1,6 @@
 """Round-16 tests: unit tests for the r16 ADVICE fixes (bench
-remeasure burst threshold, sinkhorn empty-token divergence; the
-lock-break identity/heartbeat fixes live in
-test_engine_concurrency.py), plus brute-force re-derivations (plain
+remeasure burst threshold, sinkhorn empty-token divergence), plus
+brute-force re-derivations (plain
 Python — pandas / numpy / hashlib, independent of the DuckDB oracle,
 so a shared misunderstanding between query and oracle is still
 caught) for the r16 additions."""

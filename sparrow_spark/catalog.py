@@ -142,6 +142,13 @@ def check_ident(name: str) -> str:
     return n
 
 
+def _remove_aside(path: str, parent: str, name: str) -> None:
+    """Rename `path` to a hidden sibling in `parent`, then remove it."""
+    doomed = os.path.join(parent, f".dropped-{name}-{uuid.uuid4().hex}")
+    os.rename(path, doomed)
+    shutil.rmtree(doomed)
+
+
 class EngineCatalog:
     """Filesystem-backed catalog: one directory per schema, one data
     directory + meta.json per table."""
@@ -168,7 +175,8 @@ class EngineCatalog:
         return sorted(
             d
             for d in os.listdir(self.warehouse)
-            if os.path.isdir(os.path.join(self.warehouse, d))
+            if not d.startswith(".")
+            and os.path.isdir(os.path.join(self.warehouse, d))
         )
 
     def has_schema(self, schema: str) -> bool:
@@ -182,7 +190,9 @@ class EngineCatalog:
     def drop_schema(self, schema: str) -> None:
         if not self.has_schema(schema):
             raise ValueError(f"Can't drop database '{schema}'; database doesn't exist")
-        shutil.rmtree(self.schema_path(schema))
+        # Moved aside first, as drop_table does: a writer polling a
+        # table lock's O_CREAT must not add a file mid-removal.
+        _remove_aside(self.schema_path(schema), self.warehouse, schema)
 
     # ---- tables ----
     def tables(self, schema: str) -> list[str]:
@@ -217,11 +227,7 @@ class EngineCatalog:
         # it: a writer waiting for the table's lock reopens the lock
         # file with O_CREAT, and must find no directory rather than add
         # a file to a tree being removed.
-        doomed = os.path.join(
-            self.schema_path(schema), f".dropped-{table}-{uuid.uuid4().hex}"
-        )
-        os.rename(self.table_path(schema, table), doomed)
-        shutil.rmtree(doomed)
+        _remove_aside(self.table_path(schema, table), self.schema_path(schema), table)
 
     def rename_table(
         self, schema: str, table: str, new_schema: str, new_table: str

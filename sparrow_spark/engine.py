@@ -564,9 +564,11 @@ class Engine:
             if m.group(1):
                 return Result("ok")
             raise SparrowError(1008, f"Can't drop database '{db}'; database doesn't exist")
-        for t in self.catalog.tables(db):
-            self.spark.sql(f"DROP TABLE IF EXISTS `{db}`.`{t}`")
-        self.catalog.drop_schema(db)
+        tables = self.catalog.tables(db)
+        with self._write_locks((db, t) for t in tables):
+            for t in tables:
+                self.spark.sql(f"DROP TABLE IF EXISTS `{db}`.`{t}`")
+            self.catalog.drop_schema(db)
         if self.current_schema == db:
             self.current_schema = None
             self.spark.catalog.setCurrentDatabase("default")

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sparrow_spark.iterate import iterate
 from sparrow_spark.registry import query
 from sparrow_spark.rounding import rnd
 from sparrow_spark.sources import load_table
@@ -1179,9 +1180,9 @@ def q_sinkhorn_ot(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    u = vocab.select(F.col("tok").alias("i"), F.lit(1.0).alias("u"))
     rows = []
-    for t in range(1, _OT_ITERS + 1):
+
+    def scale(u: DataFrame, t: int) -> DataFrame:
         v = (
             kern.join(F.broadcast(u), "i")
             .groupBy("j")
@@ -1196,8 +1197,9 @@ def q_sinkhorn_ot(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(F.col("k") * F.col("v")).alias("ku"))
             .join(a, "i")
             .select("i", (F.col("i_m") / F.col("ku")).alias("u"))
-            .localCheckpoint(eager=True)
         )
+        # plan feeds both the cost and the gap; its pin computes this
+        # round's u (a 256-row join) once more than iterate's pin does.
         plan = (
             kern.join(F.broadcast(u), "i")
             .join(F.broadcast(v), "j")
@@ -1226,6 +1228,13 @@ def q_sinkhorn_ot(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rnd("gap", 6).alias("col_marginal_gap"),
             )
         )
+        return u
+
+    iterate(
+        vocab.select(F.col("tok").alias("i"), F.lit(1.0).alias("u")),
+        scale,
+        _OT_ITERS,
+    )
     out = rows[0]
     for r in rows[1:]:
         out = out.unionAll(r)

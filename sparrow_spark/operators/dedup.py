@@ -23,6 +23,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparrow_spark.iterate import iterate
 from sparrow_spark.operators.text import (
     _text_shingles,
     fingerprint,
@@ -168,6 +169,23 @@ def minhash_lsh_pairs(
         .filter(F.col("a_id") < F.col("b_id"))
         .select("a_id", "b_id")
         .distinct()
+    )
+
+
+def dup_edges(docs: DataFrame) -> DataFrame:
+    """The near-duplicate graph: distinct (u, v) edges, u < v, from the
+    MinHash-LSH candidate pairs."""
+    return (
+        minhash_lsh_pairs(docs)
+        .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
+        .distinct()
+    )
+
+
+def symmetrize(edges: DataFrame) -> DataFrame:
+    """Every (u, v) edge in both directions."""
+    return edges.unionByName(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
 
 
@@ -1553,9 +1571,22 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return re_children.unionByName(re_self).distinct()
 
 
-def alternating_cc(
-    pairs: DataFrame, partitions: int = 16, max_rounds: int = 30
-) -> DataFrame:
+_CC_PARTITIONS = 16
+_CC_MAX_ROUNDS = 30
+
+
+def _star_forest(edges: DataFrame) -> bool:
+    """Star test: every child occurs once, and no root is a child."""
+    multi_parent = (
+        edges.groupBy("v").agg(F.count(F.lit(1)).alias("c")).filter("c > 1").limit(1).count()
+    )
+    root_is_child = (
+        edges.select("u").distinct().join(edges.select(F.col("v").alias("u")), "u").limit(1).count()
+    )
+    return multi_parent == root_is_child == 0
+
+
+def alternating_cc(pairs: DataFrame) -> DataFrame:
     """Connected components via the alternating large-star/small-star
     algorithm (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14): provably O(log^2 n) rounds on ANY graph shape —
@@ -1573,50 +1604,25 @@ def alternating_cc(
     has exactly one parent and no parent is itself a child), with the
     component minimum as root. The check is two pair-list-sized
     aggregates per round; a graph that fails to converge within
-    max_rounds raises instead of returning a mis-merged labeling.
-
-    Lineage discipline: each round REFERENCES the previous round's
-    edge list several times (symmetrize + min-join in both stars), so
-    a persist()-only loop grows a plan DAG whose *printed* form is
-    exponential in the round count — CacheManager's plan logging alone
-    OOMs the driver near round 8 (measured on a 10-node chain).
-    localCheckpoint(eager) truncates the logical plan to the
-    materialized round (we already pay one action per round for the
-    convergence check), keeping every round's plan constant-sized. At
-    cluster scale, swap in reliable checkpointing (sc.setCheckpointDir
-    + .checkpoint()) for executor-loss tolerance.
+    _CC_MAX_ROUNDS raises instead of returning a mis-merged labeling.
 
     Returns (id, label) with label = component minimum, one row per
     non-isolated node of the input pair list."""
-    cur = (
+    edges = (
         _canon_edges(pairs, "a_id", "b_id")
-        .repartition(partitions, "u")
+        .repartition(_CC_PARTITIONS, "u")
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
-        nxt = (
-            _small_star(_large_star(cur))
-            .repartition(partitions, "u")
-            .localCheckpoint(eager=True)
-        )
-        # Star test: every child occurs once, and no root is a child.
-        multi_parent = (
-            nxt.groupBy("v").agg(F.count(F.lit(1)).alias("c")).filter("c > 1").limit(1).count()
-        )
-        root_is_child = (
-            nxt.select("u").distinct().join(nxt.select(F.col("v").alias("u")), "u").limit(1).count()
-        )
-        cur = nxt
-        if multi_parent == 0 and root_is_child == 0:
-            return (
-                cur.select(F.col("v").alias("id"), F.col("u").alias("label"))
-                .unionByName(
-                    cur.select(F.col("u").alias("id"), F.col("u").alias("label"))
-                )
-                .distinct()
-            )
-    raise RuntimeError(
-        f"alternating_cc: no convergence within {max_rounds} rounds"
+    stars = iterate(
+        edges,
+        lambda e, _: _small_star(_large_star(e)).repartition(_CC_PARTITIONS, "u"),
+        _CC_MAX_ROUNDS,
+        converged=_star_forest,
+    )
+    return (
+        stars.select(F.col("v").alias("id"), F.col("u").alias("label"))
+        .unionByName(stars.select(F.col("u").alias("id"), F.col("u").alias("label")))
+        .distinct()
     )
 
 
@@ -2604,12 +2610,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline the pair list is already MATERIALIZED parquet (the
     q_dedup_minhash_lsh output / the streaming band index), so the
     triangle pass reads it, not the corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    edges = (
-        minhash_lsh_pairs(docs)
-        .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .distinct()
-    )
+    edges = dup_edges(load_table(spark, sf_dir, "documents"))
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
@@ -2804,34 +2805,28 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is one join of the CURRENT level set against
     the symmetric edge list (frontier-sized, not graph-sized) plus a
-    min-level agg; localCheckpoint cuts the lineage per round exactly
-    as the alternating-CC loop does."""
+    min-level agg."""
     docs = load_table(spark, sf_dir, "documents")
-    edges = (
-        minhash_lsh_pairs(docs)
-        .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .distinct()
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    levels = (
+    sym = symmetrize(dup_edges(docs))
+    seeds = (
         docs.filter(F.col("doc_id") % 50 == 0)
         .select(F.col("doc_id").alias("id"))
         .withColumn("level", F.lit(0))
     )
-    for r in range(1, 4):
+
+    def expand(levels: DataFrame, r: int) -> DataFrame:
         frontier = levels.filter(F.col("level") == r - 1)
         nxt = (
             frontier.join(sym, frontier.id == sym.u)
             .select(F.col("v").alias("id"), F.lit(r).alias("level"))
         )
-        levels = (
+        return (
             levels.unionByName(nxt)
             .groupBy("id")
             .agg(F.min("level").alias("level"))
-            .localCheckpoint(eager=True)
         )
+
+    levels = iterate(seeds, expand, 3)
     return (
         levels.groupBy("level")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
@@ -3001,12 +2996,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: degrees are one node-keyed count; the degree join touches
     the edge list twice keyed on endpoints; corr is algebraic."""
-    docs = load_table(spark, sf_dir, "documents")
-    edges = (
-        minhash_lsh_pairs(docs)
-        .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .distinct()
-    )
+    edges = dup_edges(load_table(spark, sf_dir, "documents"))
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
@@ -3124,6 +3114,31 @@ def q_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
 LPA_ROUNDS = 3
 
 
+def _lpa(sym: DataFrame) -> DataFrame:
+    """LPA_ROUNDS synchronous rounds over a symmetric (u, v) edge
+    list: (id, lab) for every node, each starting as its own label."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("id").orderBy(F.col("c").desc(), F.col("lab"))
+
+    def relabel(labels: DataFrame, _: int) -> DataFrame:
+        counts = (
+            sym.join(labels.withColumnRenamed("id", "v"), "v")
+            .groupBy(F.col("u").alias("id"), "lab")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        return (
+            counts.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("id", "lab")
+        )
+
+    labels = sym.select(F.col("u").alias("id")).distinct().withColumn(
+        "lab", F.col("id")
+    )
+    return iterate(labels, relabel, LPA_ROUNDS)
+
+
 def _lpa_round_sql(r: int) -> str:
     return f"""
     , n{r} AS (
@@ -3174,36 +3189,9 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the current label table (both pair-list-sized, never
     corpus-sized), a (node, label) count agg, and a per-node top-1
     window partitioned by node id — all keyed shuffles on graph
-    keys; hub nodes bound the window partition size by their degree.
-    localCheckpoint per round keeps the iterated plan constant-sized
-    exactly as the alternating-CC loop does."""
+    keys; hub nodes bound the window partition size by their degree."""
     docs = load_table(spark, sf_dir, "documents")
-    edges = (
-        minhash_lsh_pairs(docs)
-        .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .distinct()
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
-    from pyspark.sql import Window
-
-    labels = sym.select(F.col("u").alias("id")).distinct().withColumn(
-        "lab", F.col("id")
-    )
-    w = Window.partitionBy("id").orderBy(F.col("c").desc(), F.col("lab"))
-    for _ in range(LPA_ROUNDS):
-        counts = (
-            sym.join(labels.withColumnRenamed("id", "v"), "v")
-            .groupBy(F.col("u").alias("id"), "lab")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            counts.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("id", "lab")
-            .localCheckpoint(eager=True)
-        )
+    labels = _lpa(symmetrize(dup_edges(docs)).localCheckpoint(eager=True))
     return (
         labels.groupBy("lab")
         .agg(
@@ -3282,34 +3270,10 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and intra-edge counts are two keyed aggs on the edge list; the
     final fold runs over community-cardinality rows. No step touches
     the corpus after the shingle pass."""
-    from pyspark.sql import Window as W  # noqa: F401 (house import parity)
-
     docs = load_table(spark, sf_dir, "documents")
-    edges = (
-        minhash_lsh_pairs(docs)
-        .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    labels = sym.select(F.col("u").alias("id")).distinct().withColumn(
-        "lab", F.col("id")
-    )
-    w = W.partitionBy("id").orderBy(F.col("c").desc(), F.col("lab"))
-    for _ in range(LPA_ROUNDS):
-        counts = (
-            sym.join(labels.withColumnRenamed("id", "v"), "v")
-            .groupBy(F.col("u").alias("id"), "lab")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            counts.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("id", "lab")
-            .localCheckpoint(eager=True)
-        )
+    edges = dup_edges(docs).localCheckpoint(eager=True)
+    sym = symmetrize(edges)
+    labels = _lpa(sym)
     m = edges.agg(F.count(F.lit(1)).cast("double").alias("m"))
     deg = sym.groupBy(F.col("u").alias("id")).agg(
         F.count(F.lit(1)).cast("double").alias("d")

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sparrow_spark.iterate import iterate
 from sparrow_spark.operators.text import _text_shingles, tokens
 from sparrow_spark.registry import query
 from sparrow_spark.rounding import rnd
@@ -4018,8 +4019,7 @@ def q_greedy_maxcover(spark: SparkSession, sf_dir: str) -> DataFrame:
     most k documents' token lists — bounded by the selection budget,
     not the corpus) plus one doc-keyed sum with map-side combine —
     one shuffle of per-doc partials per round, zero re-shuffles of
-    the incidence table, never pairs. The covered set is
-    localCheckpoint-pinned per round; the only driver state is the
+    the incidence table, never pairs. The only driver state is the
     1-row argmax per round (k-row bounded collect, the
     q_kmeans_iterate discipline), exact BIGINT throughout."""
     tk = (
@@ -4048,10 +4048,9 @@ def q_greedy_maxcover(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokens — driver-bounded small) plus one doc-keyed aggregate.
     dt_w = dt.join(w, "tok").localCheckpoint(eager=True)
     total_w = float(w.agg(F.sum("w").cast("double").alias("t")).collect()[0][0])
-    covered: DataFrame | None = None
     sel_rows = []
-    cum = 0
-    for step in range(1, _MAXCOVER_K + 1):
+
+    def select_one(covered: DataFrame | None, step: int) -> DataFrame:
         cand = (
             dt_w
             if covered is None
@@ -4061,17 +4060,15 @@ def q_greedy_maxcover(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("w").cast("bigint").alias("g")
         )
         best = gains.orderBy(F.col("g").desc(), "doc_id").limit(1).collect()
-        if not best:
-            break
+        if not best:  # every token is covered (not at step 1: total_w > 0)
+            return covered
         doc, gain = int(best[0]["doc_id"]), int(best[0]["g"])
-        cum += gain
+        cum = (sel_rows[-1][3] if sel_rows else 0) + gain
         sel_rows.append((step, doc, gain, cum, cum / total_w))
         new_cov = dt_w.filter(F.col("doc_id") == doc).select("tok")
-        covered = (
-            new_cov
-            if covered is None
-            else covered.union(new_cov).distinct()
-        ).localCheckpoint(eager=True)
+        return new_cov if covered is None else covered.union(new_cov).distinct()
+
+    iterate(None, select_one, _MAXCOVER_K)
     out = local_df(
         spark,
         sel_rows,
@@ -4162,10 +4159,9 @@ def q_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the corpus is touched once for the (source, tok) counts,
     then pinned; every round is joins/aggs over the
-    |domains| x |vocab| table (vocab-bounded, corpus-independent)
-    with weight vectors pinned per round (the sinkhorn matrix-scaling
-    discipline) — mixture: one tok-keyed agg; KL: one source-keyed
-    agg; normalizer: a 1-row broadcast."""
+    |domains| x |vocab| table (vocab-bounded, corpus-independent) —
+    mixture: one tok-keyed agg; KL: one source-keyed agg; normalizer:
+    a 1-row broadcast."""
     tk = (
         load_table(spark, sf_dir, "documents")
         .select(
@@ -4185,8 +4181,12 @@ def q_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights = srcs.crossJoin(n_src).select(
         "source", (F.lit(1.0) / F.col("n")).alias("w")
     ).localCheckpoint(eager=True)
-    out_rows = []
-    for i in range(1, _DOREMI_ROUNDS + 1):
+    # us[i - 1]: round i's pinned kl; ws[i]: the weights round i yields
+    # (round i + 1's input, or iterate's result for the last round).
+    us, ws = [], []
+
+    def reweight(weights: DataFrame, _: int) -> DataFrame:
+        ws.append(weights)
         mix = (
             pdn.join(F.broadcast(weights), "source")
             .groupBy("tok")
@@ -4202,18 +4202,22 @@ def q_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             "kl",
             (F.col("w") * F.exp(_DOREMI_ETA * F.col("kl"))).alias("uw"),
         ).localCheckpoint(eager=True)
+        us.append(u)
         z = u.agg(F.sum("uw").alias("z"))
-        weights = u.crossJoin(z).select(
+        return u.crossJoin(z).select(
             "source", (F.col("uw") / F.col("z")).alias("w")
-        ).localCheckpoint(eager=True)
-        out_rows.append(
-            u.join(weights, "source").select(
-                F.lit(i).cast("int").alias("round"),
-                "source",
-                rnd("kl", 6).alias("kl_excess"),
-                rnd("w", 6).alias("weight"),
-            )
         )
+
+    ws.append(iterate(weights, reweight, _DOREMI_ROUNDS))
+    out_rows = [
+        u.join(w, "source").select(
+            F.lit(i).cast("int").alias("round"),
+            "source",
+            rnd("kl", 6).alias("kl_excess"),
+            rnd("w", 6).alias("weight"),
+        )
+        for i, (u, w) in enumerate(zip(us, ws[1:]), 1)
+    ]
     out = out_rows[0]
     for r in out_rows[1:]:
         out = out.unionByName(r)

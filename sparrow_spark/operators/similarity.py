@@ -23,6 +23,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sparrow_spark.iterate import iterate
 from sparrow_spark.registry import query
 from sparrow_spark.rounding import rnd
 from sparrow_spark.sources import load_table, local_df, materialize, widen
@@ -2175,25 +2176,23 @@ def q_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("j", LongType()), StructField("x", DoubleType())]
     )
     x0 = 1.0 / math.sqrt(d)
-    cur = local_df(spark, [(i + 1, x0) for i in range(d)], schema)
-    for _ in range(_PCA_ITERS):
+
+    def power_step(cur: DataFrame, _: int) -> DataFrame:
         y = (
             gram.join(F.broadcast(cur), gram.j == cur.j)
             .groupBy("i")
             .agg(F.sum(F.col("g") * F.col("x")).alias("y"))
         )
         norm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
-        # y feeds both the norm aggregate and the scaled iterate;
-        # without a per-step checkpoint the shared subtree is planned
-        # TWICE per step — 2^iters lineage blowup (observed: 92
-        # broadcast joins in the 4-step plan). The iterate is d rows,
-        # so the eager localCheckpoint is a trivially cheap action
-        # that keeps every step's plan constant-sized.
-        cur = (
-            y.crossJoin(norm)
-            .select(F.col("i").alias("j"), (F.col("y") / F.col("nrm")).alias("x"))
-            .localCheckpoint(eager=True)
+        return y.crossJoin(norm).select(
+            F.col("i").alias("j"), (F.col("y") / F.col("nrm")).alias("x")
         )
+
+    cur = iterate(
+        local_df(spark, [(i + 1, x0) for i in range(d)], schema),
+        power_step,
+        _PCA_ITERS,
+    )
     final = cur.select(F.col("j").alias("dim_idx"), F.col("x"))
     # Rayleigh quotient: x^T G x over the d^2 Gram table.
     lam = (
@@ -2418,7 +2417,8 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).alias("pick"),
         )
     )
-    for i in range(2, _MMR_PICKS + 1):
+
+    def pick(sel: DataFrame, r: int) -> DataFrame:
         s = sel.select(
             F.col("query_id").alias("s_qid"),
             F.col("cand_id").alias("s_cid"),
@@ -2447,10 +2447,13 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             scored.withColumn("rn", F.row_number().over(wm))
             .filter(F.col("rn") == 1)
             .select(
-                "query_id", "cand_id", "cv", "rel", "mmr", F.lit(i).alias("pick")
+                "query_id", "cand_id", "cv", "rel", "mmr",
+                F.lit(r + 1).alias("pick"),
             )
         )
-        sel = sel.unionByName(picked).localCheckpoint(eager=True)
+        return sel.unionByName(picked)
+
+    sel = iterate(sel, pick, _MMR_PICKS - 1)
     return sel.select(
         "query_id",
         "pick",

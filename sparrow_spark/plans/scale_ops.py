@@ -19,7 +19,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparrow_spark.operators.dedup import _MINHASH_BANDS_CTE, minhash_lsh_pairs
+from sparrow_spark.iterate import iterate
+from sparrow_spark.operators.dedup import (
+    _MINHASH_BANDS_CTE,
+    dup_edges,
+    minhash_lsh_pairs,
+    symmetrize,
+)
 from sparrow_spark.operators.text import tokens
 from sparrow_spark.registry import query
 from sparrow_spark.rounding import rnd
@@ -285,36 +291,27 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: every round is two semi-joins of the symmetric edge list
     against the current survivor set plus one keyed count — all
-    pair-list-sized, never corpus-sized, the same discipline as the
-    alternating-CC and LPA loops; localCheckpoint per round pins the
-    iterated plan at constant size. Fixed round count (not
+    pair-list-sized, never corpus-sized. Fixed round count (not
     loop-until-fixpoint) keeps the output deterministic and the
     oracle expressible as unrolled CTEs; 4 rounds peel chains up to
     length 8, beyond the diameter any band-collision tree reaches at
     these shingle settings (asserted by the survivor-degree >= 2
     invariant test)."""
     docs = load_table(spark, sf_dir, "documents")
-    edges = (
-        minhash_lsh_pairs(docs)
-        .select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .distinct()
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    sym = symmetrize(dup_edges(docs)).localCheckpoint(eager=True)
     all_nodes = sym.select(F.col("u").alias("id")).distinct()
-    alive = all_nodes
-    deg = None
-    for _ in range(_KCORE_ROUNDS):
-        deg = (
+
+    def peel(survivors: DataFrame, _: int) -> DataFrame:
+        alive = survivors.select("id")
+        return (
             sym.join(alive.withColumnRenamed("id", "u"), "u", "left_semi")
             .join(alive.withColumnRenamed("id", "v"), "v", "left_semi")
             .groupBy(F.col("u").alias("id"))
             .agg(F.count(F.lit(1)).alias("core_deg"))
             .filter(F.col("core_deg") >= _KCORE_K)
-            .localCheckpoint(eager=True)
         )
-        alive = deg.select("id")
+
+    deg = iterate(all_nodes, peel, _KCORE_ROUNDS)
     return (
         all_nodes.join(deg, "id", "left")
         .select(
@@ -1120,11 +1117,10 @@ def q_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller — bounded by occupied grid cells, not points). Neighbor
     edges come from a 9-offset explode + equi-join on cell keys,
     never a distance self-join; cluster ids are fixed-round
-    synchronous min-label propagation over the cell graph (the
-    alternating-CC discipline, unrolled in the oracle). Cell
-    assignment is floor(float/width) — IEEE-identical in both
-    engines — and every count is BIGINT, so output is
-    partition-stable."""
+    synchronous min-label propagation over the cell graph (unrolled
+    in the oracle). Cell assignment is floor(float/width) —
+    IEEE-identical in both engines — and every count is BIGINT, so
+    output is partition-stable."""
     emb = load_table(spark, sf_dir, "embeddings")
     pts = widen(emb).select(
         "vec_id",
@@ -1158,14 +1154,19 @@ def q_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = probes.join(nbr, ["nx", "ny"]).select("u", "v")
     edges = edges.localCheckpoint(eager=True)
-    labels = core.select(F.col("cell").alias("id"), F.col("cell").alias("lab"))
-    for _ in range(_GRID_ROUNDS):
-        labels = (
+
+    def spread(labels: DataFrame, _: int) -> DataFrame:
+        return (
             edges.join(labels.withColumnRenamed("id", "v"), "v")
             .groupBy(F.col("u").alias("id"))
             .agg(F.min("lab").alias("lab"))
-            .localCheckpoint(eager=True)
         )
+
+    labels = iterate(
+        core.select(F.col("cell").alias("id"), F.col("cell").alias("lab")),
+        spread,
+        _GRID_ROUNDS,
+    )
     clusters = (
         labels.join(core.withColumnRenamed("cell", "id"), "id")
         .groupBy("lab")
@@ -1411,8 +1412,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: edge extraction is map-side (adjacent pairs from the token
     array); the graph then lives at VOCABULARY size, not corpus size
     — every round is one join + one keyed agg over the
-    vocabulary-sized edge list, localCheckpoint-pinned per round like
-    the other fixed-round graph loops. Ranking uses the ROUNDED score
+    vocabulary-sized edge list. Ranking uses the ROUNDED score
     (word tiebreak) so ulp-level summation differences cannot reorder
     the cut; the oracle unrolls the same 3 rounds."""
     docs = widen(load_table(spark, sf_dir, "documents"))
@@ -1435,10 +1435,8 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     deg = sym.groupBy(F.col("a").alias("node")).agg(F.sum("w").alias("wd"))
     n_nodes = deg.agg(F.count(F.lit(1)).cast("double").alias("nn"))
-    pr = deg.join(n_nodes).select(
-        "node", (F.lit(1.0) / F.col("nn")).alias("score")
-    )
-    for _ in range(_TR_ROUNDS):
+
+    def rank(pr: DataFrame, _: int) -> DataFrame:
         contrib = (
             sym.join(pr.withColumnRenamed("node", "b"), "b")
             .join(deg.withColumnRenamed("node", "b"), "b")
@@ -1447,14 +1445,17 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("score") * F.col("w") / F.col("wd")).alias("c")
             )
         )
-        pr = (
-            contrib.join(n_nodes)
-            .select(
-                "node",
-                (0.15 / F.col("nn") + _TR_DAMP * F.col("c")).alias("score"),
-            )
-            .localCheckpoint(eager=True)
+        return contrib.join(n_nodes).select(
+            "node", (0.15 / F.col("nn") + _TR_DAMP * F.col("c")).alias("score")
         )
+
+    pr = iterate(
+        deg.join(n_nodes).select(
+            "node", (F.lit(1.0) / F.col("nn")).alias("score")
+        ),
+        rank,
+        _TR_ROUNDS,
+    )
     return (
         pr.select("node", rnd("score", 6).alias("score"))
         .select(F.col("node").alias("word"), "score")

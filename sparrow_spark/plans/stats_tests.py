@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sparrow_spark.iterate import iterate
 from sparrow_spark.registry import query
 from sparrow_spark.rounding import rnd
 from sparrow_spark.sources import load_table, local_df
@@ -1791,8 +1792,7 @@ def q_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the fact table collapses to one row per day first; each
     round is a 2-value aggregate + a top-1 TakeOrderedAndProject over
-    the day-bounded series with localCheckpoint lineage discipline —
-    never a corpus pass per round."""
+    the day-bounded series — never a corpus pass per round."""
     daily = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -1800,9 +1800,9 @@ def q_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("value").cast("double").alias("x"))
         .localCheckpoint(eager=True)
     )
-    remaining = daily
     tops = []
-    for i in range(1, _ESD_ROUNDS + 1):
+
+    def extract(remaining: DataFrame, i: int) -> DataFrame:
         st = remaining.agg(
             F.avg("x").alias("mu"), F.stddev_samp("x").alias("sd")
         )
@@ -1816,9 +1816,9 @@ def q_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         tops.append(top)
-        remaining = remaining.join(
-            top.select("d"), "d", "left_anti"
-        ).localCheckpoint(eager=True)
+        return remaining.join(top.select("d"), "d", "left_anti")
+
+    iterate(daily, extract, _ESD_ROUNDS)
     out = tops[0]
     for t in tops[1:]:
         out = out.unionByName(t)

@@ -975,7 +975,9 @@ def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB is the conformance proof.
 
     Scale: each check is one aggregation; the NOT IN probe is a
-    null-aware anti join (Spark plans it as such)."""
+    null-aware anti join. Spark plans it as a broadcast hash join only
+    in the form `eq OR isnull(eq)` with eq = o_orderkey = k; any other
+    spelling of the null cases is a nested-loop join over lineitem."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     t = li.select(
@@ -991,14 +993,9 @@ def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("bigint").alias("k")
         )
     )
+    eq = F.col("o_orderkey") == F.col("k")
     not_in = (
-        orders.join(
-            keys_with_null,
-            (F.col("o_orderkey") == F.col("k"))
-            | F.col("k").isNull()
-            | F.col("o_orderkey").isNull(),
-            "left_anti",
-        )
+        orders.join(keys_with_null, eq | eq.isNull(), "left_anti")
         .agg(F.count(F.lit(1)).cast("bigint").alias("result"))
         .select(F.lit("not_in_with_null_is_empty").alias("check_name"), "result")
     )

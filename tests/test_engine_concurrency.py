@@ -260,6 +260,18 @@ def test_rename_and_drop_wait_for_the_write_lock(shared_warehouse, monkeypatch):
     assert len(e1.sql("SELECT id FROM t").rows()) == 3
 
 
+def test_drop_database_waits_for_the_write_lock(shared_warehouse, monkeypatch):
+    """DROP DATABASE deletes every table of the schema: it must wait
+    for the lock of a table a concurrent writer is rewriting."""
+    e1, e2 = shared_warehouse
+    monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)
+    with held(e1, "t"):
+        with pytest.raises(SparrowError) as ei:
+            e2.sql("DROP DATABASE s")
+        assert ei.value.code == 1205
+    assert len(e1.sql("SELECT id FROM t").rows()) == 3
+
+
 def test_drop_leaves_no_tree_for_a_polling_writer(shared_warehouse, monkeypatch):
     """A writer waiting for a table's lock reopens the lock file with
     O_CREAT on every poll. A poll that lands while DROP TABLE removes

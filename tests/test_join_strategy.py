@@ -37,3 +37,14 @@ def test_broadcast_threshold_is_honoured(spark, sf_dir, name):
         assert _same(got, expected), (got, expected)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_not_in_plans_as_null_aware_hash_anti_join(spark, sf_dir):
+    """q_null_semantics' NOT IN must plan as Spark's single-column
+    null-aware anti join, a broadcast hash join, and not as a
+    nested-loop join streaming orders against every lineitem key."""
+    registry.load_all()
+    df = registry.RAW_QUERIES["q_null_semantics"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "LeftAnti, BuildRight, true" in plan, plan

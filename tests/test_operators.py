@@ -2,7 +2,11 @@
 checks: as-of join edge semantics, multimodal Arrow plumbing, dedup
 library invariants, similarity math."""
 
+import ast
+import pathlib
+
 import pyspark.sql.functions as F
+import pytest
 
 from sparrow_spark.operators.asof import asof_join
 from sparrow_spark.operators.dedup import (
@@ -530,6 +534,75 @@ def test_alternating_cc_matches_minlabel(spark, sf_dir):
     ml = {r.id: r.label for r in minlabel_clusters(pairs).collect()}
     pairs.unpersist()
     assert alt == ml
+
+
+def test_iterate_returns_at_the_first_converged_round(spark):
+    from sparrow_spark.iterate import iterate
+
+    rounds = []
+
+    def step(df, r):
+        rounds.append(r)
+        return df.select((F.col("x") + 1).alias("x"))
+
+    start = spark.range(1).select(F.lit(0).alias("x"))
+    out = iterate(start, step, 10, converged=lambda df: df.first().x >= 3)
+    assert rounds == [1, 2, 3]
+    assert out.first().x == 3
+
+
+def test_iterate_raises_past_its_round_cap(spark):
+    """A 10-node chain is not a star forest after one alternating
+    large-star/small-star round."""
+    from sparrow_spark.iterate import iterate
+    from sparrow_spark.operators.dedup import (
+        _canon_edges,
+        _large_star,
+        _small_star,
+        _star_forest,
+    )
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], ["a_id", "b_id"])
+    with pytest.raises(RuntimeError, match="within 1 rounds"):
+        iterate(
+            _canon_edges(pairs, "a_id", "b_id"),
+            lambda e, _: _small_star(_large_star(e)),
+            1,
+            converged=_star_forest,
+        )
+
+
+def test_iterate_pins_every_round(spark):
+    """Each round references the previous state twice; after 5 rounds
+    the returned state still plans as one materialized leaf."""
+    from sparrow_spark.iterate import iterate
+
+    out = iterate(spark.range(10), lambda df, _: df.join(df, "id"), 5)
+    plan = out._jdf.queryExecution().logical()
+    assert plan.nodeName() == "LogicalRDD"
+    assert plan.children().isEmpty()
+    assert out.count() == 10
+
+
+def test_no_loop_pins_per_round_by_hand():
+    """Every materializing driver loop in operators/ and plans/ goes
+    through iterate, which owns the per-round pin: no for/while body
+    there calls localCheckpoint or checkpoint."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "sparrow_spark"
+    hits = []
+    for sub in ("operators", "plans"):
+        for path in sorted((pkg / sub).rglob("*.py")):
+            for loop in ast.walk(ast.parse(path.read_text())):
+                if not isinstance(loop, (ast.For, ast.While)):
+                    continue
+                for node in ast.walk(loop):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in ("localCheckpoint", "checkpoint")
+                    ):
+                        hits.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not hits, hits
 
 
 def test_setsim_prefix_filter_is_lossless(spark):

@@ -4,7 +4,7 @@ column pruning (ReadSchema), join strategy (Broadcast vs SortMerge),
 and whole-stage codegen coverage. Run after changing any plan.
 
 Usage:
-  python scripts/explain_audit.py [sf_dir] [query ...]
+  python scripts/explain_audit.py [sf_dir] [query ... | --all] [--full]
   python scripts/explain_audit.py --windows [sf_dir] [query ...]
   PYTHONHASHSEED=0 python scripts/explain_audit.py --sweep OUT.json [sf_dir] [query ...]
   python scripts/explain_audit.py --diff A.json B.json
@@ -321,7 +321,37 @@ def diff(a_path: str, b_path: str) -> int:
     return len(changed)
 
 
+def _check_args(argv: list[str]) -> None:
+    """Print the usage and exit 2, before any JVM starts, on a flag
+    this script does not take or a fixture directory that is missing."""
+
+    def usage(msg: str) -> None:
+        usage_text = __doc__.split("Usage:\n", 1)[1].split("\n\n", 1)[0]
+        print(f"explain_audit.py: {msg}\nusage:\n{usage_text}", file=sys.stderr)
+        raise SystemExit(2)
+
+    if argv[:1] == ["--diff"]:
+        if len(argv) != 3 or not all(os.path.isfile(p) for p in argv[1:]):
+            usage("--diff takes two sweep files")
+        return
+    rest, sf_dir, flags = argv, "/root/testdata/sf0.1", {"--full", "--all"}
+    if argv[:1] == ["--sweep"]:
+        if len(argv) < 2 or argv[1].startswith("-"):
+            usage("--sweep takes an output file")
+        rest, flags = argv[2:], {"--full"}
+    elif argv[:1] == ["--windows"]:
+        rest, sf_dir, flags = argv[1:], "/root/testdata/sf0.001", set()
+    for a in rest:
+        if a.startswith("-") and a not in flags:
+            usage(f"unknown option {a}")
+    if rest and not rest[0].startswith("-"):
+        sf_dir = rest[0]
+    if not os.path.isdir(sf_dir):
+        usage(f"no fixture directory {sf_dir}")
+
+
 def main() -> None:
+    _check_args(sys.argv[1:])
     if sys.argv[1:2] == ["--diff"]:
         raise SystemExit(1 if diff(sys.argv[2], sys.argv[3]) else 0)
     sweep_out = None

@@ -38,6 +38,7 @@ import json
 import os
 import re
 import shutil
+import threading
 import time
 import uuid
 import weakref
@@ -136,6 +137,50 @@ def _take_paren_block(s: str, what: str) -> tuple[str, str]:
             if depth == 0:
                 return s[1:i], s[i + 1:]
     raise SparrowError(1064, f"unbalanced parens in {what}")
+
+
+def _flock_until(fd: int, deadline: float) -> bool:
+    """Take an exclusive flock(2) on `fd`, waiting until `deadline`
+    (time.monotonic()). True: the caller holds the lock and owns `fd`.
+    False: the wait timed out and `fd` now belongs to a helper thread,
+    which closes it, dropping the lock, as soon as its flock returns.
+
+    The wait is one blocking flock in the helper, so the kernel wakes
+    this waiter the moment the holder lets go. A waiter that retried
+    LOCK_NB on a timer lost every race to a writer that released and
+    at once began its next statement, and starved to 1205."""
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        return True
+    except BlockingIOError:
+        pass
+    cond = threading.Condition()
+    state = {"done": False, "error": None, "abandoned": False}
+
+    def wait():
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+        except OSError as e:
+            state["error"] = e
+        with cond:
+            if state["abandoned"]:
+                os.close(fd)
+                return
+            state["done"] = True
+            cond.notify()
+
+    threading.Thread(target=wait, name="write-lock-wait", daemon=True).start()
+    with cond:
+        cond.wait_for(
+            lambda: state["done"], timeout=max(0.0, deadline - time.monotonic())
+        )
+        if not state["done"]:
+            state["abandoned"] = True
+            return False
+    if state["error"] is not None:
+        os.close(fd)
+        raise state["error"]
+    return True
 
 
 class Session:
@@ -1566,8 +1611,10 @@ class Engine:
     # swap files, so an unserialized concurrent writer could delete a
     # file between those steps (lost update / dangling read). Each
     # statement holds an exclusive flock(2) on <table_path>/.write.lock
-    # for its whole run; readers never take it (COW file swaps keep
-    # scans consistent enough for the reference's non-transactional
+    # for its whole run, and one that finds it taken waits in the
+    # kernel (_flock_until) for up to _LOCK_TIMEOUT_S, then fails with
+    # 1205; readers never take it (COW file swaps keep scans
+    # consistent enough for the reference's non-transactional
     # contract). Within the serialized order the semantics are
     # last-writer-wins, exactly like the reference's KV store under its
     # global mutex (src/meta/meta_def.rs guards metadata, not data, the
@@ -1608,22 +1655,20 @@ class Engine:
                 # waited): the statement itself reports it.
                 yield
                 return
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                # The holder we waited for may have dropped or renamed
-                # the table: our lock is then on another path's file.
-                if os.fstat(fd).st_ino == os.stat(lock_path).st_ino:
-                    break
-            except (BlockingIOError, FileNotFoundError):
-                pass
-            os.close(fd)
-            if time.monotonic() > deadline:
+            if not _flock_until(fd, deadline):
                 raise SparrowError(
                     1205,
                     "Lock wait timeout exceeded; try restarting "
                     f"transaction (table `{schema}`.`{table}`)",
                 )
-            time.sleep(0.05)
+            # The holder we waited for may have dropped or renamed the
+            # table: our lock is then on another path's file.
+            try:
+                if os.fstat(fd).st_ino == os.stat(lock_path).st_ino:
+                    break
+            except FileNotFoundError:
+                pass
+            os.close(fd)
         try:
             yield
         finally:

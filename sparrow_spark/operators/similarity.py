@@ -39,8 +39,21 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def cosine(
+    a: Column, b: Column, a_norm: Column | None = None, b_norm: Column | None = None
+) -> Column:
+    """dot(a, b) / (l2_norm(a) * l2_norm(b)). Where one vector meets
+    many, pass each side's l2_norm as a column computed once per row
+    before the join that pairs them: each pair then runs only dot.
+    The quotient is bit-identical, since the norm is the same
+    expression evaluated once. Spark 4.1 runs aggregate/zip_with
+    interpreted (CodegenFallback), so per pair this is 2 passes over
+    the vectors instead of 4."""
+    if a_norm is None:
+        a_norm = l2_norm(a)
+    if b_norm is None:
+        b_norm = l2_norm(b)
+    return dot(a, b) / (a_norm * b_norm)
 
 
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,11 +69,18 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query set against the
     corpus, rank per query. Columns: query_id, neighbor_id, rank, cos."""
-    q = queries.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
-    sims = (
-        c.join(q, q.query_id != c.neighbor_id)
-        .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        l2_norm(F.col("v")).alias("qn"),
+    )
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("v").alias("cv"),
+        l2_norm(F.col("v")).alias("cn"),
+    )
+    sims = c.join(q, q.query_id != c.neighbor_id).withColumn(
+        "cos", cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
@@ -128,13 +148,14 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is one co-located partition of work; no all-pairs scan.
     vecs = _vecs(spark, sf_dir)
     q = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "label"
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
+        l2_norm(F.col("v")).alias("qn"), "label"
     )
     c = vecs.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
-                    F.col("label").alias("clabel"))
+                    l2_norm(F.col("v")).alias("cn"), F.col("label").alias("clabel"))
     sims = (
         c.join(q, (q.label == c.clabel) & (q.query_id != c.neighbor_id))
-        .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
+        .withColumn("cos", cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
@@ -193,12 +214,14 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     within a raw attribute block (a single label can be half the corpus
     at 100 TB; an 8-bit sign bucket cannot)."""
     vecs = _vecs(spark, sf_dir)
-    bk = vecs.select("vec_id", "v", "label", hyperplane_bucket(F.col("v")).alias("bucket"))
+    bk = vecs.select("vec_id", "v", l2_norm(F.col("v")).alias("n"), "label",
+                     hyperplane_bucket(F.col("v")).alias("bucket"))
     a = bk.select(F.col("vec_id").alias("a_id"), F.col("v").alias("av"),
-                  "label", "bucket")
+                  F.col("n").alias("an"), "label", "bucket")
     b = bk.select(F.col("vec_id").alias("b_id"), F.col("v").alias("bv"),
-                  F.col("label").alias("blabel"), F.col("bucket").alias("bbucket"))
-    cos = cosine(F.col("av"), F.col("bv"))
+                  F.col("n").alias("bn"), F.col("label").alias("blabel"),
+                  F.col("bucket").alias("bbucket"))
+    cos = cosine(F.col("av"), F.col("bv"), F.col("an"), F.col("bn"))
     return (
         a.join(b, (a.bucket == b.bbucket) & (a.label == b.blabel) & (a.a_id < b.b_id))
         .withColumn("__cos", cos)
@@ -236,15 +259,17 @@ def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is an equi-join on the signature — the candidate set per query
     is |bucket|, not |corpus|; signatures cost one pass, no training."""
     vecs = _vecs(spark, sf_dir)
-    b = vecs.select("vec_id", "v", hyperplane_bucket(F.col("v")).alias("bucket"))
+    b = vecs.select("vec_id", "v", l2_norm(F.col("v")).alias("n"),
+                    hyperplane_bucket(F.col("v")).alias("bucket"))
     q = b.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "bucket"
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
+        F.col("n").alias("qn"), "bucket"
     )
     c = b.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
-                 F.col("bucket").alias("cbucket"))
+                 F.col("n").alias("cn"), F.col("bucket").alias("cbucket"))
     sims = c.join(
         q, (q.bucket == c.cbucket) & (q.query_id != c.neighbor_id)
-    ).withColumn("cos", cosine(F.col("qv"), F.col("cv")))
+    ).withColumn("cos", cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
         sims.withColumn("rank", F.row_number().over(w))
@@ -358,13 +383,16 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = brute_force_topk(queries, vecs, k=3).select(
         "query_id", "neighbor_id"
     )
-    b = vecs.select("vec_id", "v", hyperplane_bucket(F.col("v")).alias("bucket"))
+    b = vecs.select("vec_id", "v", l2_norm(F.col("v")).alias("n"),
+                    hyperplane_bucket(F.col("v")).alias("bucket"))
     q = b.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "bucket"
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
+        F.col("n").alias("qn"), "bucket"
     )
     c = b.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("cv"),
+        F.col("n").alias("cn"),
         F.col("bucket").alias("cbucket"),
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -372,7 +400,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     approx = (
         c.join(q, (q.bucket == c.cbucket) & (q.query_id != c.neighbor_id))
-        .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
+        .withColumn("cos", cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
         .select("query_id", F.col("neighbor_id").alias("a_neighbor_id"))
@@ -391,11 +419,14 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def collapse_centroids(centroids: DataFrame) -> DataFrame:
     """Collapse a k-row (centroid_id, cv) table into ONE row holding a
-    sorted array of (centroid_id, cv) structs — the broadcastable shape
-    the assignment fold consumes. k x dim doubles: broadcast-sized for
-    k into the thousands."""
+    sorted array of (centroid_id, cv, cn) structs, cn = l2_norm(cv) —
+    the broadcastable shape the assignment fold consumes, each norm
+    computed once. k x dim doubles: broadcast-sized for k into the
+    thousands."""
     return centroids.select(
-        F.struct(F.col("centroid_id"), F.col("cv")).alias("s")
+        F.struct(
+            F.col("centroid_id"), F.col("cv"), l2_norm(F.col("cv")).alias("cn")
+        ).alias("s")
     ).agg(F.array_sort(F.collect_list("s")).alias("seeds"))
 
 
@@ -412,12 +443,14 @@ def assign_to_centroids(vecs: DataFrame, seeds_row: DataFrame) -> DataFrame:
     # Score first (one cosine per centroid), THEN argmax-fold over the
     # scored structs — folding over raw seeds would evaluate the cosine
     # twice per centroid (once in the WHEN predicate, once in the
-    # result), doubling the dominant O(n*k*dim) compute.
+    # result), doubling the dominant O(n*k*dim) compute. Each vector's
+    # norm is computed below the cross join, and each centroid's rides
+    # in its seed struct, so a (vector, centroid) pair runs only dot.
     scored = F.transform(
         F.col("seeds"),
         lambda s: F.struct(
             s["centroid_id"].alias("centroid_id"),
-            cosine(F.col("v"), s["cv"]).alias("cos"),
+            cosine(F.col("v"), s["cv"], F.col("vn"), s["cn"]).alias("cos"),
         ),
     )
     best = F.aggregate(
@@ -429,7 +462,8 @@ def assign_to_centroids(vecs: DataFrame, seeds_row: DataFrame) -> DataFrame:
         lambda acc, s: F.when(s["cos"] > acc["cos"], s).otherwise(acc),
     )
     return (
-        vecs.crossJoin(seeds_row)
+        vecs.select("vec_id", "v", l2_norm(F.col("v")).alias("vn"))
+        .crossJoin(seeds_row)
         .select("vec_id", "v", best.alias("best"))
         .select(
             "vec_id",
@@ -636,19 +670,23 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
         )
     )
+    # Each vector's norm is computed here, once, before the salt
+    # explode copies it n_salt ways and the join pairs it.
     assigned = assign_to_centroids(vecs, seeds).select(
-        "centroid_id", "vec_id", "v"
+        "centroid_id", "vec_id", "v", l2_norm(F.col("v")).alias("n")
     )
     a = assigned.select(
         "centroid_id",
         F.col("vec_id").alias("a_id"),
         F.col("v").alias("av"),
+        F.col("n").alias("an"),
         F.pmod(F.hash("vec_id"), F.lit(n_salt)).alias("salt"),
     )
     b = assigned.select(
         F.col("centroid_id").alias("b_cid"),
         F.col("vec_id").alias("b_id"),
         F.col("v").alias("bv"),
+        F.col("n").alias("bn"),
         F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("b_salt"),
     )
     pairs = a.join(
@@ -656,7 +694,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (a.centroid_id == b.b_cid)
         & (a.salt == b.b_salt)
         & (a.a_id < b.b_id)
-        & (cosine(F.col("av"), F.col("bv")) > 0.35),
+        & (cosine(F.col("av"), F.col("bv"), F.col("an"), F.col("bn")) > 0.35),
     )
     dropped = (
         pairs.select("centroid_id", "b_id")
@@ -798,24 +836,26 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.slice("v", 1, 32).alias("v0"),
         F.slice("v", 33, 32).alias("v1"),
-    )
+    ).withColumns({"n0": l2_norm(F.col("v0")), "n1": l2_norm(F.col("v1"))})
     seeds_rows = vecs.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("centroid_id"),
         F.slice("v", 1, 32).alias("c0"),
         F.slice("v", 33, 32).alias("c1"),
-    )
+    ).withColumns({"m0": l2_norm(F.col("c0")), "m1": l2_norm(F.col("c1"))})
     packed = seeds_rows.select(
-        F.struct("centroid_id", "c0", "c1").alias("s")
+        F.struct("centroid_id", "c0", "c1", "m0", "m1").alias("s")
     ).agg(F.array_sort(F.collect_list("s")).alias("seeds"))
 
-    def best_for(sub_col: str, cent_field: str):
+    def best_for(sub_col: str, sub_norm: str, cent_field: str, cent_norm: str):
         # Score once per sub-centroid, then argmax-fold the scored
         # structs (same single-evaluation shape as assign_to_centroids).
         scored = F.transform(
             F.col("seeds"),
             lambda s: F.struct(
                 s["centroid_id"].alias("code"),
-                cosine(F.col(sub_col), s[cent_field]).alias("cos"),
+                cosine(
+                    F.col(sub_col), s[cent_field], F.col(sub_norm), s[cent_norm]
+                ).alias("cos"),
             ),
         )
         return F.aggregate(
@@ -829,8 +869,8 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     coded = halves.crossJoin(packed).select(
         "vec_id",
-        best_for("v0", "c0").alias("b0"),
-        best_for("v1", "c1").alias("b1"),
+        best_for("v0", "n0", "c0", "m0").alias("b0"),
+        best_for("v1", "n1", "c1", "m1").alias("b1"),
     )
     return coded.select(
         "vec_id",
@@ -895,14 +935,23 @@ def pq_encode(vecs: DataFrame, codebook_row: DataFrame) -> DataFrame:
         "label",
         F.slice("v", 1, 32).alias("v0"),
         F.slice("v", 33, 32).alias("v1"),
-    )
+    ).withColumns({"vn0": l2_norm(F.col("v0")), "vn1": l2_norm(F.col("v1"))})
 
-    def code_for(sub_col: str, cent_field: str) -> Column:
+    def code_for(
+        sub_col: str, sub_norm: str, cent_field: str, sq_field: str
+    ) -> Column:
+        # The codebook's squared norm is the same fold l2_norm takes
+        # the root of, so sqrt(n0) is l2_norm(c0) bit for bit.
         scored = F.transform(
             F.col("seeds"),
             lambda s: F.struct(
                 s["centroid_id"].alias("code"),
-                cosine(F.col(sub_col), s[cent_field]).alias("cos"),
+                cosine(
+                    F.col(sub_col),
+                    s[cent_field],
+                    F.col(sub_norm),
+                    F.sqrt(s[sq_field]),
+                ).alias("cos"),
             ),
         )
         return F.aggregate(
@@ -917,8 +966,8 @@ def pq_encode(vecs: DataFrame, codebook_row: DataFrame) -> DataFrame:
     coded = halves.crossJoin(codebook_row).select(
         "vec_id",
         "label",
-        code_for("v0", "c0").alias("code0"),
-        code_for("v1", "c1").alias("code1"),
+        code_for("v0", "vn0", "c0", "n0").alias("code0"),
+        code_for("v1", "vn1", "c1", "n1").alias("code1"),
         F.col("seeds").alias("seeds"),
     )
     rnorm = F.sqrt(
@@ -1355,7 +1404,7 @@ def q_kmeanspp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-runs only the scoring pass per round. k-means|| would batch
     multiple picks per pass; with the traversal derandomized the
     one-pick-per-pass shape is what keeps ties exactly reproducible."""
-    e = _vecs(spark, sf_dir).select("vec_id", "v")
+    e = _vecs(spark, sf_dir).select("vec_id", "v", l2_norm(F.col("v")).alias("vn"))
     seed0 = e.orderBy("vec_id").limit(1)
     picks = [
         seed0.select(
@@ -1366,14 +1415,16 @@ def q_kmeanspp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     seeds = seed0
     for i in range(1, 4):
-        seeds_arr = seeds.agg(F.collect_list("v").alias("svs"))
+        seeds_arr = seeds.agg(F.collect_list(F.struct("v", "vn")).alias("svs"))
         mc = F.array_max(
-            F.transform("svs", lambda s: cosine(F.col("v"), s))
+            F.transform(
+                "svs", lambda s: cosine(F.col("v"), s["v"], F.col("vn"), s["vn"])
+            )
         )
         cand = (
             e.join(seeds.select("vec_id"), "vec_id", "left_anti")
             .crossJoin(seeds_arr)
-            .select("vec_id", "v", mc.alias("mc"))
+            .select("vec_id", "v", "vn", mc.alias("mc"))
         )
         pick = cand.orderBy(F.col("mc").asc(), "vec_id").limit(1)
         picks.append(
@@ -1383,7 +1434,7 @@ def q_kmeanspp_init(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rnd("mc", 6).alias("nearest_seed_cos"),
             )
         )
-        seeds = seeds.unionByName(pick.select("vec_id", "v"))
+        seeds = seeds.unionByName(pick.select("vec_id", "v", "vn"))
     out = picks[0]
     for p in picks[1:]:
         out = out.unionByName(p)
@@ -1616,16 +1667,18 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = vecs.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
+        l2_norm(F.col("v")).alias("qn"),
         F.col("label").alias("qlabel"),
     )
     c = vecs.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("cv"),
+        l2_norm(F.col("v")).alias("cn"),
         F.col("label").alias("nlabel"),
     )
     sims = (
         c.join(q, F.col("qlabel") != F.col("nlabel"))
-        .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
+        .withColumn("cos", cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")))
         .filter(F.col("cos") < 0.99)
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1687,13 +1740,19 @@ def q_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulps."""
     vecs = _vecs(spark, sf_dir)
     q = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        l2_norm(F.col("v")).alias("qn"),
     )
     c = vecs.filter(F.col("vec_id") >= 20).select(
-        F.col("vec_id").alias("cand_id"), F.col("v").alias("cv")
+        F.col("vec_id").alias("cand_id"),
+        F.col("v").alias("cv"),
+        l2_norm(F.col("v")).alias("cn"),
     )
     s = c.join(q).select(
-        "query_id", "cand_id", cosine(F.col("qv"), F.col("cv")).alias("cos")
+        "query_id",
+        "cand_id",
+        cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos"),
     )
     wq = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "cand_id")
     wc = Window.partitionBy("cand_id").orderBy(F.col("cos").desc(), "query_id")
@@ -1880,16 +1939,18 @@ def q_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = vecs.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
+        l2_norm(F.col("v")).alias("qn"),
         F.col("label").alias("label_true"),
     )
     t = vecs.filter(F.col("vec_id") >= 20).select(
         F.col("vec_id").alias("nid"),
         F.col("v").alias("cv"),
+        l2_norm(F.col("v")).alias("cn"),
         F.col("label").alias("nlabel"),
     )
     sims = t.join(q).select(
         "query_id", "label_true", "nlabel", "nid",
-        cosine(F.col("qv"), F.col("cv")).alias("cos"),
+        cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "nid")
     top5 = sims.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
@@ -2268,15 +2329,21 @@ def q_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     reciprocity check a self-join of the n-row top-1 list. Cosines
     are identical zip_with folds on both engines."""
     vecs = _vecs(spark, sf_dir)
-    a = vecs.select("label", F.col("vec_id").alias("src"), F.col("v").alias("av"))
+    a = vecs.select(
+        "label",
+        F.col("vec_id").alias("src"),
+        F.col("v").alias("av"),
+        l2_norm(F.col("v")).alias("an"),
+    )
     b = vecs.select(
         F.col("label").alias("b_label"),
         F.col("vec_id").alias("dst"),
         F.col("v").alias("bv"),
+        l2_norm(F.col("v")).alias("bn"),
     )
     sims = a.join(
         b, (a.label == b.b_label) & (F.col("src") != F.col("dst"))
-    ).withColumn("cos", cosine(F.col("av"), F.col("bv")))
+    ).withColumn("cos", cosine(F.col("av"), F.col("bv"), F.col("an"), F.col("bn")))
     w = Window.partitionBy("src").orderBy(F.col("cos").desc(), F.col("dst"))
     nn1 = (
         sims.withColumn("rn", F.row_number().over(w))
@@ -2536,13 +2603,15 @@ def q_silhouette_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     seeds = cent.select(
-        F.struct(F.col("clabel"), F.col("cv")).alias("s")
+        F.struct(
+            F.col("clabel"), F.col("cv"), l2_norm(F.col("cv")).alias("cn")
+        ).alias("s")
     ).agg(F.array_sort(F.collect_list("s")).alias("seeds"))
     scored = F.transform(
         F.col("seeds"),
         lambda s: F.struct(
             s["clabel"].alias("clabel"),
-            cosine(F.col("v"), s["cv"]).alias("cos"),
+            cosine(F.col("v"), s["cv"], F.col("vn"), s["cn"]).alias("cos"),
         ),
     )
     own = F.lit(1.0) - F.array_max(
@@ -2557,8 +2626,10 @@ def q_silhouette_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: s["cos"],
         )
     )
-    per = vecs.crossJoin(seeds).select(
-        "label", own.alias("da"), other.alias("db")
+    per = (
+        vecs.select("label", "v", l2_norm(F.col("v")).alias("vn"))
+        .crossJoin(seeds)
+        .select("label", own.alias("da"), other.alias("db"))
     )
     g = F.greatest(F.col("da"), F.col("db"))
     sil = F.when(g > 0, (F.col("db") - F.col("da")) / g).otherwise(0.0)
@@ -2659,13 +2730,19 @@ def q_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("u") != F.col("w"))
     )
     cand = init.union(hop2).distinct()
-    a = vecs.select(F.col("vec_id").alias("u"), F.col("v").alias("av"))
-    b = vecs.select(F.col("vec_id").alias("w"), F.col("v").alias("bv"))
+    a = vecs.select(
+        F.col("vec_id").alias("u"), F.col("v").alias("av"),
+        l2_norm(F.col("v")).alias("an"),
+    )
+    b = vecs.select(
+        F.col("vec_id").alias("w"), F.col("v").alias("bv"),
+        l2_norm(F.col("v")).alias("bn"),
+    )
     init_flag = init.withColumn("is_init", F.lit(1))
     sims = (
         cand.join(a, "u")
         .join(b, "w")
-        .withColumn("cos", cosine(F.col("av"), F.col("bv")))
+        .withColumn("cos", cosine(F.col("av"), F.col("bv"), F.col("an"), F.col("bn")))
         .join(init_flag, ["u", "w"], "left")
         .select("u", "w", "cos", F.coalesce("is_init", F.lit(0)).alias("is_init"))
     )
@@ -2769,16 +2846,17 @@ def q_colbert_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(sequence(1, size(v)), "
             "i -> element_at(v, ((i - 1 + t) % size(v)) + 1))"
         ),
-    )
-    dt = toks.select(F.col("vec_id").alias("doc_id"), "tv")
+    ).withColumn("tn", l2_norm(F.col("tv")))
+    dt = toks.select(F.col("vec_id").alias("doc_id"), "tv", "tn")
     qt = toks.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"),
         F.col("t").alias("qtok"),
         F.col("tv").alias("qv"),
+        F.col("tn").alias("qn"),
     )
     pairs = dt.join(
         F.broadcast(qt), F.col("query_id") != F.col("doc_id")
-    ).withColumn("cos", cosine(F.col("qv"), F.col("tv")))
+    ).withColumn("cos", cosine(F.col("qv"), F.col("tv"), F.col("qn"), F.col("tn")))
     mx = pairs.groupBy("query_id", "qtok", "doc_id").agg(
         F.max("cos").alias("m")
     )
@@ -3234,11 +3312,15 @@ def q_rbo_ranking_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id", F.col("rank").alias("e_rank")
     )
     q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "label"
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        l2_norm(F.col("v")).alias("qn"),
+        "label",
     )
     c = vecs.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("cv"),
+        l2_norm(F.col("v")).alias("cn"),
         F.col("label").alias("clabel"),
     )
     w_q = Window.partitionBy("query_id").orderBy(
@@ -3249,7 +3331,7 @@ def q_rbo_ranking_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             q,
             (q.label == c.clabel) & (q.query_id != c.neighbor_id),
         )
-        .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
+        .withColumn("cos", cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")))
         .withColumn("a_rank", F.row_number().over(w_q))
         .filter(F.col("a_rank") <= _RBO_K)
         .select("query_id", "neighbor_id", "a_rank")
@@ -3563,9 +3645,10 @@ def q_rerank_interaction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches |Q| x {_RERANK_K1} rows total, so its per-pair cost is
     corpus-independent. Swap stage 1 for q_similarity_ivf's probe at
     100 TB; stage 2 is unchanged — that independence is the point."""
-    vecs = _vecs(spark, sf_dir).select("vec_id", "v")
+    vecs = _vecs(spark, sf_dir).select("vec_id", "v", l2_norm(F.col("v")).alias("vn"))
     q = vecs.filter(F.col("vec_id").isin(_RERANK_QUERIES)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
+        F.col("vn").alias("qn"),
     )
     l1 = F.aggregate(
         F.zip_with("qv", "v", lambda x, y: F.abs(x - y)),
@@ -3582,7 +3665,7 @@ def q_rerank_interaction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            cosine(F.col("qv"), F.col("v")).alias("cos"),
+            cosine(F.col("qv"), F.col("v"), F.col("qn"), F.col("vn")).alias("cos"),
             l1.alias("l1"),
         )
         .withColumn("rank_initial", F.row_number().over(w1))
@@ -3675,18 +3758,25 @@ def q_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the n-row lrd table onto the n x k neighbor list."""
     vecs = _vecs(spark, sf_dir)
     a = vecs.select(
-        "label", F.col("vec_id").alias("src"), F.col("v").alias("av")
+        "label",
+        F.col("vec_id").alias("src"),
+        F.col("v").alias("av"),
+        l2_norm(F.col("v")).alias("an"),
     )
     b = vecs.select(
         F.col("label").alias("b_label"),
         F.col("vec_id").alias("dst"),
         F.col("v").alias("bv"),
+        l2_norm(F.col("v")).alias("bn"),
     )
     dists = a.join(
         b, (a.label == b.b_label) & (F.col("src") != F.col("dst"))
     ).select(
         "src", "dst", "label",
-        (F.lit(1.0) - cosine(F.col("av"), F.col("bv"))).alias("d"),
+        (
+            F.lit(1.0)
+            - cosine(F.col("av"), F.col("bv"), F.col("an"), F.col("bn"))
+        ).alias("d"),
     )
     w = Window.partitionBy("src").orderBy("d", "dst")
     knn = (

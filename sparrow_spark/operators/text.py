@@ -1049,7 +1049,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes the oracle comparison exact."""
     from pyspark.sql import Window
 
-    from sparrow_spark.operators.similarity import _vecs, cosine
+    from sparrow_spark.operators.similarity import _vecs, cosine, l2_norm
 
     docs = widen(load_table(spark, sf_dir, "documents"))
     lex_scored = bm25_scored(spark, docs)
@@ -1062,9 +1062,9 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "doc_id", "rank_lex")
     )
     vq = local_df(spark, _RRF_VEC_QUERIES, "query_id string, vid bigint")
-    vecs = _vecs(spark, sf_dir).select("vec_id", "v")
+    vecs = _vecs(spark, sf_dir).select("vec_id", "v", l2_norm(F.col("v")).alias("vn"))
     qv = vq.join(vecs, vq.vid == vecs.vec_id).select(
-        "query_id", F.col("v").alias("qv")
+        "query_id", F.col("v").alias("qv"), F.col("vn").alias("qn")
     )
     wv = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("doc_id"))
     vec = (
@@ -1072,7 +1072,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("doc_id"),
-            cosine(F.col("qv"), F.col("v")).alias("cos"),
+            cosine(F.col("qv"), F.col("v"), F.col("qn"), F.col("vn")).alias("cos"),
         )
         .withColumn("rank_vec", F.row_number().over(wv))
         .filter(F.col("rank_vec") <= 20)

@@ -1683,12 +1683,13 @@ def q_grid_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     of 50 queries). Cosine folds are order-fixed array reductions
     (the q_similarity_topk convention), ties break on neighbor id,
     and every count is exact BIGINT."""
-    from sparrow_spark.operators.similarity import cosine
+    from sparrow_spark.operators.similarity import cosine, l2_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = widen(emb).select(
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
+        l2_norm(F.col("embedding").cast("array<double>")).alias("vn"),
         F.floor(F.element_at("embedding", 1) / _GRID_W)
         .cast("bigint")
         .alias("cx"),
@@ -1704,19 +1705,21 @@ def q_grid_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = vecs.join(offsets).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
+        F.col("vn").alias("qn"),
         (F.col("cx") + F.col("dx")).alias("nx"),
         (F.col("cy") + F.col("dy")).alias("ny"),
     )
     nbr = vecs.select(
         F.col("cx").alias("nx"), F.col("cy").alias("ny"),
         F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
+        F.col("vn").alias("cn"),
     )
     cand = (
         probes.join(nbr, ["nx", "ny"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id", "neighbor_id",
-            cosine(F.col("qv"), F.col("cv")).alias("cos"),
+            cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1728,16 +1731,18 @@ def q_grid_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("neighbor_id").alias("a_nb"))
     )
     qsample = vecs.filter(F.col("vec_id") < _GK_SAMPLE).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
+        F.col("vn").alias("qn"),
     )
     allc = vecs.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
+        F.col("vn").alias("cn"),
     )
     exact = (
         allc.join(qsample, F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id", "neighbor_id",
-            cosine(F.col("qv"), F.col("cv")).alias("cos"),
+            cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos"),
         )
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)

@@ -389,6 +389,26 @@ def get_spark(
         # spills. Cluster deployers with larger executors pass a
         # larger page in extra_conf.
         .config("spark.buffer.pageSize", "1m")
+        # Case mapping (lower/upper/initcap) through the JDK, not ICU.
+        # With the default (true), Spark 4.1's first case function in a
+        # JVM loads CollationAwareUTF8String, whose static initializer
+        # calls ICU's UCharacter.toTitleCase on all 1,114,112 code
+        # points to fill a 48-entry one-to-many title-case table, even
+        # for ASCII input. After warm-up a one-row lower() cost 1.61
+        # CPU-s / 1.40 s wall with it and 0.11 CPU-s / 0.05 s without
+        # (4-vCPU box); in an olap_pack pass the whole cost landed on
+        # q_dedup_exact. With it off, ASCII takes UTF8String's fast
+        # path and other text goes through JDK String.toLowerCase/
+        # toUpperCase. Over all 1,112,064 scalar code points ICU 77
+        # and JDK 17 (locale en) differ on 67 for lower and 67 for
+        # upper case, all letters added in Unicode 14-16 (U+A7C0,
+        # U+10570, ...), and initcap leaves a word-initial one-to-many
+        # title-case code point (the ligature U+FB01, say) as it is
+        # rather than expanding it. The JDK path follows the JVM's
+        # default locale: under tr, az or lt a string holding any
+        # non-ASCII character maps by that locale's rules, its ASCII
+        # I/i included. Fixture strings are all ASCII.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -415,9 +435,14 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     Its JVM is already running, so launch-time settings of get_spark
     (driver memory, the C1-only JIT and its code cache, the class-data
     archive, the 1 MiB execution page) cannot apply to it: it keeps
-    Spark's heap-derived page size.
+    Spark's heap-derived page size. Case mapping through the JDK
+    instead of ICU (``spark.sql.icu.caseMappings.enabled=false``, see
+    get_spark) is a runtime SQL conf, so it is set here too; it spares
+    the session's first lower/upper/initcap ICU's title-case table
+    only if no case function has run in that JVM yet.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.icu.caseMappings.enabled", "false")
     # Worker callables are cloudpickled by value anyway (see
     # operators/multimodal.py); this is belt-and-braces for
     # user-registered UDFs.

@@ -125,6 +125,38 @@ def test_contended_threads_never_lose_updates(shared_warehouse):
     assert v == 16
 
 
+def test_waiting_writer_is_not_starved(shared_warehouse):
+    """Three threads of one engine run UPDATE back to back, each
+    taking the lock again right after releasing it. A second engine's
+    UPDATE waits in the kernel and is woken on the next release, so it
+    completes every time instead of timing out with 1205."""
+    e1, e2 = shared_warehouse
+    stop = threading.Event()
+    errs = []
+
+    def hammer():
+        try:
+            while not stop.is_set():
+                e1.sql("UPDATE t SET v = v + 1 WHERE id = 1")
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    threads = [threading.Thread(target=hammer) for _ in range(3)]
+    for t in threads:
+        t.start()
+    try:
+        time.sleep(1.0)
+        for trial in range(1, 6):
+            e2.sql(f"UPDATE t SET v = {trial} WHERE id = 2")
+    finally:
+        stop.set()
+        for t in threads:
+            t.join()
+    assert not errs, errs
+    (v,) = e1.sql("SELECT v FROM t WHERE id = 2").rows()[0]
+    assert v == 5
+
+
 def test_lock_contention_times_out_with_1205(shared_warehouse, monkeypatch):
     e1, e2 = shared_warehouse
     monkeypatch.setattr(Engine, "_LOCK_TIMEOUT_S", 0.3)

@@ -424,6 +424,119 @@ def test_kmeans_assign_helpers(spark):
     assert all(abs(a - b) < 1e-12 for a, b in zip(got0, want0)), got0
 
 
+def _cosine_per_pair(a, b):
+    """Cosine as every pair once computed it: both norms inside."""
+    from sparrow_spark.operators.similarity import dot, l2_norm
+
+    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def test_norm_once_cosine_is_bit_identical(spark, sf_dir):
+    """Norms computed once per row before the join give exactly the
+    cosine that recomputing both norms per pair gives."""
+    from sparrow_spark.operators.similarity import _vecs, cosine, l2_norm
+
+    vecs = _vecs(spark, sf_dir).select(
+        "vec_id", "v", l2_norm(F.col("v")).alias("n")
+    )
+    q = vecs.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("n").alias("qn")
+    )
+    rows = (
+        vecs.crossJoin(q)
+        .select(
+            "vec_id",
+            "qid",
+            cosine(F.col("qv"), F.col("v"), F.col("qn"), F.col("n")).alias("once"),
+            _cosine_per_pair(F.col("qv"), F.col("v")).alias("per_pair"),
+        )
+        .collect()
+    )
+    assert len(rows) == 10 * vecs.count()
+    assert all(r.once == r.per_pair for r in rows)
+
+
+def test_assign_to_centroids_rows_unchanged(spark, sf_dir):
+    """assign_to_centroids with precomputed norms returns the same
+    (vec_id, centroid_id, cos) rows, bit for bit, as the fold that
+    recomputed both norms for every (vector, centroid) pair."""
+    from sparrow_spark.operators.similarity import (
+        _vecs,
+        assign_to_centroids,
+        collapse_centroids,
+    )
+
+    vecs = _vecs(spark, sf_dir)
+    cents = vecs.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
+    )
+    seeds = cents.select(F.struct("centroid_id", "cv").alias("s")).agg(
+        F.array_sort(F.collect_list("s")).alias("seeds")
+    )
+    scored = F.transform(
+        F.col("seeds"),
+        lambda s: F.struct(
+            s["centroid_id"].alias("centroid_id"),
+            _cosine_per_pair(F.col("v"), s["cv"]).alias("cos"),
+        ),
+    )
+    best = F.aggregate(
+        scored,
+        F.struct(
+            F.lit(-1).cast("bigint").alias("centroid_id"),
+            F.lit(float("-inf")).alias("cos"),
+        ),
+        lambda acc, s: F.when(s["cos"] > acc["cos"], s).otherwise(acc),
+    )
+    before = vecs.crossJoin(seeds).select(
+        "vec_id", best["centroid_id"].alias("centroid_id"), best["cos"].alias("cos")
+    )
+    after = assign_to_centroids(vecs, collapse_centroids(cents)).select(
+        "vec_id", "centroid_id", "cos"
+    )
+    want = sorted(tuple(r) for r in before.collect())
+    assert len(want) == vecs.count()
+    assert sorted(tuple(r) for r in after.collect()) == want
+
+
+# Queries whose pair loop takes precomputed norms. In the executed
+# plan no cosine may divide by a norm it computes itself, `/ (SQRT(`:
+# that is the per-pair form, and what the optimizer would leave if it
+# inlined a per-row norm back into the per-pair projection or join
+# condition.
+NORM_ONCE_QUERIES = [
+    "q_similarity_topk",
+    "q_similarity_ivf",
+    "q_similarity_lsh",
+    "q_embedding_neardup",
+    "q_ann_recall",
+    "q_kmeans_assign",
+    "q_kmeans_iterate",
+    "q_semantic_dedup",
+    "q_pq_codes",
+    "q_kmeanspp_init",
+    "q_hard_negatives",
+    "q_margin_mining",
+    "q_knn_classifier_eval",
+    "q_mutual_knn",
+    "q_silhouette_centroid",
+    "q_nn_descent",
+    "q_colbert_maxsim",
+    "q_rbo_ranking_overlap",
+]
+
+
+@pytest.mark.parametrize("name", NORM_ONCE_QUERIES)
+def test_pair_cosine_reads_precomputed_norms(spark, sf_dir, name):
+    from sparrow_spark import registry
+
+    registry.load_all()
+    df = registry.RAW_QUERIES[name](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "zip_with" in plan, plan
+    assert "/ (SQRT(" not in plan, plan
+
+
 def test_ivfpq_adc_score_is_reconstruction_cosine(spark, sf_dir):
     """ADC's defining property: the LUT-composed score must equal the
     exact cosine between the query and the PQ RECONSTRUCTION (the two

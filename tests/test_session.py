@@ -31,6 +31,47 @@ def test_execution_page_is_one_mib(spark):
     assert env.memoryManager().pageSizeBytes() == 2**20
 
 
+def test_case_mapping_skips_icu(spark):
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+
+
+# (input, lower, upper, initcap) as Spark's ICU case mapping returns
+# them; the JDK mapping must agree on each.
+CASE_MAPPED = [
+    ("Hello World 123", "hello world 123", "HELLO WORLD 123", "Hello World 123"),
+    (
+        "àéîõü ÀÉÎÕÜ ñÑ çÇ ÿ",
+        "àéîõü àéîõü ññ çç ÿ",
+        "ÀÉÎÕÜ ÀÉÎÕÜ ÑÑ ÇÇ Ÿ",
+        "Àéîõü Àéîõü Ññ Çç Ÿ",
+    ),
+    ("Straße", "straße", "STRASSE", "Straße"),
+    ("ΟΔΟΣ", "οδος", "ΟΔΟΣ", "Οδος"),
+    ("ǅemal", "ǆemal", "ǄEMAL", "ǅemal"),
+]
+
+
+def test_case_functions_match_icu_mapping(spark):
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(r[0],) for r in CASE_MAPPED], "s string")
+    got = df.select(
+        "s", F.lower("s"), F.upper("s"), F.initcap("s")
+    ).collect()
+    assert sorted(tuple(r) for r in got) == sorted(CASE_MAPPED)
+
+
+def test_tune_for_session_skips_icu(spark):
+    from sparrow_spark.session import tune_for_session
+
+    spark.conf.set("spark.sql.icu.caseMappings.enabled", "true")
+    try:
+        tune_for_session(spark)
+        assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    finally:
+        spark.conf.set("spark.sql.icu.caseMappings.enabled", "false")
+
+
 def test_one_task_state_spans_many_pages(spark):
     """A groupBy and an orderBy whose state, in one task each, is many
     1 MiB pages: 220k distinct string keys."""

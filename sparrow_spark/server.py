@@ -8,8 +8,15 @@ This is the Spark-native counterpart: a threaded socket server where
 each accepted connection gets its own engine Session (per-connection
 schema/variables, reference src/core/session_context.rs), commands
 execute under a global lock (the reference serializes on its
-GlobalContext mutex the same way), and results stream back as
-protocol-41 text result sets.
+GlobalContext mutex the same way). A result set is fetched
+columnar, as Arrow (`DataFrame.toArrow()`, under the engine lock),
+like the reference's result sets built from DataFusion `RecordBatch`es
+(src/mysql/). It is then encoded column by column into protocol-41
+rows (text for COM_QUERY, binary for COM_STMT_EXECUTE) and sent in one
+buffered write. The only schemas that `toArrow` rejects (year-month
+and calendar intervals, structs with duplicate field names) are
+fetched with `collect()` and transposed into columns for the same
+encoder.
 
 Command coverage (command ids as in handle.rs:174-241):
   0x01 COM_QUIT, 0x02 COM_INIT_DB, 0x03 COM_QUERY, 0x04 COM_FIELD_LIST,
@@ -29,6 +36,14 @@ import socketserver
 import struct
 import threading
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.errors import PySparkTypeError, UnsupportedOperationException
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructField, StructType
+
 from sparrow_spark.engine import Engine, Result, Session, SparrowError
 
 # MYSQL_TYPE_* codes (public protocol constants)
@@ -44,6 +59,7 @@ CLIENT_SECURE_CONNECTION = 0x8000
 CLIENT_PLUGIN_AUTH = 0x00080000
 CLIENT_CONNECT_WITH_DB = 0x0008
 SERVER_STATUS_AUTOCOMMIT = 0x0002
+MAX_PACKET = 0xFFFFFF
 
 _SPARK_TO_MYSQL = {
     "tinyint": T_TINY,
@@ -56,6 +72,17 @@ _SPARK_TO_MYSQL = {
     "timestamp": T_DATETIME,
     "boolean": T_TINY,
 }
+# Binary-protocol types sent as fixed-width little-endian values.
+_PACKED = {
+    T_TINY: "<i1",
+    T_SHORT: "<i2",
+    T_LONG: "<i4",
+    T_LONGLONG: "<i8",
+    T_FLOAT: "<f4",
+    T_DOUBLE: "<f8",
+}
+_EOF = b"\xfe" + struct.pack("<HH", 0, SERVER_STATUS_AUTOCOMMIT)
+_EMPTY = pa.scalar(b"", pa.large_binary())
 
 
 def _change_user_schema(payload: bytes) -> str:
@@ -117,6 +144,38 @@ def _read_lenenc(buf: bytes, pos: int) -> tuple[int, int]:
     return struct.unpack_from("<Q", buf, pos + 1)[0], pos + 9
 
 
+def _frame(payload: bytes, seq: int) -> tuple[bytes, int]:
+    """`payload` framed as packets (3-byte length + 1-byte sequence id)
+    from sequence id `seq`, and the next id. A payload of MAX_PACKET
+    bytes or more splits at MAX_PACKET; one that ends a full packet is
+    followed by an empty packet."""
+    out = []
+    while True:
+        chunk, payload = payload[:MAX_PACKET], payload[MAX_PACKET:]
+        out += [len(chunk).to_bytes(3, "little"), bytes([seq & 0xFF]), chunk]
+        seq += 1
+        if len(chunk) < MAX_PACKET:
+            return b"".join(out), seq
+
+
+def _column_def(name: str, mysql_type: int) -> bytes:
+    return (
+        _lenenc_str(b"def")  # catalog
+        + _lenenc_str(b"")  # schema
+        + _lenenc_str(b"")  # table
+        + _lenenc_str(b"")  # org_table
+        + _lenenc_str(name.encode())
+        + _lenenc_str(name.encode())  # org_name
+        + b"\x0c"  # fixed-length fields marker
+        + struct.pack("<H", 33)  # charset utf8_general_ci
+        + struct.pack("<I", 1024)  # display length
+        + bytes([mysql_type])
+        + struct.pack("<H", 0)  # flags
+        + b"\x00"  # decimals
+        + b"\x00\x00"
+    )
+
+
 class _Conn:
     """One client connection: packet framing + command dispatch."""
 
@@ -137,13 +196,14 @@ class _Conn:
 
     # -- packet framing (3-byte length + 1-byte sequence id) -----------
     def _recv_exact(self, n: int) -> bytes | None:
-        data = b""
-        while len(data) < n:
-            chunk = self.sock.recv(n - len(data))
-            if not chunk:
+        data = bytearray(n)
+        view, got = memoryview(data), 0
+        while got < n:
+            k = self.sock.recv_into(view[got:])
+            if not k:
                 return None
-            data += chunk
-        return data
+            got += k
+        return bytes(data)
 
     def read_packet(self) -> bytes | None:
         head = self._recv_exact(4)
@@ -155,15 +215,8 @@ class _Conn:
         return payload
 
     def write_packet(self, payload: bytes) -> None:
-        # Large payloads split at 0xffffff (max packet length).
-        while True:
-            chunk, payload = payload[:0xFFFFFF], payload[0xFFFFFF:]
-            self.sock.sendall(
-                len(chunk).to_bytes(3, "little") + bytes([self.seq & 0xFF]) + chunk
-            )
-            self.seq += 1
-            if len(chunk) < 0xFFFFFF:
-                break
+        data, self.seq = _frame(payload, self.seq)
+        self.sock.sendall(data)
 
     # -- protocol messages ---------------------------------------------
     def send_ok(self, affected: int = 0, info: str = "") -> None:
@@ -185,75 +238,39 @@ class _Conn:
         )
 
     def send_eof(self) -> None:
-        self.write_packet(b"\xfe" + struct.pack("<HH", 0, SERVER_STATUS_AUTOCOMMIT))
+        self.write_packet(_EOF)
 
     def send_column_def(self, name: str, mysql_type: int) -> None:
-        self.write_packet(
-            _lenenc_str(b"def")  # catalog
-            + _lenenc_str(b"")  # schema
-            + _lenenc_str(b"")  # table
-            + _lenenc_str(b"")  # org_table
-            + _lenenc_str(name.encode())
-            + _lenenc_str(name.encode())  # org_name
-            + b"\x0c"  # fixed-length fields marker
-            + struct.pack("<H", 33)  # charset utf8_general_ci
-            + struct.pack("<I", 1024)  # display length
-            + bytes([mysql_type])
-            + struct.pack("<H", 0)  # flags
-            + b"\x00"  # decimals
-            + b"\x00\x00"
-        )
+        self.write_packet(_column_def(name, mysql_type))
 
     # -- result delivery -----------------------------------------------
     @staticmethod
     def _materialize(result: Result):
-        """Collect a resultset's rows (called under the engine lock so
-        execution cannot race another connection's in-place rewrite)."""
+        """Fetch a resultset's rows (called under the engine lock so
+        execution cannot race another connection's in-place rewrite):
+        an Arrow table, or collect()'s rows for the schemas that have no
+        Arrow type."""
         if result.kind != "resultset" or result.df is None:
             return None
-        return result.df.schema, result.df.collect()
+        schema = result.df.schema
+        if _has_arrow_type(schema):
+            return schema, result.df.toArrow()
+        return schema, result.df.collect()
 
     def send_resultset(
         self, result: Result, materialized, binary: bool = False
     ) -> None:
         """Send `materialized` (the (schema, rows) that _materialize
-        collected under the engine lock), or an OK packet when the
-        statement produced no resultset (materialized is None)."""
+        fetched under the engine lock), or an OK packet when the
+        statement produced no resultset (materialized is None). The
+        whole result set is encoded before its first byte is sent, so
+        an encoding error leaves only the ERR packet on the wire."""
         if materialized is None:
             self.send_ok(result.affected_rows)
             return
-        schema, rows = materialized
-        self.write_packet(_lenenc_int(len(schema.fields)))
-        mysql_types = [
-            _SPARK_TO_MYSQL.get(f.dataType.simpleString(), T_VAR_STRING)
-            for f in schema.fields
-        ]
-        for f, mt in zip(schema.fields, mysql_types):
-            self.send_column_def(f.name, mt)
-        self.send_eof()
-        ncols = len(schema.fields)
-        for row in rows:
-            vals = [row[i] for i in range(ncols)]
-            if binary:
-                # ProtocolBinary::Resultset row: 0x00 header, NULL
-                # bitmap (offset 2), then values encoded per the
-                # DECLARED column type (mysql_util.rs:41-130 family).
-                bitmap = bytearray((ncols + 7 + 2) // 8)
-                body = b""
-                for i, v in enumerate(vals):
-                    if v is None:
-                        bitmap[(i + 2) // 8] |= 1 << ((i + 2) % 8)
-                    else:
-                        body += _binary_value(v, mysql_types[i])
-                self.write_packet(b"\x00" + bytes(bitmap) + body)
-            else:
-                self.write_packet(
-                    b"".join(
-                        b"\xfb" if v is None else _lenenc_str(_text(v))
-                        for v in vals
-                    )
-                )
-        self.send_eof()
+        data, seq = _encode_resultset(*materialized, binary, self.seq)
+        self.sock.sendall(data)
+        self.seq = seq
 
     # -- handshake (reference handle.rs:87-145: credentials accepted
     # unconditionally, auth result is always OK) -----------------------
@@ -559,6 +576,183 @@ def _binary_value(v, mysql_type: int) -> bytes:
     return _lenenc_str(_text(v))
 
 
+# -- columnar result-set encoding ------------------------------------------
+# A column encodes to one large_binary array of cells, null where the
+# value is NULL: a text row writes 0xfb there, a binary row sets the
+# column's bit in its NULL bitmap and writes nothing.
+
+
+def _has_arrow_type(schema: StructType) -> bool:
+    try:
+        to_arrow_schema(schema, error_on_duplicated_field_names_in_struct=True)
+    except (PySparkTypeError, UnsupportedOperationException):
+        return False
+    return True
+
+
+def _binary_array(data: np.ndarray, widths: np.ndarray, valid=None) -> pa.Array:
+    """A large_binary array whose i-th value is the next widths[i]
+    bytes of `data`; null where `valid` is False."""
+    offsets = np.zeros(len(widths) + 1, np.int64)
+    np.cumsum(widths, out=offsets[1:])
+    validity = None if valid is None else pa.array(valid).buffers()[1]
+    return pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(),
+        len(widths),
+        [validity, pa.py_buffer(offsets), pa.py_buffer(np.ascontiguousarray(data))],
+    )
+
+
+def _lenenc_cells(col: pa.Array) -> pa.Array:
+    """Length-encoded cells of a string or binary column."""
+    col = col.cast(pa.large_binary())
+    length = pc.binary_length(col).fill_null(0).to_numpy().astype("<i8")
+    # 1 byte below 251, else 0xfc/0xfd/0xfe and 2/3/8 bytes
+    big, over16, over24 = length >= 251, length >= 1 << 16, length >= 1 << 24
+    width = np.where(big, 3 + over16 + 5 * over24, 1)
+    prefix = np.empty((len(col), 9), np.uint8)
+    prefix[:, 0] = np.where(big, 0xFC + over16 + over24, length)
+    prefix[:, 1:] = length.view(np.uint8).reshape(-1, 8)
+    prefix = _binary_array(prefix[np.arange(9) < width[:, None]], width)
+    return pc.binary_join_element_wise(prefix, col, _EMPTY)
+
+
+def _packed_cells(col: pa.Array, dtype: str) -> pa.Array:
+    """Fixed-width little-endian cells of a numeric or boolean column."""
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    zero = False if pa.types.is_boolean(col.type) else 0
+    values = col.fill_null(zero).to_numpy(zero_copy_only=False).astype(dtype)
+    raw = values.view(np.uint8).reshape(len(col), values.itemsize)
+    return _binary_array(raw[valid], np.where(valid, values.itemsize, 0), valid)
+
+
+def _value_cells(values, mysql_type: int, binary: bool) -> pa.Array:
+    """Cells of Python values (collect()'s types), one value at a time."""
+    if binary:
+        cells = [None if v is None else _binary_value(v, mysql_type) for v in values]
+    else:
+        cells = [None if v is None else _lenenc_str(_text(v)) for v in values]
+    return pa.array(cells, pa.large_binary())
+
+
+def _python_values(col: pa.Array, dtype: DataType) -> list:
+    """The values collect() returns for an Arrow column of `dtype`
+    (structs as Rows, timestamps as naive local datetimes)."""
+    table = pa.table([col], names=["c"])
+    schema = StructType([StructField("c", dtype)])
+    rows = ArrowTableToRowsConversion.convert(table, schema, return_as_tuples=True)
+    return [r[0] for r in rows]
+
+
+def _cells(col, dtype: DataType, mysql_type: int, binary: bool) -> pa.Array:
+    if isinstance(col, list):  # collect() rows, transposed
+        return _value_cells(col, mysql_type, binary)
+    t = col.type
+    if binary and mysql_type in _PACKED:
+        return _packed_cells(col, _PACKED[mysql_type])
+    if pa.types.is_boolean(t):
+        return _lenenc_cells(pc.if_else(col, b"1", b"0"))
+    if pa.types.is_floating(t):
+        # repr, as collect()'s float: Arrow's cast prints 1.0 as "1"
+        text = list(map(repr, col.fill_null(0).to_numpy(zero_copy_only=False).tolist()))
+        mask = col.is_null().to_numpy(zero_copy_only=False)
+        return _lenenc_cells(pa.array(text, pa.large_string(), mask=mask))
+    if (
+        pa.types.is_integer(t)
+        or (pa.types.is_date32(t) and not binary)
+        # Decimal's str turns exponential only below 1e-6
+        or (pa.types.is_decimal(t) and t.scale <= 6)
+    ):
+        return _lenenc_cells(col.cast(pa.large_string()))
+    if t in (pa.string(), pa.large_string(), pa.binary(), pa.large_binary()):
+        return _lenenc_cells(col)
+    return _value_cells(_python_values(col, dtype), mysql_type, binary)
+
+
+def _row_payloads(cells: list, binary: bool, nrows: int) -> pa.Array:
+    if binary:
+        # ProtocolBinary::Resultset row: 0x00 header, NULL bitmap
+        # (offset 2), then the non-NULL values (mysql_util.rs:41-130).
+        nbytes = (len(cells) + 7 + 2) // 8
+        head = np.zeros((nrows, 1 + nbytes), np.uint8)
+        for i, c in enumerate(cells):
+            null = c.is_null().to_numpy(zero_copy_only=False).astype(np.uint8)
+            head[:, 1 + (i + 2) // 8] |= null << ((i + 2) % 8)
+        cells = [_binary_array(head.ravel(), np.full(nrows, 1 + nbytes))] + cells
+    if not cells:
+        return _binary_array(np.empty(0, np.uint8), np.zeros(nrows, np.int64))
+    return pc.binary_join_element_wise(
+        *cells, _EMPTY, null_handling="replace",
+        null_replacement=b"" if binary else b"\xfb",
+    )
+
+
+def _frame_rows(payloads: pa.Array, seq: int) -> tuple[bytes, int]:
+    """Every row payload framed as in _frame, as one buffer."""
+    n = len(payloads)
+    if n == 0:
+        return b"", seq
+    length = pc.binary_length(payloads).to_numpy().astype("<i8")
+    packets = length // MAX_PACKET + 1
+    first = seq + np.cumsum(packets) - packets  # each row's first sequence id
+    head = np.empty((n, 4), np.uint8)
+    head[:, :3] = length.view(np.uint8).reshape(n, 8)[:, :3]
+    head[:, 3] = first & 0xFF
+    split = length >= MAX_PACKET
+    if split.any():
+        # rare (a row of 16 MiB or more): frame those rows one at a time
+        # in place of their payloads, with no head of their own
+        framed = [
+            _frame(payloads[int(i)].as_py(), int(first[i]))[0]
+            for i in np.flatnonzero(split)
+        ]
+        payloads = pc.replace_with_mask(
+            payloads, pa.array(split), pa.array(framed, pa.large_binary())
+        )
+        head = head[~split]
+    heads = _binary_array(head.ravel(), np.where(split, 0, 4))
+    framed_rows = pc.binary_join_element_wise(heads, payloads, _EMPTY)
+    offsets = np.frombuffer(framed_rows.buffers()[1], np.int64)
+    start = framed_rows.offset
+    return (
+        framed_rows.buffers()[2][offsets[start] : offsets[start + n]],
+        seq + int(packets.sum()),
+    )
+
+
+def _columns(data, ncols: int) -> list:
+    """An Arrow table's columns as arrays, or collect()'s rows as one
+    list of values per column."""
+    if isinstance(data, pa.Table):
+        return [c.combine_chunks() for c in data.columns]
+    return [list(c) for c in zip(*data)] if data else [[] for _ in range(ncols)]
+
+
+def _encode_resultset(
+    schema: StructType, data, binary: bool, seq: int
+) -> tuple[bytes, int]:
+    """A whole result set as wire bytes (column count, column
+    definitions, EOF, rows, EOF) from sequence id `seq`, and the next
+    id. `data` is what _materialize fetched."""
+    fields = schema.fields
+    mysql_types = [
+        _SPARK_TO_MYSQL.get(f.dataType.simpleString(), T_VAR_STRING) for f in fields
+    ]
+    head = [_lenenc_int(len(fields))]
+    head += [_column_def(f.name, mt) for f, mt in zip(fields, mysql_types)]
+    out = []
+    for payload in head + [_EOF]:
+        framed, seq = _frame(payload, seq)
+        out.append(framed)
+    cells = [
+        _cells(col, f.dataType, mt, binary)
+        for col, f, mt in zip(_columns(data, len(fields)), fields, mysql_types)
+    ]
+    rows, seq = _frame_rows(_row_payloads(cells, binary, len(data)), seq)
+    eof, seq = _frame(_EOF, seq)
+    return b"".join(out + [rows, eof]), seq
+
+
 class SparrowServer:
     """Threaded TCP server: one engine, one Session per connection."""
 
@@ -569,9 +763,10 @@ class SparrowServer:
 
         class Handler(socketserver.BaseRequestHandler):
             def handle(self) -> None:
-                # send_resultset makes one sendall per packet; with
-                # Nagle on, each response after the first packet waits
-                # for the client's delayed ACK (~40 ms per statement).
+                # Some responses (COM_STMT_PREPARE, COM_FIELD_LIST) are
+                # one sendall per packet; with Nagle on, each packet
+                # after the first waits for the client's delayed ACK
+                # (~40 ms per statement).
                 self.request.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
                 conn = _Conn(self.request, outer.engine.new_session(), outer.lock)
                 try:

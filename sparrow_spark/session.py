@@ -304,6 +304,11 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # The heap is fixed, not sized from the host, and a busy driver
+        # grows to ~9 GB resident: two driver processes at once on a
+        # 16 GB host got one OOM-killed (a tier-1 pytest run beside
+        # bench.py). Overlapping runs on such a host need
+        # SPARK_DRIVER_MEMORY=4g each.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")

@@ -24,12 +24,13 @@ class MiniClient:
 
     # framing ----------------------------------------------------------
     def _recv_exact(self, n: int) -> bytes:
-        data = b""
-        while len(data) < n:
-            chunk = self.sock.recv(n - len(data))
-            assert chunk, "server closed connection"
-            data += chunk
-        return data
+        data = bytearray(n)
+        view, got = memoryview(data), 0
+        while got < n:
+            k = self.sock.recv_into(view[got:])
+            assert k, "server closed connection"
+            got += k
+        return bytes(data)
 
     def read_packet(self) -> bytes:
         head = self._recv_exact(4)
@@ -46,6 +47,31 @@ class MiniClient:
     def command(self, payload: bytes) -> None:
         self.seq = 0
         self.write_packet(payload)
+
+    def _read_raw(self) -> tuple[bytes, bytes]:
+        """One logical packet: (its raw bytes as framed on the wire, the
+        payload with any 0xffffff-split continuations joined)."""
+        raw, payload = [], []
+        while True:
+            head = self._recv_exact(4)
+            body = self._recv_exact(int.from_bytes(head[:3], "little"))
+            raw += [head, body]
+            payload.append(body)
+            if len(body) < 0xFFFFFF:
+                return b"".join(raw), b"".join(payload)
+
+    def raw_response(self) -> bytes:
+        """Every byte of one response (OK, ERR or a whole result set)."""
+        raw, first = self._read_raw()
+        if first[0] in (0x00, 0xFF):
+            return raw
+        ncols, _ = _read_lenenc(first, 0)
+        parts = [raw] + [self._read_raw()[0] for _ in range(ncols + 1)]
+        while True:
+            raw, payload = self._read_raw()
+            parts.append(raw)
+            if payload[:1] == b"\xfe" and len(payload) < 9:
+                return b"".join(parts)
 
     # handshake --------------------------------------------------------
     def _handshake(self, db: str | None) -> None:
@@ -492,8 +518,8 @@ def test_wire_change_user_switches_schema(server):
 
 
 def test_accepted_socket_disables_nagle(server, monkeypatch):
-    # A result set goes out as one sendall per packet; with Nagle on,
-    # the client's delayed ACK holds each response back ~40 ms.
+    # Some responses go out as one sendall per packet; with Nagle on,
+    # the client's delayed ACK holds each such response back ~40 ms.
     from sparrow_spark import server as server_mod
 
     seen = []
@@ -508,3 +534,245 @@ def test_accepted_socket_disables_nagle(server, monkeypatch):
     assert c.ping() == ("ok", 0)
     c.quit()
     assert seen and all(seen)
+
+
+# -- wire bytes of every column type ------------------------------------
+# Each case runs as COM_QUERY (text rows) and as a zero-parameter
+# COM_STMT_EXECUTE (binary rows). The sha1 of every byte of the response,
+# framing included, was recorded from the row-at-a-time encoder that
+# preceded the columnar one (collect() rows, one value at a time), in the
+# America/New_York zone so that TIMESTAMP text depends on the local zone.
+
+_ALL_TYPES = [  # name, SQL type, one literal per row (a fifth row is NULL)
+    ("ti", "TINYINT", ["-5", "127", "0", "-128"]),
+    ("si", "SMALLINT", ["300", "-32768", "0", "32767"]),
+    ("i", "INT", ["-70000", "2147483647", "0", "-2147483648"]),
+    ("bi", "BIGINT", ["1099511627776", "-9223372036854775808", "0", "9223372036854775807"]),
+    ("fl", "FLOAT", ["0.1", "-2.5", "3.4e38", "1e-30"]),
+    ("db", "DOUBLE", ["1.0", "100.0", "2.5e-5", "1e15"]),
+    ("db2", "DOUBLE", ["-0.0", "'NaN'", "'Infinity'", "0.1 + 0.2"]),
+    ("dt", "DATE", ["DATE '2020-01-05'", "DATE '1969-12-31'", "DATE '0005-01-01'", "DATE '9999-12-31'"]),
+    ("ts", "TIMESTAMP", [
+        "TIMESTAMP '2020-03-08 06:59:59.123456'", "TIMESTAMP '1999-12-31 23:59:59'",
+        "TIMESTAMP '1900-01-01 00:00:00'", "TIMESTAMP '2021-11-07 05:30:00.5'",
+    ]),
+    ("bo", "BOOLEAN", ["true", "false", "true", "false"]),
+    ("st", "STRING", ["'héllo'", "''", "'a''b'", "'日本'"]),
+    ("d2", "DECIMAL(10,2)", ["1.5", "-0.01", "0", "99999999.99"]),
+    ("d10", "DECIMAL(20,10)", ["0.0000001234", "0", "1.5", "-1234567890.0123456789"]),
+    ("bin", "BINARY", ["X'00FF'", "X''", "X'61'", "X'FFFE'"]),
+    ("ntz", "TIMESTAMP_NTZ", [
+        "TIMESTAMP_NTZ '2020-01-01 00:00:00'", "TIMESTAMP_NTZ '1900-01-01 00:00:00.5'",
+        "TIMESTAMP_NTZ '2021-11-07 01:30:00'", "TIMESTAMP_NTZ '9999-12-31 23:59:59.999999'",
+    ]),
+    ("arr", "ARRAY<INT>", ["array(1, 2)", "array()", "array(NULL, 3)", "array(7)"]),
+    ("stc", "STRUCT<x:INT,y:STRING>", [
+        "named_struct('x', 1, 'y', 'z')", "named_struct('x', NULL, 'y', '')",
+        "named_struct('x', -1, 'y', NULL)", "named_struct('x', 0, 'y', 'q')",
+    ]),
+    ("mp", "MAP<STRING,DOUBLE>", ["map('k', 1.5)", "map()", "map('a', NULL)", "map('x', 0.1, 'y', 2.0)"]),
+    ("nest", "ARRAY<STRUCT<b:BINARY,t:TIMESTAMP,d:DECIMAL(5,1)>>", [
+        "array(named_struct('b', X'01', 't', TIMESTAMP '2020-01-01 00:00:00', 'd', 1.5))",
+        "array()", "array(NULL)", "NULL",
+    ]),
+    ("dti", "INTERVAL DAY TO SECOND", [
+        "INTERVAL '1 02:03:04.5' DAY TO SECOND", "INTERVAL '0 00:00:00' DAY TO SECOND",
+        "INTERVAL '-3 00:00:01' DAY TO SECOND", "INTERVAL '100 23:59:59.999999' DAY TO SECOND",
+    ]),
+    ("nul", "VOID", ["NULL", "NULL", "NULL", "NULL"]),
+]
+
+
+def _all_types_sql() -> str:
+    def cell(name, typ, lit):
+        if typ == "VOID":
+            return f"NULL AS {name}"
+        return f"CAST({lit} AS {typ}) AS {name}"
+
+    rows = [
+        f"SELECT {k + 1} AS k, "
+        + ", ".join(cell(n, t, lits[k]) for n, t, lits in _ALL_TYPES)
+        for k in range(4)
+    ]
+    rows.append(
+        "SELECT 5 AS k, " + ", ".join(cell(n, t, "NULL") for n, t, _ in _ALL_TYPES)
+    )
+    return " UNION ALL ".join(rows) + " ORDER BY k"
+
+
+_ENCODING_CASES = {
+    "all_types": _all_types_sql(),
+    "empty": f"SELECT * FROM ({_all_types_sql()}) t WHERE k < 0",
+    # a struct with duplicate field names has no arrow type: collect() path
+    "dup_struct": (
+        "SELECT named_struct('a', 1, 'a', 'x') AS dup, 1.5E0 AS d, DATE '2020-02-02' AS dt"
+        " UNION ALL SELECT NULL, NULL, NULL"
+    ),
+    "wide_cells": (
+        "SELECT repeat('a', 250) AS c250, repeat('b', 251) AS c251,"
+        " repeat('c', 65535) AS c65535, repeat('d', 65536) AS c65536,"
+        " repeat('é', 40000) AS u"
+    ),
+    # more than 256 rows: the sequence id wraps
+    "many_rows": (
+        "SELECT k, k * 1.5E0 AS d, CAST(k AS STRING) AS s, k % 3 = 0 AS b,"
+        " CASE WHEN k % 7 = 0 THEN NULL ELSE k END AS n"
+        " FROM (SELECT explode(sequence(1, 700)) AS k) t ORDER BY k"
+    ),
+    # row 2's text payload is exactly 0xffffff bytes (2 + 4 + 16777209):
+    # it is sent as one full packet and an empty one
+    "split_edge": (
+        "SELECT k, CASE WHEN k = 2 THEN repeat('x', 16777209) ELSE 'c' END AS s"
+        " FROM (SELECT explode(sequence(1, 3)) AS k) t ORDER BY k"
+    ),
+    # a 2^24-byte cell takes the 9-byte length prefix
+    "split_9": "SELECT 1 AS k, repeat('y', 16777216) AS s",
+}
+
+_ENCODING_SHA1 = {
+    "all_types/text": "0d2b9d7982f0d85b7279078e49e13aef27da650f",
+    "all_types/binary": "6406908b5af915719b952f288ec416d4c3abdb2b",
+    "empty/text": "66e3ed56afd8f05266d56bd56e7234dd224d88b4",
+    "empty/binary": "66e3ed56afd8f05266d56bd56e7234dd224d88b4",
+    "dup_struct/text": "f9c62cc4dd9c661a174c20dd3987f6bc019f0936",
+    "dup_struct/binary": "089a1f2ca5df61a7faf9735f17f9d870dc0c8bcb",
+    "wide_cells/text": "9a0f07fbdfdd499fdfa11afbe6a233ff2f315236",
+    "wide_cells/binary": "af193c55cb3437600d4b7864526bfbea759a295a",
+    "many_rows/text": "295b5f8ad957c5b51e1f883c7244b21b6f22b181",
+    "many_rows/binary": "93bf2f6d58605e047d590004ea00633b2c141d2e",
+    "split_edge/text": "a51d3f3ccb1a24fa796ac4591ebc8fa6b2a943c0",
+    "split_edge/binary": "09e139ee6b398b2684131dedfc61a95bea0475d0",
+    "split_9/text": "ad698b0d767084f50984ab7b44e0645514099b29",
+    "split_9/binary": "6ebb7e7864d994b3f400911c54b96e22afeb43b8",
+}
+
+
+@pytest.fixture()
+def new_york(monkeypatch):
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def _wire_digests(server) -> dict[str, str]:
+    import hashlib
+
+    c = MiniClient(server.host, server.port)
+    out = {}
+    for name, sql in _ENCODING_CASES.items():
+        c.command(b"\x03" + sql.encode())
+        out[f"{name}/text"] = hashlib.sha1(c.raw_response()).hexdigest()
+        sid, n_params = c.prepare(sql)
+        assert n_params == 0
+        c.command(b"\x17" + struct.pack("<I", sid) + b"\x00" + struct.pack("<I", 1))
+        out[f"{name}/binary"] = hashlib.sha1(c.raw_response()).hexdigest()
+    c.quit()
+    return out
+
+
+def test_wire_bytes_match_row_encoder(server, new_york):
+    assert _wire_digests(server) == _ENCODING_SHA1
+
+
+def test_wire_encoding_error_sends_one_err(server, monkeypatch):
+    # The whole result set is encoded before its first byte goes out: an
+    # encoder that raises leaves exactly one ERR packet on the wire, and
+    # the connection answers its next statement.
+    from sparrow_spark import server as server_mod
+
+    cells = server_mod._cells
+
+    def failing_cells(col, dtype, mysql_type, binary):
+        if dtype.simpleString() == "double":
+            raise RuntimeError("encoder broke")
+        return cells(col, dtype, mysql_type, binary)
+
+    monkeypatch.setattr(server_mod, "_cells", failing_cells)
+    c = MiniClient(server.host, server.port)
+    c.command(b"\x03SELECT 1 AS a, 2.5E0 AS b")
+    raw = c.raw_response()
+    assert raw[4] == 0xFF and b"encoder broke" in raw
+    assert int.from_bytes(raw[:3], "little") + 4 == len(raw)  # one packet
+    assert c.query("SELECT 3 AS a") == (["a"], [["3"]])
+    sid, _ = c.prepare("SELECT 4 AS a, 2.5E0 AS b")
+    assert c.execute(sid, [])[0] == "err"
+    assert c.ping() == ("ok", 0)
+    c.quit()
+
+
+def test_wire_reads_a_large_query_packet(server):
+    # A COM_QUERY of several MiB arrives in many recv calls; it is read
+    # into one preallocated buffer.
+    c = MiniClient(server.host, server.port)
+    c.query("CREATE DATABASE IF NOT EXISTS bigq")
+    c.init_db("bigq")
+    c.query("CREATE TABLE big (id INT, s CHAR, PRIMARY KEY(id))")
+    text = "0123456789abcdef" * (1 << 18)  # 4 MiB
+    assert c.query(f"INSERT INTO big VALUES (1, '{text}')") == ("ok", 1)
+    _, rows = c.query("SELECT length(s) AS n, sha1(s) AS h FROM big")
+    import hashlib
+
+    assert rows == [[str(len(text)), hashlib.sha1(text.encode()).hexdigest()]]
+    c.quit()
+
+
+def test_column_cells_equal_value_cells():
+    # The vectorized per-column cells equal the one-value-at-a-time cells
+    # (what collect()'s rows are encoded with) for every Arrow type they
+    # handle, with NULLs, at every length-prefix boundary, and for
+    # doubles and decimals whose text Arrow's own cast would change.
+    import datetime
+    import decimal
+    import random
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from sparrow_spark import server as server_mod
+
+    rnd = random.Random(7)
+
+    def with_nulls(vals):
+        return [None if rnd.random() < 0.2 else v for v in vals]
+
+    ints = [0, 1, -1, 127, -128] + [rnd.randint(-128, 127) for _ in range(40)]
+    floats = [1.0, 100.0, 2.5e-5, 1e15, 1e16, -0.0, 0.1, float("nan"),
+              float("inf"), -float("inf"), 1e-300, 123456.789]
+    floats += [rnd.uniform(-1e6, 1e6) for _ in range(40)]
+    texts = ["", "a", "héllo", "日本"] + [
+        "x" * n for n in (250, 251, 252, 65535, 65536, 70000)
+    ]
+    cases = [
+        (pa.int8(), T.ByteType(), ints),
+        (pa.int16(), T.ShortType(), [v * 200 for v in ints]),
+        (pa.int32(), T.IntegerType(), [v * 10**7 for v in ints]),
+        (pa.int64(), T.LongType(), [v * 10**16 for v in ints] + [2**63 - 1, -(2**63)]),
+        (pa.float32(), T.FloatType(), floats),
+        (pa.float64(), T.DoubleType(), floats),
+        (pa.bool_(), T.BooleanType(), [True, False] * 10),
+        (pa.date32(), T.DateType(), [
+            datetime.date(1, 1, 1), datetime.date(1969, 12, 31),
+            datetime.date(2020, 2, 29), datetime.date(9999, 12, 31),
+        ]),
+        (pa.string(), T.StringType(), texts),
+        (pa.large_string(), T.StringType(), texts),
+        (pa.binary(), T.BinaryType(), [t.encode() for t in texts] + [b"\xff\x00"]),
+    ]
+    for scale in (0, 2, 6, 7, 10):
+        precision = 20
+        cases.append((
+            pa.decimal128(precision, scale), T.DecimalType(precision, scale),
+            [decimal.Decimal(rnd.randint(-10**n, 10**n)).scaleb(-scale)
+             for n in range(0, precision - 1)] + [decimal.Decimal(0).scaleb(-scale)],
+        ))
+    for arrow_type, dtype, vals in cases:
+        col = pa.array(with_nulls(vals) + [None], arrow_type)
+        mysql_type = server_mod._SPARK_TO_MYSQL.get(dtype.simpleString(), server_mod.T_VAR_STRING)
+        for binary in (False, True):
+            got = server_mod._cells(col, dtype, mysql_type, binary)
+            want = server_mod._value_cells(col.to_pylist(), mysql_type, binary)
+            assert got.to_pylist() == want.to_pylist(), (dtype, binary)
